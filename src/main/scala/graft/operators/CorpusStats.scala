@@ -748,17 +748,17 @@ object CorpusStats {
    * `md5(key ∥ salt)` (key as tiebreak) and assign contiguous
    * positions. Different salts give independent permutations;
    * re-running one is bit-identical. The position assignment is
-   * [[graft.ops.relational.contiguousRowNumberAuto]] — a
-   * RANGE-partitioned sort plus per-partition offsets (never a
-   * single-reducer global window), switching to the keys-only counter
-   * + join-back once the payload sort would spill: the epoch shuffle
-   * carries EVERY column of the training corpus through the counter,
-   * which is exactly the spill-regime shape the narrow form wins at
-   * (BASELINE r15/r16 crossover measurements).
+   * [[graft.ops.relational.contiguousRowNumber]] — a range-bucketed
+   * sort plus per-bucket offsets (never a single-reducer global
+   * window), switching to the keys-only counter + join-back once the
+   * payload sort would spill: the epoch shuffle carries EVERY column of
+   * the training corpus through the counter, which is exactly the
+   * spill-regime shape the keys-only branch wins at (BASELINE r15/r16
+   * crossover measurements).
    */
   def epochShuffle(df: DataFrame, keyCol: String, salt: String,
                    as: String = "shuffle_pos"): DataFrame =
-    graft.ops.relational.contiguousRowNumberAuto(
+    graft.ops.relational.contiguousRowNumber(
       df.withColumn("__h", saltedHash(col(keyCol), salt)),
       Seq(col("__h"), col(keyCol)), as)
       .drop("__h")

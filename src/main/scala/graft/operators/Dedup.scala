@@ -61,12 +61,6 @@ object Dedup {
     graft.plans.Kernels.shingleHashes(toks, lit(n))
   }
 
-  /** Exploded (id, shingle) pairs — the join key for exact Jaccard. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol), n)).as("s"))
-
   /**
    * Exact n-gram Jaccard pairs with similarity ≥ threshold, via
    * prefix-filtered set-similarity join (PPJoin-style candidate

@@ -26,22 +26,34 @@ import org.apache.spark.storage.StorageLevel
  * independent queries (bench, verify) call `spark.catalog.clearCache()`
  * between queries; long-lived sessions (a pipeline runner looping over
  * facts) call [[materialize.releaseAll]] once each result is written.
- * Every pin created here is tracked (weakly — a dropped DataFrame does
- * not outlive its references) so neither path leaks CacheManager
- * entries across repeated operator calls. Operators whose output is
+ * Every pin created here is tracked until it is released, so neither
+ * path leaks CacheManager entries across repeated operator calls.
+ * Operators whose output is
  * itself pinned release their intermediates with [[materialize.release]]
  * before returning (e.g. `Dedup.duplicateClusters` frees the edge
  * list once the final label table is pinned).
  */
 object materialize {
-  // weak keys: tracking must not keep otherwise-dropped plans alive
+  // strong references: the CacheManager keeps a pin's blocks alive after
+  // the caller drops the DataFrame (operators return plans built ON the
+  // pin, not the pin itself), so a weakly-held pin could be collected
+  // while its cache entry lives on, and releaseAll would never free it.
+  // Pins whose entry is already gone (clearCache, a plan-equal
+  // unpersist) are pruned each time the set doubles.
   private val pins = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[DataFrame, java.lang.Boolean]())
+    new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
+  private var pruneAt = 64
 
   def apply(df: DataFrame): DataFrame = {
     val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
     pinned.count()
-    pins.synchronized { pins.add(pinned) }
+    pins.synchronized {
+      pins.add(pinned)
+      if (pins.size >= pruneAt) {
+        pins.removeIf(_.storageLevel == StorageLevel.NONE)
+        pruneAt = math.max(64, 2 * pins.size)
+      }
+    }
     pinned
   }
 

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /**
@@ -128,147 +128,55 @@ object relational {
    * single-reducer sort (`TotalHutang/run.js:205-217` emits a running
    * insert counter; `row_number().over(Window.orderBy(...))` reproduces
    * it but moves every row to one reducer — fine for a nightly delta,
-   * fatal for a backfill).
+   * fatal for a backfill). Bit-identical to that window when `order` is
+   * a unique total order (required; ties may be numbered either way
+   * otherwise).
    *
-   * Shape: range-repartition on the ordering key (each partition then
-   * holds a contiguous, sorted key range), number rows inside each
-   * partition, and add per-partition offsets — prefix sums over the
-   * partition-size list, a model-parameter-sized driver step of the same
-   * class as a watermark read, re-embedded as a literal map lookup.
-   * Bit-identical to the global window when `order` is a unique total
-   * order (required; range boundaries may split ties otherwise).
+   * Two private branches, picked by ONE measured rule:
+   *  - in memory: [[bucketedRunning]] with `row_number`/`count` — the
+   *    input plan executes once, and the wide row moves through one
+   *    hash exchange on a sampled range bucket;
+   *  - spilling: [[keysOnlyRowNumber]] — the same counter over a
+   *    (keys, synthetic id) projection, joined back by the id, so the
+   *    sort's disk bandwidth is paid on the key columns only.
    *
-   * The ranged intermediate is pinned: it feeds both the size count and
-   * the final projection, and must not be recomputed (a re-sampled range
-   * shuffle could place boundaries differently).
+   * The crossover is measured on q63 (BASELINE.md r15/r16): the
+   * in-memory branch wins while its sort fits memory (sf0.1: 4.98 vs
+   * 6.3 s — the join-back costs more than an in-memory sort saves),
+   * the keys-only branch wins 1.6× once the payload sort spills (sf16:
+   * 127.2 vs 79.8 s), and the gap grows with payload bytes per sorted
+   * row. "Would it spill" is [[counterSortEstimate]]. Both branches are
+   * bit-identical (spec'd against the window, plus symmetric-diff 0 at
+   * sf16 / 75 M rows), so a wrong pick costs time, never correctness.
+   * Deployments near the boundary pin
+   * `spark.graft.counter.sortBudgetBytes`.
    */
   def contiguousRowNumber(df: DataFrame, order: Seq[Column], as: String,
                           numPartitions: Option[Int] = None): DataFrame = {
-    val parted = numPartitions
-      .map(n => df.repartitionByRange(n, order: _*))
-      .getOrElse(df.repartitionByRange(order: _*))
-    val local = graft.ops.materialize(
-      parted.withColumn("__pid", spark_partition_id())
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("__pid")).orderBy(order: _*))))
-    val sizes = local.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets: Map[Int, Long] = sizes
-      .scanLeft((-1, 0L, 0L)) { case ((_, _, cum), (p, n)) => (p, cum, cum + n) }
-      .drop(1).map { case (p, off, _) => p -> off }.toMap
-    local
-      .withColumn(as, (col("__rn") + element_at(typedLit(offsets), col("__pid")))
-        .cast("long"))
-      .drop("__pid", "__rn")
+    val (est, budget) = counterSortEstimate(df)
+    if (est > budget) keysOnlyRowNumber(df, order, as, numPartitions)
+    else bucketedRowNumber(df, order, as, numPartitions)
   }
 
-  /**
-   * [[contiguousRowNumber]] with the range boundaries PRE-SAMPLED from
-   * a column-pruned pass, eliminating the RangePartitioner's
-   * double-execution of the input plan (the q63 profile, BASELINE r16:
-   * `repartitionByRange`'s sampling pass re-runs the whole upstream
-   * join — all payload columns — before the real shuffle runs it
-   * again).
-   *
-   * How: one cheap pass collects a bounded deterministic key sample
-   * (smallest `xxhash64(keys)` via TakeOrdered — one map pass + driver
-   * merge, no full sort; on `sampleSource` if given, else on
-   * `df.select(order)`, which Catalyst column-prunes through the
-   * upstream joins) and cuts it into `n−1` boundary keys. Each row's
-   * bucket is then a PURE FUNCTION of its key — Σ 1[key ≥ boundary] —
-   * so the wide row moves through ONE hash exchange on the bucket id
-   * and the input plan executes exactly once.
-   *
-   * Correctness does not depend on the boundaries at all: global
-   * contiguity comes from summing bucket sizes in BUCKET order (not
-   * partition order — a hash partition may hold several buckets; the
-   * within-partition window partitions by bucket), equal keys share a
-   * bucket by construction, and the within-bucket `row_number` orders
-   * by the full key — so the output is bit-identical to
-   * [[contiguousRowNumber]] under the same unique-total-order
-   * contract, for ANY boundary choice (RelationalOpsSpec asserts
-   * parity, including under adversarial fixed boundaries). Boundaries
-   * only govern balance; the hash-of-key sample effectively samples
-   * DISTINCT keys (all copies of a key rank together), which biases
-   * balance on heavily duplicated keys — acceptable for a counter
-   * whose skew failure mode is a slow task, never a wrong number.
-   *
-   * Null key columns compare null against boundary structs and land
-   * in the lowest bucket (the RangePartitioner's nulls-first side);
-   * counter values are unaffected (the window orders nulls first
-   * within the bucket).
-   */
-  def contiguousRowNumberSampledRange(df: DataFrame, order: Seq[Column],
-                                      as: String,
-                                      numPartitions: Option[Int] = None,
-                                      sampleSource: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = df.sparkSession
-    val n = numPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val keyed = sampleSource.getOrElse(df)
-    // bounded deterministic sample: 64 candidates per target partition
-    // (shared with contiguousPrefixSum — see sampledBoundaryBucket)
-    val bucket = sampledBoundaryBucket(keyed, order, n)
-    val local = graft.ops.materialize(
-      df.withColumn("__bk", bucket)
-        .repartition(n, col("__bk"))
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("__bk")).orderBy(order: _*))))
-    val sizes = local.groupBy(col("__bk")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets: Map[Int, Long] = sizes
-      .scanLeft((-1, 0L, 0L)) { case ((_, _, cum), (b, c)) => (b, cum, cum + c) }
-      .drop(1).map { case (b, off, _) => b -> off }.toMap
-    local
-      .withColumn(as, (col("__rn") + element_at(typedLit(offsets), col("__bk")))
-        .cast("long"))
-      .drop("__bk", "__rn")
-  }
+  private def bucketedRowNumber(df: DataFrame, order: Seq[Column], as: String,
+                                numPartitions: Option[Int]): DataFrame =
+    bucketedRunning(df, order, as, numPartitions, df,
+      row_number().over(_), count(lit(1)))
 
-  /** Driver-side ordering matching Spark's ascending-nulls-first sort
-    * EXACTLY — Catalyst's own interpreted ordering over converted rows
-    * ([[org.apache.spark.sql.graft.RowOrderingBridge]]), not a
-    * hand-rolled approximation. Exactness is load-bearing since the
-    * r19 binary-search bucket: the in-plan search is monotone only if
-    * the driver-sorted boundary sequence is sorted under the
-    * EXECUTOR's comparison (a Java `String.compareTo` driver sort
-    * diverges from UTF8String's unsigned-UTF-8-byte order on
-    * supplementary characters, and `Double.compare` on two longs past
-    * 2^53 can call distinct keys equal). */
-  private def sortKeyOrdering(schema: org.apache.spark.sql.types.StructType)
-      : Ordering[org.apache.spark.sql.Row] =
-    org.apache.spark.sql.graft.RowOrderingBridge.externalRowOrdering(schema)
-
-  /**
-   * Narrow-shuffle twin of [[contiguousRowNumber]]: the counter is
-   * computed over a PROJECTION of (order columns, synthetic row id)
-   * and joined back by the id, so the range exchange and the
-   * per-partition sort only ever carry the narrow rows. Worth it when
-   * the payload is wide (q63's fact is 15 columns of strings): at
-   * spill-bound scale the default form pays the sort's disk bandwidth
-   * on every payload byte, while this form pays it on the key columns
-   * only and moves the payload once through a hash exchange with no
-   * sort. At small SF the extra join-back loses — the DEFAULT stays
-   * [[contiguousRowNumber]]; measured deltas live in BASELINE.md.
-   *
-   * Same uniqueness contract as the default (bit-identical only when
-   * `order` is a unique total order); the synthetic id is minted on a
-   * pinned copy of the input so both the narrow pass and the join-back
-   * see identical ids.
-   */
-  def contiguousRowNumberViaJoin(df: DataFrame, order: Seq[Column],
-                                 as: String,
-                                 numPartitions: Option[Int] = None)
-      : DataFrame = {
+  /** The spill-regime branch of [[contiguousRowNumber]]: the counter is
+    * computed over a PROJECTION of (order columns, synthetic row id)
+    * and joined back by the id, so the bucket exchange and the
+    * per-bucket sort only ever carry the narrow rows; the payload moves
+    * once through a hash exchange with no sort. The synthetic id is
+    * minted on a pinned copy of the input so both the narrow pass and
+    * the join-back see identical ids. */
+  private def keysOnlyRowNumber(df: DataFrame, order: Seq[Column], as: String,
+                                numPartitions: Option[Int]): DataFrame = {
     val mid = "__graft_mid"
     val withMid = graft.ops.materialize(
       df.withColumn(mid, monotonically_increasing_id()))
     val aliased = order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") }
-    // r19: the narrow counter uses the SAMPLED range form — the
-    // RangePartitioner's sampling pass re-read the pinned projection a
-    // second time; the boundary sample reads only the key columns once
-    val counter = contiguousRowNumberSampledRange(
+    val counter = bucketedRowNumber(
         withMid.select(aliased :+ col(mid): _*),
         order.indices.map(i => col(s"__o$i")), as, numPartitions)
       .select(col(mid), col(as))
@@ -276,140 +184,116 @@ object relational {
   }
 
   /**
-   * Auto-selecting form of the contiguous counter: picks the wide
-   * single-execution sort ([[contiguousRowNumberSampledRange]] — r19;
-   * previously the double-executing [[contiguousRowNumber]]) while the
-   * payload sort is expected to fit in memory, and the narrow
-   * keys-only counter + join-back ([[contiguousRowNumberViaJoin]])
-   * once it would spill. Both twins are bit-identical (spec'd, plus symmetric-diff 0
-   * at sf16 / 75 M rows), so a wrong pick costs only time — never
-   * correctness.
+   * The (estimated sort bytes, budget bytes) pair [[contiguousRowNumber]]
+   * dispatches on. Analysis-only; runs no jobs.
    *
-   * The rule encodes the MEASURED crossover (BASELINE.md r15, q63 at
-   * sf0.1/sf4/sf16): the wide form wins while its sort stays in memory
-   * (sf0.1: 4.98 vs 6.3 s — the join-back costs more than an in-memory
-   * sort saves), the narrow form wins 1.6× once the payload sort
-   * spills (sf16: 127.2 vs 79.8 s), and the gap grows with payload
-   * bytes per sorted row. "Would it spill" is decided by
-   * [[counterSortEstimate]]: the SCAN bytes feeding the plan — the sum
-   * of the optimized plan's leaf statistics (file sizes for parquet
-   * scans), times a configurable columnar→row expansion factor
+   * The estimate is the SCAN bytes feeding the plan — the sum of the
+   * optimized plan's leaf statistics (file sizes for parquet scans) —
+   * times a columnar→row expansion factor
    * (`spark.graft.counter.scanExpansion`, default 10: the q63 fact
-   * measures ~12× — 2.5 GB of parquet decodes to ~30 GB of unsafe
-   * rows, which is what the sort actually buffers; columnar
-   * compression does real work on string facts) — against a sort
-   * budget resolved as: the `sortBudgetBytes` argument, else the
-   * `spark.graft.counter.sortBudgetBytes` session conf, else HALF the
-   * cluster's aggregate BlockManager capacity (the unified memory
-   * manager guarantees execution only `1 − storageFraction` = 50% of
-   * the region against storage eviction — the share a sort can count
-   * on before spilling). Calibration anchor (BASELINE r16): at sf16
-   * with a 57 GB region the wide form measured 189.8 s against the
-   * narrow form's ~80 s — est 3.4 GB × 10 = 34 GB > 28.5 GB budget
-   * correctly picks narrow, where the earlier ×4-vs-full-capacity
-   * model picked wide.
+   * measures ~12× — 2.5 GB of parquet decodes to ~30 GB of unsafe rows,
+   * which is what the sort actually buffers). The budget is the
+   * `spark.graft.counter.sortBudgetBytes` conf, else HALF the cluster's
+   * aggregate BlockManager capacity (the unified memory manager
+   * guarantees execution only `1 − storageFraction` = 50% of the region
+   * against storage eviction). Calibration anchor (BASELINE r16): at
+   * sf16 with a 57 GB region, est 3.4 GB × 10 = 34 GB > 28.5 GB budget
+   * correctly picks the keys-only branch.
    *
    * Leaf sums, NOT the root estimate: without column statistics
-   * Catalyst propagates join sizes multiplicatively, so any join-fed
-   * input inflates to nonsense (q63's 3-way join at sf0.1 estimated
-   * 1.2e20 bytes — the root estimate routed EVERY join-fed pipeline to
-   * the narrow form, measurably the wrong call in-memory; caught by
-   * the r16 full-registry bench). Leaves double-count a table scanned
-   * twice (q63 reads orders three times), which errs toward narrow —
-   * the form whose worst case is a modest join-back, never a spill.
-   * Still a COARSE switch: a 100 TB estimate against a few-TB budget
-   * is orders of magnitude past the crossover, the only regime where
-   * the choice matters; deployments near the boundary pin the conf.
+   * Catalyst propagates join sizes multiplicatively (q63's 3-way join at
+   * sf0.1 estimated 1.2e20 bytes, which routed every join-fed pipeline
+   * to the keys-only branch). Leaves double-count a table scanned twice,
+   * which errs toward the keys-only branch — whose worst case is a
+   * modest join-back, never a spill.
    */
-  def contiguousRowNumberAuto(df: DataFrame, order: Seq[Column], as: String,
-                              numPartitions: Option[Int] = None,
-                              sortBudgetBytes: Option[Long] = None)
-      : DataFrame = {
-    val (est, budget) = counterSortEstimate(df, sortBudgetBytes)
-    if (est > budget) contiguousRowNumberViaJoin(df, order, as, numPartitions)
-    // r19: the in-memory branch is the SAMPLED range form. The r17
-    // measurement that kept the raw repartitionByRange here was a tie
-    // only because of the linear 31-compare bucket expression; with
-    // the binary-search bucket the sampled form wins outright at
-    // sf0.1 (Q63Scale min-of-5: 3.59 s vs 4.32 s wide) AND executes
-    // the upstream plan once instead of twice — the property that
-    // actually matters when the plan above the counter is a 100 TB
-    // join (the RangePartitioner re-runs the whole child for its
-    // sample; guide §2.4 "remove shuffles/passes outright").
-    else contiguousRowNumberSampledRange(df, order, as,
-      Some(numPartitions.getOrElse(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
-  }
-
-  /** The (estimated sort bytes, budget bytes) pair
-    * [[contiguousRowNumberAuto]] dispatches on — exposed so probes and
-    * operators share ONE decision rule. Analysis-only; runs no jobs. */
-  private[graft] def counterSortEstimate(df: DataFrame,
-      sortBudgetBytes: Option[Long] = None): (BigInt, BigInt) = {
+  private def counterSortEstimate(df: DataFrame): (BigInt, BigInt) = {
     val spark = df.sparkSession
-    val budget: BigInt = BigInt(sortBudgetBytes
-      .orElse(spark.conf.getOption("spark.graft.counter.sortBudgetBytes")
-        .map(_.toLong))
-      .getOrElse(spark.sparkContext.getExecutorMemoryStatus
-        .values.map(_._1).sum / 2))
-    val expansion = spark.conf
-      .getOption("spark.graft.counter.scanExpansion")
-      .map(_.toDouble).getOrElse(10.0)
+    val budget: BigInt = BigInt(
+      counterConf(spark, "spark.graft.counter.sortBudgetBytes", _.toLong)
+        .getOrElse(spark.sparkContext.getExecutorMemoryStatus
+          .values.map(_._1).sum / 2))
+    val expansion =
+      counterConf(spark, "spark.graft.counter.scanExpansion", _.toDouble)
+        .getOrElse(10.0)
     val scanBytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     ((BigDecimal(scanBytes) * expansion).toBigInt, budget)
   }
 
-  /** Shared boundary-sampling bucket of the sampled-range counters: a
-    * bounded deterministic sample of the order key from a
-    * COLUMN-PRUNED projection of `keyed` (Catalyst drops every other
+  /** A numeric `spark.graft.counter.*` conf; a malformed value fails
+    * with the key and the value instead of a bare NumberFormatException. */
+  private def counterConf[T](spark: org.apache.spark.sql.SparkSession,
+                             key: String, parse: String => T): Option[T] =
+    spark.conf.getOption(key).map { v =>
+      try parse(v)
+      catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$key must be a number, got '$v'")
+      }
+    }
+
+  /** Driver-side ordering matching Spark's ascending-nulls-first sort
+    * EXACTLY — Catalyst's own interpreted ordering over converted rows
+    * ([[org.apache.spark.sql.graft.RowOrderingBridge]]), not a
+    * hand-rolled approximation. Exactness is load-bearing for the
+    * binary-search bucket: the in-plan search is monotone only if the
+    * driver-sorted boundary sequence is sorted under the EXECUTOR's
+    * comparison (a Java `String.compareTo` driver sort diverges from
+    * UTF8String's unsigned-UTF-8-byte order on supplementary
+    * characters, and `Double.compare` on two longs past 2^53 can call
+    * distinct keys equal). */
+  private def sortKeyOrdering(schema: org.apache.spark.sql.types.StructType)
+      : Ordering[org.apache.spark.sql.Row] =
+    org.apache.spark.sql.graft.RowOrderingBridge.externalRowOrdering(schema)
+
+  /** Boundary-sampling bucket of the bucketed counters, returned with
+    * the number of buckets it can produce: a bounded deterministic
+    * sample of the order key (smallest `xxhash64(key)` via TakeOrdered —
+    * one map pass + driver merge, 64 candidates per target bucket) from
+    * a COLUMN-PRUNED projection of `keyed` (Catalyst drops every other
     * column, so expensive expressions elsewhere in the row are NOT
     * evaluated by the sampling pass), sorted driver-side with Spark's
-    * EXACT ascending-nulls-first semantics ([[sortKeyOrdering]] —
-    * Catalyst's interpreted ordering), `n−1` quantile boundaries, and
-    * a pure BINARY-SEARCH bucket expression: ⌈log₂(n)⌉ struct
-    * comparisons per row instead of the r18 linear Σ over all
-    * boundaries (31 compares at n = 32 — the constant that made the
-    * sampled counter measure a tie against the double-executing wide
-    * form at sf0.1, BASELINE r17). The search computes exactly
-    * #{boundaries ≤ key}: boundaries ascend under the SAME total
-    * order the executor's `>=` uses (the bridge ordering — exactness
-    * is what licenses a binary search; see RowOrderingBridge), so the
-    * predicate `key >= b(i)` is monotone in i and the tree's leaf
-    * equals the linear count on every input. Rows whose key holds a
-    * NULL field are excluded from the BOUNDARY SET (r20, ADVICE fix:
-    * `lit(null)` renders as NullType, so a null boundary field would
-    * ride NullType coercion instead of guaranteed nulls-first
-    * semantics — and any boundary subset is correctness-neutral);
-    * null-keyed DATA rows still bucket fine: every comparison against
-    * a null-free boundary resolves, and an all-null key descends to
-    * bucket 0, the RangePartitioner's nulls-first side.
+    * EXACT ascending-nulls-first semantics ([[sortKeyOrdering]]), cut
+    * into quantile boundaries, and a pure BINARY-SEARCH bucket
+    * expression: ⌈log₂(m+1)⌉ struct comparisons per row for m
+    * boundaries. The search computes exactly #{boundaries ≤ key}:
+    * boundaries ascend under the SAME total order the executor's `>=`
+    * uses, so the predicate `key >= b(i)` is monotone in i. Rows whose
+    * key holds a NULL field are excluded from the BOUNDARY SET
+    * (`lit(null)` renders as NullType, so a null boundary field would
+    * ride NullType coercion instead of nulls-first semantics — and any
+    * boundary subset is correctness-neutral); null-keyed DATA rows
+    * still bucket fine: every comparison against a null-free boundary
+    * resolves, and an all-null key descends to bucket 0.
     *
-    * Plan growth is BOUNDED in the partition count (r20, VERDICT r19
-    * item 2): the boundary count is capped at
-    * `spark.graft.counter.maxBoundaries` (default 1024) independent of
-    * `n`, so the embedded struct literals, the when-tree size and the
-    * driver-side sample collect stay flat as shuffle partitions grow
-    * to production counts (10³–10⁵ would otherwise blow the 64 KB
-    * Janino method limit and fall back to interpreted eval — the exact
-    * codegen failure mode this operator exists to avoid). A capped
-    * bucket count bounds THIS pass's parallelism at maxBoundaries+1
-    * partitions — ~10³ windowed partitions is ample for a counter
-    * pass, and deployments that disagree raise the conf. */
+    * Plan growth is BOUNDED: the bucket count is capped at
+    * `min(n, spark.graft.counter.maxBoundaries)` (default 1024), and at
+    * one bucket per 64 drawn keys when the input is smaller than the
+    * sample limit, so the
+    * embedded struct literals, the when-tree and the driver-side sample
+    * stay flat as shuffle partitions grow to production counts (10³–10⁵
+    * would otherwise blow the 64 KB Janino method limit). The returned
+    * count never exceeds `n`; callers size the bucketed exchange by it,
+    * so a large `n` runs no empty tasks (AQE never coalesces an
+    * explicit-count repartition). */
   private def sampledBoundaryBucket(keyed: DataFrame, order: Seq[Column],
-                                    n: Int): Column = {
-    val maxB = keyed.sparkSession.conf
-      .getOption("spark.graft.counter.maxBoundaries")
-      .map(_.toInt).getOrElse(1024)
-    val nb = math.min(n, math.max(1, maxB))
+                                    n: Int): (Column, Int) = {
+    val maxB = counterConf(keyed.sparkSession,
+      "spark.graft.counter.maxBoundaries", _.toInt).getOrElse(1024)
+    val cap = math.min(n, math.max(1, maxB))
     val aliased = order.zipWithIndex.map { case (c, i) => c.as(s"__k$i") }
     val kCols = order.indices.map(i => col(s"__k$i"))
-    val sample = keyed.select(aliased: _*)
+    val drawn = keyed.select(aliased: _*)
       .select(struct(kCols: _*).as("__k"))
       .orderBy(xxhash64(col("__k")))
-      .limit(nb * 64)
-      .collect().map(_.getStruct(0))
-      .filter(r => !r.anyNull)
+      .limit(cap * 64)
+      .collect()
+    // a sample short of its limit is the whole input: cut it into
+    // buckets of ~64 keys, not into near-empty ones
+    val nb = math.min(cap, math.max(1, drawn.length / 64))
+    val sample = drawn.map(_.getStruct(0)).filter(r => !r.anyNull)
     val boundaries: IndexedSeq[org.apache.spark.sql.Row] =
       if (sample.length < 2 || nb < 2) IndexedSeq.empty
       else {
@@ -431,60 +315,76 @@ object relational {
         when(sk >= structLit(boundaries(mid - 1)), search(mid, hi))
           .otherwise(search(lo, mid - 1))
       }
-    if (boundaries.isEmpty) lit(0) else search(0, boundaries.length)
+    (search(0, boundaries.length), boundaries.length + 1)
+  }
+
+  /**
+   * The body both counters share: a running window value over a unique
+   * total `order`, made global without a single reducer. Each row's
+   * bucket is a pure function of its key ([[sampledBoundaryBucket]],
+   * boundaries sampled from `sampleSource`), so the row moves through
+   * ONE hash exchange on the bucket id and the input plan executes
+   * once. `running` is evaluated within each bucket in key order;
+   * the bucket's `total` feeds a driver-side prefix-summed offset map
+   * (one entry per bucket) that is added back as a literal lookup.
+   *
+   * Values do not depend on the boundaries at all: offsets accumulate
+   * in BUCKET order (a hash partition may hold several buckets; the
+   * window partitions by bucket), equal keys share a bucket by
+   * construction, and the window orders by the full key. Boundaries
+   * only govern balance; the hash-of-key sample effectively samples
+   * DISTINCT keys, which biases balance on heavily duplicated keys — a
+   * slow task, never a wrong number. The windowed intermediate is
+   * pinned: it feeds both the totals and the final projection.
+   */
+  private def bucketedRunning(df: DataFrame, order: Seq[Column], as: String,
+                              numPartitions: Option[Int],
+                              sampleSource: DataFrame,
+                              running: WindowSpec => Column,
+                              total: Column): DataFrame = {
+    val n = numPartitions.getOrElse(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val (bucket, buckets) = sampledBoundaryBucket(sampleSource, order, n)
+    val local = graft.ops.materialize(
+      df.withColumn("__bk", bucket)
+        .repartition(buckets, col("__bk"))
+        .withColumn("__run", running(
+          Window.partitionBy(col("__bk")).orderBy(order: _*))))
+    val totals = local.groupBy(col("__bk")).agg(total.as("t"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val offsets: Map[Int, Long] = totals
+      .scanLeft((-1, 0L, 0L)) { case ((_, _, cum), (b, t)) => (b, cum, cum + t) }
+      .drop(1).map { case (b, off, _) => b -> off }.toMap
+    local
+      .withColumn(as, (col("__run") + element_at(typedLit(offsets), col("__bk")))
+        .cast("long"))
+      .drop("__bk", "__run")
   }
 
   /**
    * The [[contiguousRowNumber]] pattern generalized to a running SUM:
-   * inclusive prefix sum of `value` over a unique total `order`,
-   * without `sum().over(Window.orderBy)`'s single reducer. Shape:
-   * sampled-boundary range buckets, window WITHIN each bucket,
-   * per-bucket totals as a driver-side prefix-summed offset map — and
-   * the same bit-parity guarantee (integer values sum associatively;
-   * double values would not reassociate identically, so `value` must
-   * be integral).
+   * inclusive prefix sum of `value` over a unique total `order`, without
+   * `sum().over(Window.orderBy)`'s single reducer — [[bucketedRunning]]
+   * with `sum`/`sum`. Bit-identical to that window (integer values sum
+   * associatively; double values would not reassociate identically, so
+   * `value` must be integral). `value` is evaluated exactly once, in the
+   * bucketed pass; the boundary sample evaluates only the order columns.
    *
-   * r18: the range step is [[sampledBoundaryBucket]], NOT
-   * `repartitionByRange` — the RangePartitioner's sampling pass
-   * executes the FULL upstream plan a second time, and every serious
-   * caller of this operator feeds it an expensive derived value
-   * (q136/q138: `size(Bpe.tokenIds(...))` — the whole BPE encode ran
-   * twice; exact-token shard manifests re-ran their token count the
-   * same way). The pruned boundary sample evaluates only the order
-   * columns; the value expression runs exactly once, in the bucketed
-   * pass. Output is bit-identical (prefix sums depend only on the
-   * total order, and bucket totals are exact), asserted in
-   * RelationalOpsSpec against the single-reducer window.
+   * `sampleSource` (default `df`) is where the boundary sample is read:
+   * the pruned sample pass on `df` itself still evaluates any FILTER
+   * above the scan, and a caller filtering on an expensive derived value
+   * (packTokenSequences: `size(ids) > 0` over the whole BPE encode)
+   * passes a key-only superset so the sample is a pure column-pruned
+   * scan. Output is the same for ANY boundary choice.
    */
   def contiguousPrefixSum(df: DataFrame, order: Seq[Column], value: Column,
                           as: String,
                           numPartitions: Option[Int] = None,
-                          sampleSource: Option[DataFrame] = None): DataFrame = {
-    val n = numPartitions.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    // r19: boundary sample from `sampleSource` when given — the pruned
-    // sample pass on `df` itself still evaluates any FILTER above the
-    // scan, and every serious caller filters on the expensive derived
-    // value (packTokenSequences: `size(ids) > 0` forces the whole BPE
-    // encode in the sampling pass). A key-only superset source makes
-    // the sample a pure column-pruned scan; output is bit-identical
-    // for ANY boundary choice (the operator's documented property).
-    val bucket = sampledBoundaryBucket(sampleSource.getOrElse(df), order, n)
-    val local = graft.ops.materialize(
-      df.withColumn("__bk", bucket)
-        .repartition(n, col("__bk"))
-        .withColumn("__v", value.cast("long"))
-        .withColumn("__ps", sum(col("__v")).over(
-          Window.partitionBy(col("__bk")).orderBy(order: _*)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
-    val totals = local.groupBy(col("__bk")).agg(sum(col("__v")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets: Map[Int, Long] = totals
-      .scanLeft((-1, 0L, 0L)) { case ((_, _, cum), (p, t)) => (p, cum, cum + t) }
-      .drop(1).map { case (p, off, _) => p -> off }.toMap
-    local
-      .withColumn(as, (col("__ps") + element_at(typedLit(offsets), col("__bk")))
-        .cast("long"))
-      .drop("__bk", "__ps", "__v")
-  }
+                          sampleSource: Option[DataFrame] = None): DataFrame =
+    bucketedRunning(df.withColumn("__v", value.cast("long")), order, as,
+        numPartitions, sampleSource.getOrElse(df),
+        w => sum(col("__v")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        sum(col("__v")))
+      .drop("__v")
 }

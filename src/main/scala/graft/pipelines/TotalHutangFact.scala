@@ -32,52 +32,12 @@ object TotalHutangFact extends Pipeline {
   val sources = Seq("unitReceiptNotes", "urnItems", "unitPaymentOrders")
   val factKeys = Seq("row_id")
 
-  /** The counter form AUTO-SELECTS from Catalyst size estimates
-    * ([[relational.contiguousRowNumberAuto]]): the wide
-    * range-partitioned sort while the payload fits the cluster's sort
-    * budget, the narrow keys-only counter + join-back once it would
-    * spill — so a 100 TB backfill gets the spill-regime form without
-    * the caller knowing the crossover exists. Both forms are
-    * bit-identical (spec'd; symmetric-diff 0 at sf16, 75.0 M rows), so
-    * the estimate only ever decides speed.
-    *
-    * CROSSOVER RULE (measured, BASELINE.md r15): the wide form wins
-    * while the payload sort fits memory — sf0.1 warm: wide 4.98 s vs
-    * narrow 6.3 s (the join-back costs more than the in-memory sort
-    * saves); sf4: wash (27.9 vs 27.1 s); sf16 (160× gate, spill-bound):
-    * wide 127.2 s vs narrow 79.8 s — 1.6× for narrow, growing with
-    * payload bytes per sorted row. Pin the budget with
-    * `spark.graft.counter.sortBudgetBytes` near the boundary; the
-    * explicit twins remain for callers that want a fixed plan. */
-  def transform(t: Map[String, DataFrame]): DataFrame =
-    withCounter(t, relational.contiguousRowNumberAuto(_, _, _))
-
-  /** Fixed wide form — the range-partitioned payload sort
-    * ([[relational.contiguousRowNumber]]); fastest while the sort
-    * fits memory. */
-  def transformWideCounter(t: Map[String, DataFrame]): DataFrame =
-    withCounter(t, relational.contiguousRowNumber(_, _, _))
-
-  /** Fixed narrow form — keys-only counter joined back by a synthetic
-    * id ([[relational.contiguousRowNumberViaJoin]]); 1.6× the wide
-    * form once the payload sort spills (sf16 measurement above). */
-  def transformNarrowCounter(t: Map[String, DataFrame]): DataFrame =
-    withCounter(t, relational.contiguousRowNumberViaJoin(_, _, _))
-
-  /** Wide form with PRE-SAMPLED range boundaries
-    * ([[relational.contiguousRowNumberSampledRange]]): the boundary
-    * sample runs over a column-pruned clone of the fact (Catalyst
-    * prunes the upstream joins to the three key columns), so the full-
-    * width join executes once instead of twice — the r16 VERDICT's
-    * "keys-only sampling projection" shape. Bit-identical to the other
-    * forms (RelationalOpsSpec; boundary-independent by construction). */
-  def transformSampledCounter(t: Map[String, DataFrame]): DataFrame =
-    withCounter(t, (df, order, as) =>
-      relational.contiguousRowNumberSampledRange(df, order, as))
-
-  private[graft] def withCounter(t: Map[String, DataFrame],
-      counter: (DataFrame, Seq[org.apache.spark.sql.Column], String)
-        => DataFrame): DataFrame = {
+  /** The A5 counter is [[relational.contiguousRowNumber]], which picks
+    * its in-memory or keys-only branch from Catalyst size estimates, so
+    * a 100 TB backfill gets the spill-regime form without the caller
+    * knowing the crossover exists. Pin the choice with
+    * `spark.graft.counter.sortBudgetBytes`. */
+  def transform(t: Map[String, DataFrame]): DataFrame = {
     // SQL-side `not in` (run.js:75): NULL createdby does NOT survive
     val urns = t("unitReceiptNotes")
       .filter(!col("isDeleted") &&
@@ -131,13 +91,13 @@ object TotalHutangFact extends Pipeline {
       col("i_product_code").as("product_code"))
 
     // A5: counter-as-first-column, deterministic ordering. The scale-safe
-    // range-partitioned counter (bit-parity with the single-reducer window
+    // range-bucketed counter (bit-parity with the single-reducer window
     // proven in RelationalOpsSpec) is the DEFAULT — a backfill through this
     // pipeline must not move every row to one reducer. The faithful-but-
     // single-reducer `row_number().over(Window.orderBy(...))` form remains
     // only as the documented nightly-delta shortcut; if the surrogate only
     // needs uniqueness, `monotonically_increasing_id()` is shuffle-free.
-    counter(projected,
+    relational.contiguousRowNumber(projected,
         Seq(col("urn_no"), col("product_code"), col("invoice_price")),
         "row_id")
       .select(col("row_id") +: projected.columns.map(col): _*)

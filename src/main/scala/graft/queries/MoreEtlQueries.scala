@@ -412,9 +412,6 @@ object MoreEtlQueries {
         // part files (r11 sweep). With l_quantity appended, remaining
         // ties are FULLY identical rows, whose interchangeable ids
         // cannot change the result set.
-        // deliberately the fixed WIDE form, not Auto: the payload IS
-        // the three key columns, so the narrow twin's id-mint + join
-        // -back is pure overhead at every scale
         graft.ops.relational.contiguousRowNumber(base,
             Seq(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
             "row_id")
@@ -428,7 +425,7 @@ object MoreEtlQueries {
                l_orderkey, l_linenumber, l_quantity
         FROM lineitem WHERE l_orderkey <= 2000"""),
       "A5 counter-as-column: contiguous surrogate key over an explicit " +
-        "total order (range-partitioned counter — no single reducer)"),
+        "total order (range-bucketed counter — no single reducer)"),
 
     // ── SCD2: type-2 dimension history from a change log — the
     // warehouse-grade extension of the reference's type-1 dimension

@@ -48,6 +48,7 @@ object Serve {
 
   /** One running server; `stop()` for embedded callers (tests). */
   final class Handle(server: HttpServer,
+                     handlers: java.util.concurrent.ExecutorService,
                      timer: Option[java.util.concurrent.ScheduledExecutorService],
                      watchdog: Option[java.util.concurrent.ScheduledExecutorService],
                      val port: Int) {
@@ -55,8 +56,14 @@ object Serve {
       timer.foreach(_.shutdownNow())
       watchdog.foreach(_.shutdownNow())
       server.stop(0)
+      // after the server stops dispatching: the pool's threads are
+      // non-daemon and would otherwise keep the JVM alive
+      handlers.shutdown()
     }
   }
+
+  /** Name of the HTTP handler threads of the server on `port`. */
+  private[graft] def handlerThreadName(port: Int): String = s"graft-serve-http-$port"
 
   /** The reference host bounds every function run at 9 min 59 s
     * (`host.json:3`, `functionTimeout 00:09:59`) — the default run
@@ -361,7 +368,10 @@ object Serve {
     // handler threads bound the number of in-flight HTTP requests: the
     // run permits do the real admission control, and one spare thread
     // keeps /api/status responsive while every permit is occupied
-    server.setExecutor(Executors.newFixedThreadPool(maxConcurrentRuns + 1))
+    val handlerName = handlerThreadName(server.getAddress.getPort)
+    val handlers = Executors.newFixedThreadPool(maxConcurrentRuns + 1,
+      (r: Runnable) => new Thread(r, handlerName))
+    server.setExecutor(handlers)
     server.start()
 
     // one tick body, shared by the fixed-interval and cron schedules;
@@ -446,7 +456,8 @@ object Serve {
         }
         Some(sched)
       }
-    new Handle(server, timer, watchdogExec, server.getAddress.getPort)
+    new Handle(server, handlers, timer, watchdogExec,
+      server.getAddress.getPort)
   }
 
   def main(args: Array[String]): Unit = {

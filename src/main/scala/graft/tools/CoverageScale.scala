@@ -3,79 +3,6 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.core.Sessions
-import graft.pipelines.TotalHutangFact
-import graft.queries.PipelineQueries
-
-/**
- * q63 counter-form scale measurement (VERDICT r12 item 6): time
- * `TotalHutangFact.transformWideCounter` (wide range-partitioned
- * counter) against `transformNarrowCounter` (counter over a narrow
- * (keys, id) projection, joined back by id) on the same deterministic
- * q63 sources at a given fixture. The wide form's sf16 cost is one
- * disk's spill bandwidth through the payload sort; the narrow form
- * sorts only the three key columns. Outputs are cross-checked for
- * equality (bit-parity is additionally spec'd at small SF).
- *
- * Usage: Q63Scale <sfDir> [rounds] [mode: all|diff|time]
- *
- * `mode` exists for disk-bound fixtures (sf16): the equality pass and
- * the timing rounds each spill tens of GB; running them in separate
- * JVMs returns the shuffle temp space between legs.
- */
-object Q63Scale {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val rounds = if (args.length > 1) args(1).toInt else 3
-    val mode = if (args.length > 2) args(2) else "all"
-    // a typo'd mode must not silently degrade to timing-only — the run
-    // would look like a validated benchmark without the equality pass
-    require(Set("all", "diff", "time")(mode),
-      s"mode must be one of all|diff|time, got '$mode'")
-    val spark = Sessions.local(32, "q63-scale")
-    val srcs = PipelineQueries.totalHutangSources(spark, dir)
-    if (mode == "all" || mode == "diff") {
-      // one equality pass (counts of the symmetric difference on the
-      // full row): the two forms must be the same fact
-      // the explicit twins, NOT the auto form — this tool measures the
-      // crossover the auto rule encodes, so it must pin each branch
-      val wide = TotalHutangFact.transformWideCounter(srcs)
-      val narrow = TotalHutangFact.transformNarrowCounter(srcs)
-        .select(wide.columns.map(col): _*)
-      val sampled = TotalHutangFact.transformSampledCounter(srcs)
-        .select(wide.columns.map(col): _*)
-      val diff = wide.exceptAll(narrow).count() + narrow.exceptAll(wide).count()
-      val diffS = wide.exceptAll(sampled).count() +
-        sampled.exceptAll(wide).count()
-      println(s"[q63scale] $dir symmetric-diff narrow=$diff sampled=$diffS " +
-        (if (diff == 0 && diffS == 0) "(bit-identical)" else "(MISMATCH!)"))
-      spark.catalog.clearCache()
-      graft.ops.materialize.releaseAll()
-    }
-    if (mode == "diff") { spark.stop(); return }
-    for (r <- 1 to rounds) {
-      // toRdd, not count(): count prunes the payload columns out of
-      // the sort — the exact cost difference under measurement
-      val t0 = System.nanoTime()
-      val nw = TotalHutangFact.transformWideCounter(srcs)
-        .queryExecution.toRdd.count()
-      val tw = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nn = TotalHutangFact.transformNarrowCounter(srcs)
-        .queryExecution.toRdd.count()
-      val tn = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val ns = TotalHutangFact.transformSampledCounter(srcs)
-        .queryExecution.toRdd.count()
-      val ts = (System.nanoTime() - t2) / 1e9
-      println(f"[q63scale] $dir r$r rows=$nw wide=$tw%.2f s " +
-        f"narrow=$tn%.2f s sampled=$ts%.2f s" +
-        (if (nw != nn || nw != ns) " ROWS MISMATCH" else ""))
-      spark.catalog.clearCache()
-      graft.ops.materialize.releaseAll()
-    }
-    spark.stop()
-  }
-}
 
 /**
  * Coverage-operator scale measurement: time

@@ -66,55 +66,69 @@ class RelationalOpsSpec extends SparkSpec {
       inclusive = true).count() === 2)
   }
 
+  // every counter test compares against the single-reducer window it
+  // replaces: same rows, same columns, same values
+  private def rowSet(d: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    d.select(d.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
+
+  private def rowNumberOracle(d: org.apache.spark.sql.DataFrame,
+      order: Seq[org.apache.spark.sql.Column]) =
+    d.withColumn("row_id", row_number().over(
+      org.apache.spark.sql.expressions.Window.orderBy(order: _*)).cast("long"))
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
   test("contiguousRowNumber matches the single-reducer window bit-for-bit (A5)") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // keys arrive shuffled; ordering is unique (the operator's contract)
     val df = (1 to 1000).map(i => (i * 7919 % 1000, s"k$i"))
       .toDF("sort_key", "payload").repartition(13)
-    val scalable = relational.contiguousRowNumber(df,
-        Seq(col("sort_key"), col("payload")), "row_id",
-        numPartitions = Some(7))
+    val order = Seq(col("sort_key"), col("payload"))
+    val scalable = relational.contiguousRowNumber(df, order, "row_id",
+      numPartitions = Some(7))
     // the data never collapses onto one reducer
     assert(scalable.rdd.getNumPartitions > 1)
-    val window = df.withColumn("row_id",
-      row_number().over(Window.orderBy(col("sort_key"), col("payload")))
-        .cast("long"))
-    def key(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Int]("sort_key"),
-        r.getAs[String]("payload"))).toSet
-    assert(key(scalable) === key(window))
+    assert(scalable.schema("row_id").dataType ===
+      org.apache.spark.sql.types.LongType)
+    assert(rowSet(scalable) === rowSet(rowNumberOracle(df, order)))
   }
 
+  // the sampled-range counter is now contiguousRowNumber's in-memory
+  // branch; its sampleSource parameter lives on in contiguousPrefixSum
   test("contiguousRowNumberSampledRange: bit-identical to the default " +
       "form; boundaries only govern balance, never values") {
     import spark.implicits._
-    val df = (1 to 1000).map(i => (i * 7919 % 1000, s"k$i", s"payload-$i"))
-      .toDF("sort_key", "payload", "extra").repartition(13)
+    import org.apache.spark.sql.expressions.Window
+    val df = (1 to 1000).map(i => (i * 7919 % 1000, s"k$i", (i % 97).toLong))
+      .toDF("sort_key", "payload", "v").repartition(13)
     val order = Seq(col("sort_key"), col("payload"))
-    def key(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Int]("sort_key"),
-        r.getAs[String]("payload"), r.getAs[String]("extra"))).toSet
-    val default = relational.contiguousRowNumber(df, order, "row_id",
+    val counted = relational.contiguousRowNumber(df, order, "row_id",
       numPartitions = Some(7))
-    val sampled = relational.contiguousRowNumberSampledRange(df, order,
-      "row_id", numPartitions = Some(7))
-    assert(key(sampled) === key(default))
-    assert(sampled.columns.toSet === (df.columns :+ "row_id").toSet)
+    assert(rowSet(counted) === rowSet(rowNumberOracle(df, order)))
+    assert(counted.columns.toSet === (df.columns :+ "row_id").toSet)
+    val oracle = rowSet(df.withColumn("cum",
+      sum(col("v")).over(Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    val default = relational.contiguousPrefixSum(df, order, col("v"), "cum",
+      numPartitions = Some(7))
+    assert(rowSet(default) === oracle)
     // a DIFFERENT (cheap, degenerate) sample source shifts boundaries
-    // but must not move a single counter value — correctness is
+    // but must not move a single value — correctness is
     // boundary-independent by construction
     val skewedSrc = df.filter(col("sort_key") < 50)
       .select(col("sort_key"), col("payload"))
-    val adversarial = relational.contiguousRowNumberSampledRange(df, order,
-      "row_id", numPartitions = Some(7), sampleSource = Some(skewedSrc))
-    assert(key(adversarial) === key(default))
+    val adversarial = relational.contiguousPrefixSum(df, order, col("v"),
+      "cum", numPartitions = Some(7), sampleSource = Some(skewedSrc))
+    assert(rowSet(adversarial) === oracle)
     // single-bucket degenerate case (empty sample source) still exact
-    val empty = relational.contiguousRowNumberSampledRange(df, order,
-      "row_id", numPartitions = Some(7),
-      sampleSource = Some(df.filter(lit(false))
+    val empty = relational.contiguousPrefixSum(df, order, col("v"), "cum",
+      numPartitions = Some(7), sampleSource = Some(df.filter(lit(false))
         .select(col("sort_key"), col("payload"))))
-    assert(key(empty) === key(default))
+    assert(rowSet(empty) === oracle)
+    graft.ops.materialize.releaseAll()
   }
 
   test("sampledBoundaryBucket: plan size capped independent of the " +
@@ -127,12 +141,7 @@ class RelationalOpsSpec extends SparkSpec {
          else Integer.valueOf(i * 7919 % 1000), s"k$i"))
       .toDF("sort_key", "payload").repartition(13)
     val order = Seq(col("sort_key"), col("payload"))
-    def key(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("row_id"),
-        Option(r.getAs[Integer]("sort_key")),
-        r.getAs[String]("payload"))).toSet
-    val default = relational.contiguousRowNumber(df, order, "row_id",
-      numPartitions = Some(7))
+    val oracle = rowSet(rowNumberOracle(df, order))
     def caseWhens(d: org.apache.spark.sql.DataFrame): Int =
       d.queryExecution.analyzed.collect { case p =>
         p.expressions.flatMap(_.collect {
@@ -140,103 +149,101 @@ class RelationalOpsSpec extends SparkSpec {
         })
       }.flatten.size
     // a production-scale partition count with a small cap: the embedded
-    // when-tree must stay cap-sized (one CaseWhen per boundary), values
-    // bit-identical — boundaries only govern balance
-    spark.conf.set("spark.graft.counter.maxBoundaries", "8")
-    try {
-      val capped = relational.contiguousRowNumberSampledRange(df, order,
-        "row_id", numPartitions = Some(512))
-      val whens = caseWhens(capped)
-      assert(whens <= 8,
-        s"when-tree must be cap-sized (<= 8 boundaries), got $whens")
-      assert(key(capped) === key(default))
-    } finally spark.conf.unset("spark.graft.counter.maxBoundaries")
+    // when-tree must stay cap-sized (one CaseWhen per boundary), the
+    // bucketed pass runs one partition per bucket, not per requested
+    // partition, and values match the window
+    val capped = withConf("spark.graft.counter.maxBoundaries", "8") {
+      relational.contiguousRowNumber(df, order, "row_id",
+        numPartitions = Some(512))
+    }
+    val whens = caseWhens(capped)
+    assert(whens <= 8,
+      s"when-tree must be cap-sized (<= 8 boundaries), got $whens")
+    assert(capped.rdd.getNumPartitions === whens + 1)
+    assert(rowSet(capped) === oracle)
     // default cap: n = 4096 must embed at most 1024 boundaries
-    val wide = relational.contiguousRowNumberSampledRange(df, order,
-      "row_id", numPartitions = Some(4096))
+    val wide = relational.contiguousRowNumber(df, order, "row_id",
+      numPartitions = Some(4096))
     assert(caseWhens(wide) <= 1024)
-    assert(key(wide) === key(default))
+    assert(wide.rdd.getNumPartitions === caseWhens(wide) + 1)
+    assert(rowSet(wide) === oracle)
   }
 
+  // the join-back counter is now contiguousRowNumber's keys-only branch,
+  // taken when the sort budget is exceeded
   test("contiguousRowNumberViaJoin: narrow-shuffle twin is bit-identical " +
       "to the default form (and to the window) on a unique total order") {
     import spark.implicits._
     val df = (1 to 1000).map(i => (i * 7919 % 1000, s"k$i", s"wide-payload-$i"))
       .toDF("sort_key", "payload", "extra").repartition(13)
     val order = Seq(col("sort_key"), col("payload"))
-    def key(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Int]("sort_key"),
-        r.getAs[String]("payload"), r.getAs[String]("extra"))).toSet
-    val narrow = relational.contiguousRowNumberViaJoin(df, order, "row_id",
-      numPartitions = Some(7))
-    val default = relational.contiguousRowNumber(df, order, "row_id",
-      numPartitions = Some(7))
-    assert(key(narrow) === key(default))
+    val keysOnly = withConf("spark.graft.counter.sortBudgetBytes", "1") {
+      relational.contiguousRowNumber(df, order, "row_id",
+        numPartitions = Some(7))
+    }
+    val plan = keysOnly.queryExecution.executedPlan.toString
+    assert(plan.contains("Join"))
+    assert(rowSet(keysOnly) === rowSet(rowNumberOracle(df, order)))
     // same output surface: input columns + the counter, no temp leakage
-    assert(narrow.columns.toSet === (df.columns :+ "row_id").toSet)
-    assert(narrow.schema("row_id").dataType ===
+    assert(keysOnly.columns.toSet === (df.columns :+ "row_id").toSet)
+    assert(keysOnly.schema("row_id").dataType ===
       org.apache.spark.sql.types.LongType)
     // the wide payload never enters a sort: the only Sort operators in
-    // the narrow plan order the projected key columns, not 'extra'
-    val plan = narrow.queryExecution.executedPlan.toString()
+    // the keys-only plan order the projected key columns, not 'extra'
     plan.linesIterator.filter(_.contains("Sort ")).foreach { l =>
       assert(!l.contains("extra"), l)
     }
   }
 
-  test("TotalHutangFact: auto, wide and narrow counter forms are all " +
-      "bit-identical on the q63 sources") {
-    val srcs = graft.queries.PipelineQueries
-      .totalHutangSources(spark, "/root/testdata/sf0.001")
-    val auto = graft.pipelines.TotalHutangFact.transform(srcs)
-    val wide = graft.pipelines.TotalHutangFact.transformWideCounter(srcs)
-      .select(auto.columns.map(col): _*)
-    val narrow = graft.pipelines.TotalHutangFact.transformNarrowCounter(srcs)
-      .select(auto.columns.map(col): _*)
-    assert(auto.count() === wide.count())
-    assert(auto.count() === narrow.count())
-    assert(auto.exceptAll(wide).count() === 0L)
-    assert(wide.exceptAll(auto).count() === 0L)
-    assert(auto.exceptAll(narrow).count() === 0L)
-    assert(narrow.exceptAll(auto).count() === 0L)
-  }
-
+  // the budget dispatch now lives in contiguousRowNumber itself
   test("contiguousRowNumberAuto: the sort budget dispatches wide vs " +
       "narrow, both bit-identical to the single-reducer window") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // (k, payload) is a unique total order (31 ⊥ 500 ⇒ k unique)
     val df = (1 to 500).map(i => (i * 31 % 500, "p" * 8 + i))
       .toDF("k", "payload").repartition(9)
     val order = Seq(col("k"), col("payload"))
-    def key(d: org.apache.spark.sql.DataFrame) =
-      d.select("k", "payload", "row_id").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-        .sortBy(x => (x._1, x._2)).toSeq
-    val oracle = key(df.withColumn("row_id",
-      row_number().over(Window.orderBy(order: _*)).cast("long")))
-    // an effectively-infinite budget forces the wide twin (no join in
-    // the plan); a 1-byte budget forces the narrow join-back
-    val wide = relational.contiguousRowNumberAuto(df, order, "row_id",
-      sortBudgetBytes = Some(Long.MaxValue))
-    val narrow = relational.contiguousRowNumberAuto(df, order, "row_id",
-      sortBudgetBytes = Some(1L))
-    assert(!wide.queryExecution.executedPlan.toString.contains("Join"))
-    assert(narrow.queryExecution.executedPlan.toString.contains("Join"))
-    assert(key(wide) === oracle)
-    assert(key(narrow) === oracle)
-    // the documented conf is the no-code knob for the same dispatch
-    spark.conf.set("spark.graft.counter.sortBudgetBytes", "1")
-    try {
-      val viaConf = relational.contiguousRowNumberAuto(df, order, "row_id")
-      assert(viaConf.queryExecution.executedPlan.toString.contains("Join"))
-      assert(key(viaConf) === oracle)
-    } finally spark.conf.unset("spark.graft.counter.sortBudgetBytes")
-    // default budget (aggregate BlockManager capacity) keeps a tiny
-    // input on the wide form
-    val auto = relational.contiguousRowNumberAuto(df, order, "row_id")
-    assert(!auto.queryExecution.executedPlan.toString.contains("Join"))
-    assert(key(auto) === oracle)
+    val oracle = rowSet(rowNumberOracle(df, order))
+    // the default budget (half the BlockManager capacity) keeps a tiny
+    // input on the in-memory branch: no join-back in the plan
+    val inMemory = relational.contiguousRowNumber(df, order, "row_id")
+    assert(!inMemory.queryExecution.executedPlan.toString.contains("Join"))
+    assert(rowSet(inMemory) === oracle)
+    // a 1-byte budget takes the keys-only counter + join-back
+    val keysOnly = withConf("spark.graft.counter.sortBudgetBytes", "1") {
+      relational.contiguousRowNumber(df, order, "row_id")
+    }
+    assert(keysOnly.queryExecution.executedPlan.toString.contains("Join"))
+    assert(rowSet(keysOnly) === oracle)
+  }
+
+  test("TotalHutangFact: both counter branches give one fact") {
+    val srcs = graft.queries.PipelineQueries
+      .totalHutangSources(spark, "/root/testdata/sf0.001")
+    val inMemory = graft.pipelines.TotalHutangFact.transform(srcs)
+    val keysOnly = withConf("spark.graft.counter.sortBudgetBytes", "1") {
+      graft.pipelines.TotalHutangFact.transform(srcs)
+    }
+    assert(keysOnly.queryExecution.executedPlan.toString.contains("Join"))
+    assert(inMemory.count() === keysOnly.count())
+    assert(inMemory.exceptAll(keysOnly).count() === 0L)
+    assert(keysOnly.exceptAll(inMemory).count() === 0L)
+  }
+
+  test("counter confs fail naming the key and the value") {
+    import spark.implicits._
+    val df = (1 to 10).map(i => (i, s"k$i")).toDF("k", "payload")
+    for (key <- Seq("spark.graft.counter.maxBoundaries",
+                    "spark.graft.counter.sortBudgetBytes",
+                    "spark.graft.counter.scanExpansion")) {
+      val e = intercept[IllegalArgumentException] {
+        withConf(key, "12x") {
+          relational.contiguousRowNumber(df, Seq(col("k")), "row_id")
+        }
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("12x"),
+        e.getMessage)
+    }
   }
 
   test("contiguousPrefixSum matches the single-reducer window bit-for-bit") {
@@ -244,17 +251,14 @@ class RelationalOpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     val df = (1 to 1000).map(i => (i * 7919 % 1000, s"k$i", (i % 97).toLong))
       .toDF("sort_key", "payload", "v").repartition(13)
-    val scalable = relational.contiguousPrefixSum(df,
-      Seq(col("sort_key"), col("payload")), col("v"), "cum",
+    val order = Seq(col("sort_key"), col("payload"))
+    val scalable = relational.contiguousPrefixSum(df, order, col("v"), "cum",
       numPartitions = Some(7))
     assert(scalable.rdd.getNumPartitions > 1)
-    val window = df.withColumn("cum",
-      sum(col("v")).over(Window.orderBy(col("sort_key"), col("payload"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    def key(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("cum"), r.getAs[Int]("sort_key"),
-        r.getAs[String]("payload"), r.getAs[Long]("v"))).toSet
-    assert(key(scalable) === key(window))
+    val oracle = rowSet(df.withColumn("cum",
+      sum(col("v")).over(Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    assert(rowSet(scalable) === oracle)
     graft.ops.materialize.releaseAll()
   }
 

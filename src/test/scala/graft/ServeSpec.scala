@@ -353,4 +353,23 @@ class ServeSpec extends SparkSpec {
       assert(s2 === 500 && b2.contains("\"status\":\"error\""), b2)
     } finally h2.stop()
   }
+
+  test("stop() shuts down the HTTP handler pool") {
+    val dir = Files.createTempDirectory("graft-serve-stop").toString
+    val h = Serve.start(spark, graft.sources.ParquetConnector(s"$dir/lake"),
+      s"$dir/dwh", s"$dir/dwh/control", port = 0)
+    val name = Serve.handlerThreadName(h.port)
+    def handlersAlive(): Boolean = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.isAlive && t.getName == name)
+    }
+    try {
+      assert(get(h.port, "/api")._1 === 200)
+      assert(handlersAlive(), s"no '$name' thread served the request")
+    } finally h.stop()
+    val deadline = System.nanoTime() + 10000000000L
+    while (handlersAlive() && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!handlersAlive(), s"'$name' threads outlived stop()")
+  }
 }
