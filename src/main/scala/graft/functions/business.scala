@@ -23,11 +23,6 @@ object business {
     * Ref: `Pembelian/run.js:206-214`. */
   def dayDiff(a: Column, b: Column): Column = datediff(to_date(a), to_date(b))
 
-  /** D3 — duration in minutes between two timestamps.
-    * Ref: `MonitoringEvent/run.js:232`. */
-  def minuteDiff(end: Column, start: Column): Column =
-    (unix_timestamp(end) - unix_timestamp(start)) / 60.0
-
   /** D6 — min-date repair: dates below SQL Server's 1753-01-01 datetime floor
     * get their year replaced with the given year (reference uses the *current*
     * year — nondeterministic; callers pass a fixed year for reproducibility).
@@ -71,7 +66,7 @@ object business {
   def constructionString(parts: Column*): Column =
     concat(parts.flatMap(p => Seq(p, lit(" "))).dropRight(1): _*)
 
-  // ───────────────────────── math / business (M1–M5) ─────────────────────────
+  // ───────────────────────── math / business (M1–M2) ─────────────────────────
 
   /** M1 — total price = qty × unit price × currency rate.
     * Ref: `Pembelian/run.js:256`. */
@@ -82,13 +77,6 @@ object business {
     * identity. Ref: `ProductionOrder/run.js:97-105`. */
   def orderQtyConversion(uom: Column, qty: Column): Column =
     when(lower(uom).isin("yard", "yds"), qty * 0.9144).otherwise(qty)
-
-  /** M4/M3 — default-to-zero on null/NaN. Ref: `GarmentPembelian/run.js:635-637`. */
-  def zeroIfNull(c: Column): Column = coalesce(nanvl(c, lit(0.0)), lit(0))
-
-  /** M5 — default currency rate 1 when the as-of lookup misses.
-    * Ref: `GarmentTotalHutang/run.js:213`. */
-  def defaultRate(c: Column): Column = coalesce(c, lit(1.0))
 
   // ───────────────────── conditional / CASE rules (C1–C7) ─────────────────────
 
@@ -123,7 +111,7 @@ object business {
     when(dayDiff(deliveredAt, dueAt) <= 0, "Tepat Waktu")
       .otherwise("Tidak Tepat Waktu")
 
-  /** C6 — JS-truthiness null gating: 0, "", false, null all map to NULL.
+  /** C6 — JS-truthiness null gating: 0, "" and null map to NULL.
     * The reference applies this per column (`item.x ? f(x) : null`,
     * `Pembelian/run.js:216-279`); encode deliberately per column type,
     * never blanket (ANSI Spark would reject a polymorphic 0/"" compare,
@@ -131,8 +119,6 @@ object business {
   def nullIfFalsyNum(c: Column): Column = when(c.isNotNull && c =!= 0, c)
 
   def nullIfFalsyStr(c: Column): Column = when(c.isNotNull && c =!= "", c)
-
-  def nullIfFalsyBool(c: Column): Column = when(c.isNotNull && c, c)
 
   /** C6 variant — only null/undefined gate (`!= undefined` guards,
     * `Kanban/run.js:89`). Identity on 0/"" — kept for the decision table. */

@@ -194,9 +194,9 @@ object AnnIndex {
   def staleness(spark: SparkSession, base: String): Staleness = {
     // an index persisted before fit-stats existed — no stats table, or
     // stats holding only appended generations — has no baseline to
-    // compare against: report it infinitely stale (NaN baseline) so
-    // rebuildIfStale HEALS it by rebuilding (which seeds gen-0),
-    // instead of crashing on the missing row
+    // compare against: report it infinitely stale (NaN baseline), so
+    // the caller rebuilds (which seeds gen-0) instead of crashing on
+    // the missing row
     val rows: Array[(Int, Double, Double, Long)] =
       if (!spark.catalog.tableExists(s"${base}_stats")) Array.empty
       else spark.table(s"${base}_stats").collect() // one row per batch
@@ -214,26 +214,6 @@ object AnnIndex {
       case None =>
         Staleness(Double.NaN, Double.NaN, aMean, aP90, 0L, an)
     }
-  }
-
-  /**
-   * Rebuild the index over `corpus` iff [[staleness]] exceeds
-   * `maxRatio` — the drift policy closing the append loop: appends
-   * encode with the frozen model ([[appendToAnnIndex]]), this notices
-   * when that model has stopped describing the data, and the rebuild
-   * (a fresh deterministic fit over the CURRENT corpus) restores the
-   * baseline. Returns true when a rebuild ran.
-   */
-  def rebuildIfStale(corpus: DataFrame, idCol: String, vecCol: String,
-                     base: String, dim: Int, maxRatio: Double = 1.25,
-                     nCentroids: Int = 16, m: Int = 16, pqK: Int = 16,
-                     buckets: Int = 16, centroidIters: Int = 8,
-                     sampleSize: Int = 2048): Boolean = {
-    val stale = staleness(corpus.sparkSession, base).ratio > maxRatio
-    if (stale)
-      writeAnnIndex(corpus, idCol, vecCol, base, dim, nCentroids, m, pqK,
-        buckets, centroidIters, sampleSize)
-    stale
   }
 
   /** Read the persisted model back (centroids ordered by id; PqModel
@@ -269,7 +249,7 @@ object AnnIndex {
    * corpora with the same key are treated as identical, so the
    * fingerprint must fold in a value term, not just ids. Returns true
    * when a build ran. Staleness from APPENDS is a different question —
-   * that remains [[rebuildIfStale]]'s reconstruction-error policy;
+   * that remains the [[staleness]] reconstruction-error signal;
    * this is the corpus-swap guard appends never see.
    *
    * The persisted key also carries the BUILD PARAMETERS
@@ -358,8 +338,8 @@ object AnnIndex {
     val (cents, model) = readModel(spark, base)
     // Pin the batch before ANY consumer runs, and record the fit stats
     // BEFORE the codes append. Both orderings matter: a lazy batch plan
-    // that itself references `<base>_codes` (the streaming ingest
-    // anti-joins against it for idempotency) would — evaluated after
+    // that itself references `<base>_codes` (say, an anti-join against
+    // it for idempotency) would — evaluated after
     // the append — describe a different, empty row set, recording n=0
     // stats and silently blinding the drift signal. The pin is not
     // enough on its own: the post-append refreshTable invalidates every
@@ -370,7 +350,7 @@ object AnnIndex {
     // plan is non-deterministic.
     val batch = graft.ops.materialize(rows)
     try {
-      // drift signal for [[staleness]]/[[rebuildIfStale]], from the
+      // drift signal for [[staleness]], from the
       // pinned rows (the stats table is not referenced by the batch
       // plan, so this write invalidates nothing the append needs)
       writeFitStats(spark, batch, vecCol, model, base, generation = 1,
@@ -382,7 +362,7 @@ object AnnIndex {
         .format("parquet").mode(SaveMode.Append)
         .saveAsTable(s"${base}_codes")
       // the write invalidates only the WRITING session's relation cache
-      // (rows may live in a streaming foreachBatch clone); refresh the
+      // (rows may live in another session); refresh the
       // caller's session too, or its cached file-list snapshot keeps
       // serving the pre-append table
       spark.catalog.refreshTable(s"${base}_codes")
@@ -455,7 +435,7 @@ object AnnIndex {
    * the only copy — is PROMOTED, never dropped.
    *
    * When to run: on a file-count signal (this is the small-FILE fix;
-   * model-vs-corpus DRIFT remains [[rebuildIfStale]]'s job, and
+   * model-vs-corpus DRIFT remains [[staleness]]'s signal, and
    * tombstone MASS [[compactIfDead]]'s).
    */
   def compactAnnIndex(spark: SparkSession, base: String,
@@ -480,8 +460,7 @@ object AnnIndex {
 
   /**
    * Compact iff the tombstone mass crossed `maxDeadFraction` — the
-   * automatic trigger closing the delete loop the way
-   * [[rebuildIfStale]] closes the append loop: deletes accumulate
+   * automatic trigger closing the delete loop: deletes accumulate
    * through [[tombstoneAnnIds]], this notices when the dead set has
    * grown past the policy bound (both counts are cheap scalars), and
    * [[compactAnnIndex]] applies them physically (search results are

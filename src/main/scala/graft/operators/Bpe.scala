@@ -163,8 +163,10 @@ object Bpe {
         val e = agenda.poll()
         if (e == null) searching = false // agenda drained: no live pair
         else {
-          val cur = pairCount.get((e._1, e._2))
-          if (cur != null && cur.longValue() == e._3) {
+          // live counts are always positive (a pair whose count falls
+          // to 0 is removed), so a missing pair, read as 0, never
+          // matches an agenda entry
+          if (pairCount.getOrDefault((e._1, e._2), 0L) == e._3) {
             // the valid top: the true max. Selected only at count >= 2
             // (merging a singleton pair buys nothing — fitNaive's rule)
             if (e._3 >= 2L) best = (e._1, e._2)

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
  * query terms' buckets and the `sortBy(term)` layout row-group-prunes
  * inside them. Honest scaling claim: what the index REMOVES from every
  * batch is the corpus explode + (doc, term) aggregate — the dominant
- * per-call cost (measured 1.6–1.9× warm at sf1–sf4, `tools/LexScale`);
+ * per-call cost (measured 1.6–1.9× warm at sf1–sf4);
  * the scan-side pruning narrows with the probe vocabulary, so a
  * NARROW vocabulary (autocomplete, keyword lookup) gets
  * vocabulary-proportional reads while a WIDE one (whole eval documents
@@ -104,8 +104,8 @@ object LexIndex {
   /** bm25TopK's corpus scalars over exactly `docs`: N counts every row
     * (empty/null text included), T sums token counts with null text
     * pinned to 0 under both null-semantics regimes. `batchId` is -1
-    * for manual builds/appends; the streaming exactly-once path stamps
-    * its foreachBatch id here so redelivered batches are detectable
+    * for manual builds/appends; [[appendToLexIndexExactlyOnce]] stamps
+    * its caller's batch id here so redelivered batches are detectable
     * (the query-time N/T aggregate ignores the column). */
   private def statsRow(docs: DataFrame, textCol: String,
                        generation: Int, batchId: Long = -1L): DataFrame =
@@ -233,17 +233,15 @@ object LexIndex {
   }
 
   /**
-   * EXACTLY-ONCE append for streaming ingest (the foreachBatch
-   * at-least-once contract): a redelivered batch must not double tf
-   * in the postings nor double-count N/T in the stats — and unlike
-   * the ANN path, a lexical batch can contain ZERO-TOKEN docs that
+   * EXACTLY-ONCE append for an at-least-once batch source (one that
+   * may redeliver a batch under the same id): a redelivered batch must
+   * not double tf in the postings nor double-count N/T in the stats —
+   * and unlike the ANN path, a lexical batch can contain ZERO-TOKEN docs that
    * leave no postings footprint, so postings-side id dedup alone
    * cannot make the stats row idempotent. Two mechanisms compose:
    *
    *  - postings are id-idempotent: only batch docs whose ids are not
-   *    already posted append (column-pruned anti-join on doc_id, the
-   *    [[graft.streaming.EventStreams]] appendFreshToIndex
-   *    discipline);
+   *    already posted append (column-pruned anti-join on doc_id);
    *  - the stats row is written LAST and carries `batchId`; a
    *    redelivery that finds its batch id already in `_lexstats`
    *    skips entirely.
@@ -255,9 +253,9 @@ object LexIndex {
    * commits the batch. Stats row present ⇒ both tables are complete.
    * Returns true when the batch was (newly) applied.
    *
-   * Contract boundary: batch ids are stable only under a STABLE
-   * checkpoint (the standard foreachBatch exactly-once recipe). A
-   * wiped checkpoint restarts ids at 0 — safe when every prior batch
+   * Contract boundary: batch ids must be stable across redeliveries
+   * (a source checkpoint that assigns them). A wiped checkpoint
+   * restarts ids at 0 — safe when every prior batch
    * completed (the collision skips an already-applied superset), but
    * a wipe that also folds NEW files into the colliding batch id
    * would skip them: never wipe a live checkpoint.

@@ -270,7 +270,7 @@ object Similarity {
    * 6 planes = 64 buckets over 320 k vectors ⇒ ~5 k rows/bucket ⇒
    * ~1.3e10 verified candidates (minutes, single box); 12 planes keeps
    * buckets at ~80 rows and the same job runs in seconds
-   * (`tools/CoverageScale`, numbers in BASELINE.md).
+   * (numbers in BASELINE.md).
    *
    * SCALE PATH — read before shipping this operator on a real corpus:
    * the output is the PAIR LIST, which is Ω(true near-dup pairs) by

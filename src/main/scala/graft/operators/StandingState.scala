@@ -257,7 +257,7 @@ object StandingState {
 
   /**
    * Dead-mass fraction: tombstoned keys / live keys. The staleness
-   * signal [[AnnIndex.rebuildIfStale]]'s reconstruction-error ratio is
+   * signal [[AnnIndex.staleness]]'s reconstruction-error ratio is
    * blind to — heavy deletes skew cell/posting distributions and grow
    * every search's anti-join without moving PQ error at all. Both
    * indexes fold this into their compaction policy

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /**
  * Physical-layout operators: multi-dimensional clustering for
- * data-skipping and target-size write compaction.
+ * data-skipping.
  *
  * At 100 TB the scan cost of a query is decided before it runs — by how
  * the files were laid out. Range-partitioning on ONE key gives perfect
@@ -45,20 +45,4 @@ object layout {
    */
   def clusterBy(df: DataFrame, key: Column, numPartitions: Int): DataFrame =
     df.repartitionByRange(numPartitions, key).sortWithinPartitions(key)
-
-  /**
-   * Target-size compaction for writes — the small-files guard. Estimates
-   * the plan's output size from Catalyst statistics (file sizes for
-   * scans, propagated through filters/projections) and coalesces to
-   * `ceil(bytes / targetBytes)` partitions. `coalesce` narrows without a
-   * shuffle; when the plan already has fewer partitions than the target
-   * it is a no-op (there is no small-files problem to fix).
-   */
-  def compactForWrite(df: DataFrame, targetBytes: Long = 128L << 20): DataFrame = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = ((est + targetBytes - 1) / targetBytes)
-      .min(BigInt(Int.MaxValue)).max(BigInt(1)).toInt
-    df.coalesce(n)
-  }
 }

@@ -75,39 +75,6 @@ object relational {
       .drop("__rn")
   }
 
-  /**
-   * J5/U3 — explode an array-of-struct child while preserving parents with
-   * empty/null children (the reference's nest-then-flatten round trip,
-   * `ShipmentDocument/run.js:144-152`, and the `[].concat.apply` flatten,
-   * `Pembelian/run.js:282`).
-   */
-  def explodePreservingParent(df: DataFrame, arrayCol: String,
-                              as: String): DataFrame =
-    df.withColumn(as, explode_outer(col(arrayCol))).drop(arrayCol)
-
-  /**
-   * J5 inverse — re-nest a child table under its parent as an
-   * array-of-struct column (the document shape the reference assembles
-   * row-by-row in JS, `ShipmentDocument/run.js:144-152`: shipment →
-   * details → items → packingReceiptItems). One shuffle on the parent
-   * key (groupBy collect_list), left-preserving: parents without
-   * children get an empty array, ready for `explode_outer` back out.
-   *
-   * @param childCols child columns to pack into the struct (all
-   *                  non-key columns when empty)
-   */
-  def nestChildren(parent: DataFrame, child: DataFrame, keys: Seq[String],
-                   as: String, childCols: Seq[String] = Nil): DataFrame = {
-    val cols = if (childCols.nonEmpty) childCols
-      else child.columns.filterNot(keys.contains).toSeq
-    val packed = child
-      .groupBy(keys.map(col): _*)
-      .agg(collect_list(struct(cols.map(col): _*)).as(as))
-    parent.join(packed, keys, "left")
-      .withColumn(as, coalesce(col(as), array().cast(
-        packed.schema(as).dataType.simpleString)))
-  }
-
   /** P4 — NOT-IN (anti) filter on a literal list
     * (`createdby not in ('dev','unit-test')`, `Pembelian/run.js:166-167`).
     * Reference semantics: NULLs are *kept* (SQL NOT IN would drop them —

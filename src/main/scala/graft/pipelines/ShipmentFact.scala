@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
-import graft.ops.relational
 
 /**
  * Shipment-document fact — the deepest nesting shape in the reference
@@ -21,43 +20,17 @@ import graft.ops.relational
  * `weight` use the `!= undefined` dialect, so 0 SURVIVES (C6 variant);
  * `isVoid` is stringified unconditionally.
  *
- * Spark-first expression: the nested assembly is
- * [[relational.nestChildren]] (ArrayType(StructType) columns — useful
- * when the document itself is the product); the fact is a flat 4-way
- * join + projection — one pass, no row-at-a-time loops. The engine
- * keeps the three child ids as extra fact columns so the merge sink
- * has a natural key (the reference's temp-table INSERT has none).
+ * Spark-first expression: the app-side nesting is never built; the fact
+ * is a flat 4-way join + projection — one pass, no row-at-a-time loops.
+ * The engine keeps the three child ids as extra fact columns so the
+ * merge sink has a natural key (the reference's temp-table INSERT has
+ * none).
  */
 object ShipmentFact extends Pipeline {
   val name = "shipment-fact"
   val sources = Seq("shipments", "shipmentDetails", "shipmentItems",
     "packingReceiptItems")
   val factKeys = Seq("shipment_code", "detail_id", "item_id", "pri_id")
-
-  /** The nested document form (4 levels), for document-shaped sinks. */
-  def assembleDocument(t: Map[String, DataFrame]): DataFrame = {
-    val itemsWithPri = relational.nestChildren(
-      t("shipmentItems"), t("packingReceiptItems"),
-      Seq("itemId"), "packingReceiptItems")
-    val detailsWithItems = relational.nestChildren(
-      t("shipmentDetails"), itemsWithPri, Seq("detailId"), "items")
-    relational.nestChildren(
-      t("shipments"), detailsWithItems, Seq("shipmentCode"), "details")
-  }
-
-  /** Engine extra: the left-preserving flatten (parents without
-    * children survive with nulls) — NOT the reference fact; kept for
-    * document-completeness audits where absence itself is the signal. */
-  def flattenPreserving(t: Map[String, DataFrame]): DataFrame =
-    t("shipments")
-      .join(t("shipmentDetails"), Seq("shipmentCode"), "left")
-      .join(t("shipmentItems"), Seq("detailId"), "left")
-      .join(t("packingReceiptItems"), Seq("itemId"), "left")
-      .select(col("shipmentCode").as("shipment_code"),
-        col("detailId").as("detail_id"), col("itemId").as("item_id"),
-        col("priId").as("pri_id"),
-        business.nullIfFalsyStr(col("productName")).as("product_name"),
-        col("quantity").as("quantity"))
 
   private def gs(c: Column): Column =
     when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))

@@ -111,6 +111,26 @@ object Main {
     case dir => ParquetConnector(dir)
   }
 
+  /** The value after the flag at `args(i)`; a flag given last fails
+    * naming itself. */
+  private[graft] def flagValue(args: Array[String], i: Int): String =
+    if (i + 1 < args.length) args(i + 1)
+    else throw new IllegalArgumentException(s"${args(i)} needs a value")
+
+  /** Parse the value of a flag or environment variable `name`; a
+    * malformed value fails naming `name` and the value. */
+  private[graft] def parseFlag[A](name: String, v: String)(f: String => A): A =
+    try f(v)
+    catch {
+      case _: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"invalid value '$v' for $name")
+    }
+
+  /** `SPARK_GRAFT_CPUS`, or 4 when unset. */
+  private[graft] def envCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(4)(parseFlag("SPARK_GRAFT_CPUS", _)(_.toInt))
+
   def main(args: Array[String]): Unit =
     if (run(args) > 0) sys.exit(1)
 
@@ -123,22 +143,27 @@ object Main {
     var warehouse = "warehouse"
     var controlPath: Option[String] = None
     var startAt: Option[Timestamp] = None
-    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    var cpus = envCpus
+    val usage =
+      "usage: graft.runner.Main <pipeline ...|--all> [--sources <dir|jsonl:dir|jdbc:url>] " +
+        "[--warehouse <dir>] [--control <path>] [--start-at <ts>] [--cpus N]"
     var i = 0
     while (i < args.length) {
+      def value = flagValue(args, i)
       args(i) match {
-        case "--sources" => sources = args(i + 1); i += 2
-        case "--warehouse" => warehouse = args(i + 1); i += 2
-        case "--control" => controlPath = Some(args(i + 1)); i += 2
-        case "--start-at" => startAt = Some(Timestamp.valueOf(args(i + 1))); i += 2
-        case "--cpus" => cpus = args(i + 1).toInt; i += 2
+        case "--sources" => sources = value; i += 2
+        case "--warehouse" => warehouse = value; i += 2
+        case "--control" => controlPath = Some(value); i += 2
+        case "--start-at" =>
+          startAt = Some(parseFlag("--start-at", value)(Timestamp.valueOf)); i += 2
+        case "--cpus" => cpus = parseFlag("--cpus", value)(_.toInt); i += 2
         case "--all" => names = Pipelines.all.map(_.name).toVector; i += 1
+        case f if f.startsWith("--") =>
+          throw new IllegalArgumentException(s"unknown flag '$f'; $usage")
         case n => names :+= n; i += 1
       }
     }
-    require(names.nonEmpty,
-      "usage: graft.runner.Main <pipeline ...|--all> [--sources <dir|jsonl:dir|jdbc:url>] " +
-        "[--warehouse <dir>] [--control <path>] [--start-at <ts>] [--cpus N]")
+    require(names.nonEmpty, usage)
 
     // reuse an active session when embedded (tests, notebooks); own and
     // stop one only when launched standalone

@@ -465,7 +465,7 @@ object Serve {
     var sources = "."
     var warehouse = "warehouse"
     var controlPath: Option[String] = None
-    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    var cpus = Main.envCpus
     var every: Option[(Long, Seq[String])] = None
     var crons: Seq[(String, Seq[String])] = Nil
     // the analog of Azure's function keys: any --key (repeatable) or
@@ -481,21 +481,22 @@ object Serve {
     var probeTable: Option[String] = None
     var i = 0
     while (i < args.length) {
+      def value = Main.flagValue(args, i)
       args(i) match {
-        case "--port" => port = args(i + 1).toInt; i += 2
-        case "--sources" => sources = args(i + 1); i += 2
-        case "--warehouse" => warehouse = args(i + 1); i += 2
-        case "--control" => controlPath = Some(args(i + 1)); i += 2
-        case "--cpus" => cpus = args(i + 1).toInt; i += 2
+        case "--port" => port = Main.parseFlag("--port", value)(_.toInt); i += 2
+        case "--sources" => sources = value; i += 2
+        case "--warehouse" => warehouse = value; i += 2
+        case "--control" => controlPath = Some(value); i += 2
+        case "--cpus" => cpus = Main.parseFlag("--cpus", value)(_.toInt); i += 2
         case "--timeout" =>
-          val secs = args(i + 1).toLong
+          val secs = Main.parseFlag("--timeout", value)(_.toLong)
           timeoutSeconds = if (secs <= 0) None else Some(secs); i += 2
-        case "--probe-table" => probeTable = Some(args(i + 1)); i += 2
+        case "--probe-table" => probeTable = Some(value); i += 2
         case "--key" =>
-          require(args(i + 1).nonEmpty, "--key must not be empty")
-          keys = keys + args(i + 1); i += 2
+          require(value.nonEmpty, "--key must not be empty")
+          keys = keys + value; i += 2
         case "--every" =>
-          val secs = args(i + 1).toLong
+          val secs = Main.parseFlag("--every", value)(_.toLong)
           val names = args.drop(i + 2).toSeq
           require(names.nonEmpty, "--every <seconds> <pipeline ...>")
           every = Some((secs, names)); i = args.length
@@ -504,7 +505,7 @@ object Serve {
         // so --key/--port may still follow a --cron group) — the
         // reference's 22 timer schedules load as 22 flags
         case "--cron" =>
-          val expr = args(i + 1)
+          val expr = value
           val names = args.drop(i + 2).takeWhile(!_.startsWith("--")).toSeq
           require(names.nonEmpty, "--cron \"<6-field expr>\" <pipeline ...>")
           crons = crons :+ ((expr, names))

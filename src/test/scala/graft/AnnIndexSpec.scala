@@ -168,6 +168,8 @@ class AnnIndexSpec extends SparkSpec {
     val expected = enc(AnnIndex.encodeCorpus(e, "vec_id", "embedding",
       cents, model))
     assert(stored === expected)
+    // the append records its fit stats for every appended row
+    assert(AnnIndex.staleness(spark, Base).appendedRows === e2.count())
     // and the appended rows are immediately searchable
     val hits = AnnIndex.ivfPqTopKBucketed(spark, e.filter(col("vec_id") < 10),
       "vec_id", "embedding", k, Base, nProbe)
@@ -369,25 +371,20 @@ class AnnIndexSpec extends SparkSpec {
     val after = AnnIndex.staleness(spark, Base)
     assert(after.ratio > 1.25, s"drifted batch must trip: $after")
     assert(after.appendedRows > 0 && after.builtRows > 0)
-    // the policy rebuilds over the current corpus and restores the
-    // baseline (fresh fit → fresh gen-0 stats; no appends → ratio 1)
+    // a rebuild over the current corpus restores the baseline (fresh
+    // fit → fresh gen-0 stats; no appends → ratio 1)
     val full = e1.unionByName(drifted)
-    assert(AnnIndex.rebuildIfStale(full, "vec_id", "embedding", Base, dim,
-      maxRatio = 1.25, nCentroids = nCent, m = 16, pqK = 16,
-      buckets = buckets))
+    def rebuild(): Unit = AnnIndex.writeAnnIndex(full, "vec_id",
+      "embedding", Base, dim, nCentroids = nCent, m = 16, pqK = 16,
+      buckets = buckets)
+    rebuild()
     assert(AnnIndex.staleness(spark, Base).ratio === 1.0)
-    // idempotent: a healthy index is left alone
-    assert(!AnnIndex.rebuildIfStale(full, "vec_id", "embedding", Base, dim,
-      maxRatio = 1.25, nCentroids = nCent, m = 16, pqK = 16,
-      buckets = buckets))
     // a legacy index (persisted before fit-stats existed) has no
-    // baseline: staleness reports +∞ and the policy HEALS it by
-    // rebuilding, which seeds the missing gen-0 row
+    // baseline: staleness reports +∞, and a rebuild seeds the missing
+    // gen-0 row
     spark.sql(s"DROP TABLE IF EXISTS ${Base}_stats")
     assert(AnnIndex.staleness(spark, Base).ratio.isPosInfinity)
-    assert(AnnIndex.rebuildIfStale(full, "vec_id", "embedding", Base, dim,
-      maxRatio = 1.25, nCentroids = nCent, m = 16, pqK = 16,
-      buckets = buckets))
+    rebuild()
     assert(AnnIndex.staleness(spark, Base).ratio === 1.0)
     // recall floor re-asserted against exact L2 over the REBUILT state
     val q = full.filter(col("vec_id") < 10)

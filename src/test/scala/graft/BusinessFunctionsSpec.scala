@@ -69,10 +69,6 @@ class BusinessFunctionsSpec extends SparkSpec {
     val dfi = Seq(5, 0).toDF("v").select(business.nullIfFalsyNum(col("v")))
     assert(dfi.collect().map(r => Option(r.get(0))).toSeq ===
       Seq(Some(5), None))
-    val dfb = Seq(true, false).toDF("v")
-      .select(business.nullIfFalsyBool(col("v")))
-    assert(dfb.collect().map(r => Option(r.get(0))).toSeq ===
-      Seq(Some(true), None))
   }
 
   test("weightedScore treats nulls as zero (FabricQC/run.js:120-124)") {

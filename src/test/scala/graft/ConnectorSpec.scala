@@ -569,6 +569,22 @@ class ConnectorSpec extends SparkSpec {
       s"ORC scan should receive the pushed filter, got:\n$plan")
   }
 
+  test("parquet connector mergeSchema reconciles evolved table schemas") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString
+    val conn = ParquetConnector(dir)
+    conn.write(Seq((1L, "a")).toDF("k", "v"), "t", SaveMode.Overwrite)
+    // schema evolves: a new column appears in later files
+    conn.write(Seq((2L, "b", 9.5)).toDF("k", "v", "score"), "t",
+      SaveMode.Append)
+    val merged = ParquetConnector(dir, mergeSchema = true).read(spark, "t")
+      .select("k", "v", "score")
+    val rows = merged.orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    assert(rows.toSeq === Seq((1L, "a", None), (2L, "b", Some(9.5))))
+  }
+
   test("registry binds logical source names; parquet and jdbc coexist") {
     val reg = ConnectorRegistry(Map(
       "purchasing" -> JdbcConnector(url),

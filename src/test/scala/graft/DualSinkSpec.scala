@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
 import graft.sink.UpsertWriter
@@ -13,10 +14,15 @@ import graft.sink.UpsertWriter
 class DualSinkSpec extends SparkSpec {
 
   private def poison = {
-    // a plan that fails during the WRITE JOB, not at plan build
-    val boom = udf((x: Long) =>
+    // a plan that fails during the WRITE JOB, not at plan build; the
+    // tasks that do not fail spin (an interrupt cannot stop them) until
+    // well after the job has failed, then open their output files
+    val boom = udf { (x: Long) =>
       if (x > 2) throw new RuntimeException("staging failure injection")
-      else x)
+      val t0 = System.nanoTime()
+      while (System.nanoTime() - t0 < 500000000L) {}
+      x
+    }
     spark.range(10).select(col("id").as("k"), boom(col("id")).as("v"))
   }
 
@@ -61,36 +67,22 @@ class DualSinkSpec extends SparkSpec {
     assert(kept === 0L)
   }
 
-  test("partitioned + sorted layout: hive dirs, pruning, merge preserved") {
+  test("crash between promote renames: history restored, nothing lost") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-layout").toString
-    val seed = spark.range(1000).select(
-      col("id").as("k"),
-      (col("id") % 4).cast("string").as("dt"),
-      (col("id") * 7).as("v"))
-    val target = UpsertWriter.Target(seed, s"$dir/fact", Seq("k"),
-      partitionBy = Seq("dt"), sortBy = Seq("k"))
-    assert(UpsertWriter.upsertTargets(spark, Seq(target)) === Seq(1000L))
-    // hive-style partition directories on disk
-    assert(new java.io.File(s"$dir/fact/dt=2").exists())
-
-    // keyed merge keeps the layout: update keys 0..99
-    val upd = spark.range(100).select(col("id").as("k"),
-      (col("id") % 4).cast("string").as("dt"), lit(-1L).as("v"))
-    assert(UpsertWriter.upsertTargets(spark, Seq(
-      target.copy(batch = upd))) === Seq(1000L))
-    val fact = spark.read.parquet(s"$dir/fact")
-    assert(fact.count() === 1000)
-    assert(fact.filter(col("v") === -1L).count() === 100)
-
-    // partition pruning reaches the scan: dt filter becomes a
-    // PartitionFilter, not a data filter
-    val plan = fact.filter(col("dt") === "1").queryExecution
-      .explainString(org.apache.spark.sql.execution.SimpleMode)
-    assert(plan.contains("PartitionFilters") &&
-      plan.replaceAll("\\s", "").contains("PartitionFilters:[isnotnull(dt"),
-      plan)
-    assert(fact.filter(col("dt") === "1").count() === 250)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    // the promote died after target→backup, before staging→target —
+    // the live table is GONE and its history sits at __old
+    val dir = Files.createTempDirectory("graft-crash").toString + "/fact"
+    UpsertWriter.upsert(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      dir, Seq("k"))
+    fs.rename(new Path(dir), new Path(dir + "__old"))
+    assert(!fs.exists(new Path(dir)))
+    val n = UpsertWriter.upsert(spark,
+      Seq((2L, "B!"), (3L, "c")).toDF("k", "v"), dir, Seq("k"))
+    assert(n === 3, "history must be restored before the merge")
+    assert(spark.read.parquet(dir).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet ===
+      Set((1L, "a"), (2L, "B!"), (3L, "c")))
   }
 
   test("failure staging the SECOND table leaves the first untouched") {
@@ -114,9 +106,8 @@ class DualSinkSpec extends SparkSpec {
     // …B still has its original row, and no staging debris remains
     val b = spark.read.parquet(s"$dir/factB").collect()
     assert(b.length === 1 && b.head.getDouble(1) === 1.0)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/factA__staging")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/factB__staging")))
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(s"$dir/factA__staging")))
+    assert(!fs.exists(new Path(s"$dir/factB__staging")))
   }
 }

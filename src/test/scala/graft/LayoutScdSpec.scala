@@ -107,19 +107,4 @@ class LayoutScdSpec extends SparkSpec {
     assert(plan.contains("rangepartitioning"),
       s"expected range partitioning on z-key, got:\n$plan")
   }
-
-  test("compactForWrite computes partitions from size estimate") {
-    import spark.implicits._
-    val df = (1 to 10000).map(i => (i.toLong, s"payload$i"))
-      .toDF("id", "s").repartition(32)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(est > 0)
-    // a target far above the estimate collapses to one partition
-    val one = layout.compactForWrite(df, targetBytes = Long.MaxValue)
-    assert(one.rdd.getNumPartitions === 1)
-    // a tiny target keeps (at most) the existing partitioning — coalesce
-    // never widens
-    val many = layout.compactForWrite(df, targetBytes = 1L)
-    assert(many.rdd.getNumPartitions === 32)
-  }
 }

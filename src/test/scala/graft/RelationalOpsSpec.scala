@@ -45,7 +45,7 @@ class RelationalOpsSpec extends SparkSpec {
     val rates = Seq((1, 99, 2.0)).toDF("rate_id", "rate_ts", "rate")
     val got = relational.asOfJoin(docs, rates, lit(true), col("doc_ts"),
         col("rate_ts"), col("doc_id"))
-      .select(graft.functions.business.defaultRate(col("rate")))
+      .select(coalesce(col("rate"), lit(1.0)))
       .collect().head.getDouble(0)
     assert(got === 1.0)
   }
@@ -289,15 +289,5 @@ class RelationalOpsSpec extends SparkSpec {
         s"shard ${r.getAs[Long]("shard_id")} underfull: $r")
     }
     graft.ops.materialize.releaseAll()
-  }
-
-  test("explodePreservingParent keeps parents with null/empty children (J5/U3)") {
-    import spark.implicits._
-    val df = Seq((1, Seq("a", "b")), (2, Seq.empty[String]))
-      .toDF("id", "items")
-    val got = relational.explodePreservingParent(df, "items", "item")
-      .orderBy("id", "item")
-      .collect().map(r => (r.getInt(0), Option(r.getString(1)))).toSeq
-    assert(got === Seq((1, Some("a")), (1, Some("b")), (2, None)))
   }
 }

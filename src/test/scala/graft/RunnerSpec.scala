@@ -7,7 +7,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions.lit
 
 import graft.control.WatermarkManager
-import graft.runner.{Main, Pipelines}
+import graft.runner.{Main, Pipelines, Serve}
 import graft.sources.ParquetConnector
 
 /** The operational entry point (`graft.runner.Main`) run exactly as an
@@ -170,5 +170,27 @@ class RunnerSpec extends SparkSpec {
     Pipelines.aliases.values.foreach(v =>
       assert(Pipelines.all.exists(_.name == v), s"alias target $v missing"))
     intercept[IllegalArgumentException](Pipelines.byName("nope"))
+  }
+
+  test("runner flags fail naming the flag and its value") {
+    def msg(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    // every check fails while parsing, before any session or server starts
+    assert(msg(Main.run(Array("pembelian", "--cpus", "four"))) ===
+      "invalid value 'four' for --cpus")
+    assert(msg(Main.run(Array("pembelian", "--start-at", "today"))) ===
+      "invalid value 'today' for --start-at")
+    assert(msg(Main.run(Array("pembelian", "--cpus"))) ===
+      "--cpus needs a value")
+    assert(msg(Main.run(Array("pembelian", "--bogus")))
+      .startsWith("unknown flag '--bogus'"))
+    for ((flag, bad) <- Seq("--port" -> "80x", "--cpus" -> "",
+        "--timeout" -> "1.5", "--every" -> "soon"))
+      assert(msg(Serve.main(Array(flag, bad, "pembelian"))) ===
+        s"invalid value '$bad' for $flag")
+    assert(msg(Serve.main(Array("--port", "1", "--timeout"))) ===
+      "--timeout needs a value")
+    assert(msg(Main.parseFlag("SPARK_GRAFT_CPUS", "4x")(_.toInt)) ===
+      "invalid value '4x' for SPARK_GRAFT_CPUS")
   }
 }

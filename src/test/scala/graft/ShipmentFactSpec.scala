@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.pipelines.ShipmentFact
 
@@ -37,26 +36,6 @@ class ShipmentFactSpec extends SparkSpec {
         "productName", "quantity", "uomUnit", "weight"))
   }
 
-  test("assembleDocument builds the 4-level ArrayType(StructType) document") {
-    val doc = ShipmentFact.assembleDocument(fixtures)
-    val detailsType = doc.schema("details").dataType
-    assert(detailsType.isInstanceOf[ArrayType])
-    val detailStruct = detailsType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val itemStruct = detailStruct("items").dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    assert(itemStruct.fieldNames.contains("packingReceiptItems"))
-    // parents without children survive with empty arrays
-    val sh2 = doc.filter(col("shipmentCode") === "SH-2").collect().head
-    assert(sh2.getSeq[Any](sh2.fieldIndex("details")).isEmpty)
-    // explode back out reproduces the flat cardinality
-    val exploded = doc
-      .select(col("shipmentCode"), explode_outer(col("details")).as("d"))
-      .select(col("shipmentCode"), explode_outer(col("d.items")).as("i"))
-      .select(col("shipmentCode"), explode_outer(col("i.packingReceiptItems")))
-    assert(exploded.count() === 5) // 3 PRIs + silk item-less detail + SH-2
-  }
-
   test("transform drops parents without children (reference inner loops)") {
     val fact = ShipmentFact.transform(fixtures)
     val rows = fact.collect()
@@ -77,14 +56,5 @@ class ShipmentFactSpec extends SparkSpec {
     assert(byPri(9001L).getAs[String]("delivery_date") === "2020-01-05")
     assert(byPri(9001L).getAs[String]("is_void") === "false")
     assert(byPri(9001L).getAs[String]("production_order_no") === "PO\"101")
-  }
-
-  test("flattenPreserving keeps every level when children are absent") {
-    val flat = ShipmentFact.flattenPreserving(fixtures)
-    assert(flat.count() === 5) // 3 PRI rows + item-less Silk + SH-2
-    val sh2 = flat.filter(col("shipment_code") === "SH-2").collect().head
-    assert(sh2.getAs[Any]("detail_id") === null)
-    val silk = flat.filter(col("detail_id") === 102L).collect().head
-    assert(silk.getAs[Any]("item_id") === null)
   }
 }
