@@ -50,6 +50,19 @@ class WatermarkManager(spark: SparkSession, path: String) {
     if (row.isEmpty) epoch else row.head.getTimestamp(0)
   }
 
+  /** Every pipeline's newest log row (by `finish`) with its
+    * [[lastWatermark]], sorted by pipeline name — the `/api/status`
+    * view, from ONE collect of the log instead of a read per pipeline.
+    * The watermark rule is [[lastWatermark]]'s: `start` of the latest
+    * Successful run, the epoch when there is none. */
+  def latestRuns(): Seq[(org.apache.spark.sql.Row, Timestamp)] =
+    log.orderBy(col("finish").desc).collect()
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+      .map { case (_, rs) => // newest finish first
+        (rs.head, rs.find(_.getString(4) == "Successful")
+          .map(_.getTimestamp(1)).getOrElse(epoch))
+      }
+
   /** Append one run-outcome row (success or stringified failure — the
     * reference logs both, `Pembelian/run.js:14-37`). `note` rides in
     * the free-text executionTime column (e.g. the late-fire flag a

@@ -120,6 +120,13 @@ object business {
 
   def nullIfFalsyStr(c: Column): Column = when(c.isNotNull && c =!= "", c)
 
+  /** C6-gated T1 — `item.x ? item.x.replace(/'/g, '"') : null`: a
+    * falsy string (null, "") maps to NULL, anything else is
+    * quote-swapped. Ref: `Pembelian/run.js:216-279` (the per-column
+    * truthiness gates around the `:230` swap). */
+  def truthySwap(c: Column): Column =
+    when(nullIfFalsyStr(c).isNotNull, quoteSwap(c))
+
   /** C6 variant — only null/undefined gate (`!= undefined` guards,
     * `Kanban/run.js:89`). Identity on 0/"" — kept for the decision table. */
   def nullIfUndefined(c: Column): Column = c

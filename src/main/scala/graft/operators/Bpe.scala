@@ -307,40 +307,6 @@ object Bpe {
   def decode(ids: Column, model: BpeModel): Column =
     graft.plans.Kernels.bpeDecode(ids, model.mergesLit)
 
-  /**
-   * Persist a fitted model as a catalog table `<base>_bpe_merges`
-   * (rank, l, r, merged, id — single-file artifact, the
-   * [[AnnIndex.writeAnnIndex]] model-table discipline): a tokenizer is
-   * a CORPUS ARTIFACT that every downstream job must share exactly, so
-   * it lives in the warehouse, not in a driver variable. Overwrite is
-   * idempotent for a deterministic fit.
-   */
-  def writeBpeModel(spark: org.apache.spark.sql.SparkSession,
-                    model: BpeModel, base: String): Unit = {
-    require(!base.contains("."),
-      s"model base must be an unqualified table name, got '$base'")
-    import spark.implicits._
-    // drop a stale registration AND any orphaned warehouse location a
-    // previous session left (AnnIndex's model-table discipline)
-    AnnIndex.dropStale(spark, s"${base}_bpe_merges")
-    mergesRows(model).toDF("rank", "l", "r", "merged", "id")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${base}_bpe_merges")
-  }
-
-  /** Read a persisted model back; ranks re-ordered from the table, so
-    * the round trip is exact regardless of file order. */
-  def readBpeModel(spark: org.apache.spark.sql.SparkSession,
-                   base: String): BpeModel = {
-    val rows = spark.table(s"${base}_bpe_merges")
-      .select(col("rank").cast("int"), col("l"), col("r"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1)
-    require(rows.zipWithIndex.forall { case ((rk, _, _), i) => rk == i },
-      s"${base}_bpe_merges ranks are not contiguous from 0")
-    BpeModel(rows.toIndexedSeq.map { case (_, l, r) => (l, r) })
-  }
-
   /** (rank, l, r, merged, id) rows — the oracle-dumpable model. */
   def mergesRows(model: BpeModel): Seq[(Int, String, String, String, Int)] =
     model.merges.zipWithIndex.map { case ((l, r), i) =>

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType,
+  IntegerType, LongType, ShortType}
 
 /**
  * Corpus-level statistics for training-data pipelines — the operators
@@ -391,8 +392,19 @@ object CorpusStats {
           count(lit(1)).cast("double") / lit(1e6)).as("avg_nll"))
   }
 
+  /** Corpus-wide hashed-bigram bucket counts — the fit side of the
+    * DSIR model ([[dsirModelFromCounts]]). */
+  def dsirBucketCounts(df: DataFrame, textCol: String,
+                       buckets: Int): DataFrame =
+    df.select(explode(TextAnalysis.ngrams(
+        TextAnalysis.tokens(col(textCol)), 2)).as("g"))
+      .select(pmod(Dedup.md5Hash60(col("g")), lit(buckets.toLong))
+        .as("bucket"))
+      .groupBy("bucket").agg(count(lit(1)).as("c"))
+
   /**
-   * DSIR model — Data Selection via Importance Resampling (Xie et al.
+   * DSIR model from the two corpora's bucket counts ([[dsirBucketCounts]])
+   * — Data Selection via Importance Resampling (Xie et al.
    * 2023, arXiv:2302.03169): per-bucket quantized log-likelihood
    * ratios of a hashed-bigram bag model fit on a TARGET corpus (the
    * distribution you want more of) against one fit on the RAW corpus.
@@ -411,23 +423,6 @@ object CorpusStats {
    * plus a broadcast of B rows; nothing collects. B is model-sized
    * (thousands), so the model broadcasts at any corpus scale.
    */
-  def dsirModel(raw: DataFrame, rawText: String,
-                target: DataFrame, targetText: String,
-                buckets: Int = 4096, alpha: Double = 1.0): DataFrame =
-    dsirModelFromCounts(dsirBucketCounts(raw, rawText, buckets),
-      dsirBucketCounts(target, targetText, buckets), buckets, alpha)
-
-  /** Corpus-wide hashed-bigram bucket counts — the fit side of
-    * [[dsirModel]], public so a caller holding per-doc counts (or a
-    * pinned intermediate) can re-aggregate instead of re-exploding. */
-  def dsirBucketCounts(df: DataFrame, textCol: String,
-                       buckets: Int): DataFrame =
-    df.select(explode(TextAnalysis.ngrams(
-        TextAnalysis.tokens(col(textCol)), 2)).as("g"))
-      .select(pmod(Dedup.md5Hash60(col("g")), lit(buckets.toLong))
-        .as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("c"))
-
   private def dsirModelFromCounts(cr: DataFrame, ct: DataFrame,
                                   buckets: Int, alpha: Double): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
@@ -446,36 +441,6 @@ object CorpusStats {
             log(coalesce(col("n_raw"), lit(0L)).cast("double")
               + alpha * buckets)) * lit(1e6) + lit(0.5))
           .cast("long").as("lambda_q"))
-  }
-
-  /**
-   * Per-document DSIR importance score under a [[dsirModel]]: the
-   * BIGINT sum of bucket-count × λ_q over the document's hashed
-   * bigrams — exact in any fold order, so engines can't disagree on a
-   * reduction. One (doc, bucket)-keyed aggregation, a broadcast join
-   * against the B-row model, one doc-keyed aggregation — linear,
-   * shuffle-minimal, 100 TB-safe. Docs with no bigrams score 0 (the
-   * neutral weight e⁰). The bucket count is DERIVED from the model
-   * itself ([[dsirModel]] emits one row per bucket), so a caller can
-   * never score with a modulus that disagrees with the fit — a
-   * mismatch would silently drop every bigram at the model join.
-   */
-  def dsirScores(docs: DataFrame, idCol: String, textCol: String,
-                 model: DataFrame): DataFrame = {
-    val nBuckets = broadcast(model.agg(count(lit(1)).as("__B")))
-    val perDoc = docs.select(col(idCol).as("doc_id"),
-        explode(TextAnalysis.ngrams(
-          TextAnalysis.tokens(col(textCol)), 2)).as("g"))
-      .crossJoin(nBuckets)
-      .select(col("doc_id"),
-        pmod(Dedup.md5Hash60(col("g")), col("__B")).as("bucket"))
-      .groupBy("doc_id", "bucket").agg(count(lit(1)).as("c"))
-      .join(broadcast(model), "bucket")
-      .groupBy("doc_id")
-      .agg(sum(col("c") * col("lambda_q")).as("score_q"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("score_q"), lit(0L)).as("score_q"))
   }
 
   /**
@@ -564,17 +529,6 @@ object CorpusStats {
     docs.join(kept.withColumnRenamed("doc_id", idCol), idCol)
   }
 
-  /** The repetition filter a pipeline composes from the score: keep
-    * documents whose top n-gram covers at most `maxFraction` of the
-    * text (Gopher uses 0.20 for 2-grams). */
-  def repetitionFilter(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, maxFraction: Double): DataFrame =
-    docs.join(
-      topNgramFraction(docs, idCol, textCol, n)
-        .filter(col("top_ngram_fraction") > maxFraction)
-        .select(col("doc_id").as(idCol)),
-      Seq(idCol), "left_anti")
-
   /**
    * Training-shard manifest — the "write the corpus as shards of
    * ~`tokensPerShard` tokens" accounting step of every export (a
@@ -615,67 +569,6 @@ object CorpusStats {
       .groupBy("shard_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
         min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-  }
-
-  /**
-   * Materialize the actual training shards the manifest accounts for —
-   * the delivery step after [[shardManifest]]: documents land in
-   * `~tokensPerShard` shards IN EPOCH-SHUFFLE ORDER, one parquet file
-   * per shard under `path/shard_id=N/`, rows within a shard stored in
-   * ascending shuffle position (the order a trainer streams them).
-   *
-   * The pipeline is the manifest's own math applied to the shuffled
-   * total order: [[epochShuffle]] assigns contiguous positions (range
-   * partition + offsets, no RNG state, no single reducer), the global
-   * prefix sum over THAT order assigns `shard_id =
-   * ⌊exclusive-prefix-tokens / tokensPerShard⌋`, and the write hash-
-   * partitions by shard id so each shard is exactly one task's output
-   * file. Deterministic end to end — a re-run overwrites with
-   * bit-identical shards — and a different `epochSalt` delivers an
-   * independent permutation of the same corpus.
-   *
-   * @return the manifest of what was written, derived from the same
-   *         assignment: (shard_id, n_docs, n_tokens, first_pos,
-   *         last_pos) — positions, not doc ids, because the shuffled
-   *         order is the delivery contract (ShardWriterSpec asserts
-   *         files ≡ manifest and position contiguity)
-   */
-  def writeTrainingShards(docs: DataFrame, idCol: String, textCol: String,
-                          tokensPerShard: Long, path: String,
-                          epochSalt: String = "epoch0",
-                          tokenCount: Option[Column] = None): DataFrame = {
-    require(tokensPerShard > 0, s"tokensPerShard must be > 0")
-    // caller-supplied accounting (r17): pass
-    // `Some(Bpe.tokenCount(col(textCol), model))` and delivery meters
-    // EXACT tokens — the expression is evaluated against the raw row,
-    // so it must reference the caller's own column names
-    val nTokExpr = tokenCount
-      .getOrElse(TextAnalysis.tokenCount(col(textCol)))
-    val shuffled = epochShuffle(
-      docs.select(col(idCol).as("doc_id"), col(textCol).as("text"),
-        // null text = empty document: a null n_tok would null the
-        // prefix sum and shard_id, silently routing the row to the
-        // Hive default partition outside the manifest
-        coalesce(nTokExpr.cast("long"), lit(0L)).as("n_tok")),
-      "doc_id", epochSalt)
-    val assigned = graft.ops.relational.contiguousPrefixSum(shuffled,
-        Seq(col("shuffle_pos")), col("n_tok"), "cum")
-      .select(col("doc_id"), col("text"), col("n_tok"), col("shuffle_pos"),
-        expr(s"CAST((cum - n_tok) DIV $tokensPerShard AS BIGINT)")
-          .as("shard_id"))
-    // pin: the shard assignment feeds the file write AND the returned
-    // manifest; without it the prefix-sum pass (offset-map action
-    // included) runs twice
-    val pinned = graft.ops.materialize(assigned)
-    pinned
-      .repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("shuffle_pos"))
-      .write.partitionBy("shard_id")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-    pinned.groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
-        min(col("shuffle_pos")).as("first_pos"),
-        max(col("shuffle_pos")).as("last_pos"))
   }
 
   /**
@@ -826,17 +719,16 @@ object CorpusStats {
    * `observe` metric instead of a second full tokenize, and inline as
    * literals so ln(2N+2) constant-folds), and the query vocabulary —
    * eval probes, tiny — gates the token stream BEFORE the (doc_id,
-   * term) aggregation: with `collectVocab` (default) the gate fuses
-   * into the tokenize projection itself as an `InSet` array filter, so
-   * a non-query token never even materializes as an exploded row (r20,
-   * §2.3 one step past the r19 broadcast semi-join, which still
-   * emitted every corpus token as a row before dropping it); with
-   * `collectVocab = false` the r19 broadcast semi-join gate on the
-   * exploded stream remains. Either way the only corpus-proportional
-   * work is the in-memory tokenize+filter: the aggregation, its
-   * exchange, df, idf and scoring are all query-vocabulary-
-   * proportional (pre-r19 the aggregate exchanged the corpus's
-   * whole vocabulary and was gated after). The gate keeps every
+   * term) aggregation: the vocabulary is collected driver-side and the
+   * gate fuses into the tokenize projection itself as an `InSet` array
+   * filter, so a non-query token never even materializes as an
+   * exploded row (r20, §2.3 one step past the r19 broadcast semi-join,
+   * which still emitted every corpus token as a row before dropping
+   * it). The only corpus-proportional work is the in-memory
+   * tokenize+filter: the aggregation, its exchange, df, idf and
+   * scoring are all query-vocabulary-proportional (pre-r19 the
+   * aggregate exchanged the corpus's whole vocabulary and was gated
+   * after). The gate keeps every
    * occurrence of a query term, so tf/len and df (counted FROM the
    * gated postings) are exactly the full-corpus values. No cartesian, and — crucially
    * — NO per-probe sort: the final top-k is the mergeable `graft_topk`
@@ -850,56 +742,35 @@ object CorpusStats {
    * contrib_u ≤ 2.2·idf_µ < 1.4e8 and ≤ 10⁷ distinct query terms per
    * probe (the doc-length ceiling) bound score_u < 1.4e15 < 2⁵³.
    *
-   * `broadcastProbes` (default true) asserts the probe-side contract:
-   * qterms/qvocab/idf are all probe-vocabulary-sized and are broadcast.
-   * When the probe set itself grows with the corpus (an eval-sweep
-   * shape, not a retrieval shape — q127's registry construction probes
-   * ~1% of docs), pass false: the term-keyed joins fall back to shuffle
-   * joins instead of shipping a corpus-proportional table to every
-   * executor. `dfCap` < 1.0 additionally drops probe terms whose
-   * document frequency exceeds `dfCap·N` (stopword gating): scores
-   * change by construction — terms with df ≈ N carry idf ≈ ln(1+1/(2df))
-   * ≈ 0 yet dominate the scored-row count — so the default 1.0 keeps
-   * the exact Okapi semantics the oracle replays. `collectVocab`
-   * (default true, active only with broadcastProbes) collects the
-   * probe vocabulary driver-side to fuse the gate into the tokenize
-   * projection; it is bounded by the probe batch's vocabulary — pass
-   * false when that is itself unbounded and the plan-embedded InSet
-   * would bloat the task binary.
+   * A probe vocabulary above [[Retrieval.ProbeBound]] terms (an
+   * eval-sweep shape, where the probe set grows with the corpus) is
+   * not collected: the gate becomes a plain join ABOVE the (doc_id,
+   * term) aggregation (a shuffle-join gate below it would move the raw
+   * token stream), and no probe-vocabulary-sized side is forced
+   * through a broadcast — AQE still broadcasts a side that turns out
+   * small. Scores are identical on both plans. `dfCap` < 1.0
+   * additionally drops probe terms whose document frequency exceeds
+   * `dfCap·N` (stopword gating): scores change by construction —
+   * terms with df ≈ N carry idf ≈ ln(1+1/(2df)) ≈ 0 yet dominate the
+   * scored-row count — so the default 1.0 keeps the exact Okapi
+   * semantics the oracle replays.
    */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, qIdCol: String, qTextCol: String,
-               k: Int, broadcastProbes: Boolean = true,
-               dfCap: Double = 1.0,
-               collectVocab: Boolean = true): DataFrame = {
+               k: Int, dfCap: Double = 1.0): DataFrame =
+    bm25TopKWithin(docs, idCol, textCol, queries, qIdCol, qTextCol, k,
+      dfCap, Retrieval.ProbeBound)
+
+  /** [[bm25TopK]] with the probe-vocabulary bound as a parameter — the
+    * entry the specs use to run both sides of it. */
+  private[graft] def bm25TopKWithin(docs: DataFrame, idCol: String,
+                                    textCol: String, queries: DataFrame,
+                                    qIdCol: String, qTextCol: String,
+                                    k: Int, dfCap: Double,
+                                    probeBound: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(dfCap > 0.0 && dfCap <= 1.0, s"dfCap must be in (0,1], got $dfCap")
-    // the top-k aggregate carries doc_id through a LONG slot; a
-    // non-integral id (string '007', fractional decimal) would be
-    // silently corrupted or nulled by the round-trip cast, so reject it
-    // up front — the keep-first/tie-break contract (smaller doc_id
-    // wins) is only order-preserving under an exact integral cast.
-    // Resolve the field the way THIS session resolves columns — honor
-    // spark.sql.caseSensitive, so the type check always inspects the
-    // same field `col(idCol)` later binds to (under case-sensitive
-    // analysis two fields may differ only in case); scale-0 decimals
-    // are exact integral values and pass, provided they fit a LONG
-    // (precision ≤ 18 guarantees it)
-    val resolver = docs.sparkSession.sessionState.analyzer.resolver
-    val idField = docs.schema.find(f => resolver(f.name, idCol))
-      .getOrElse(throw new IllegalArgumentException(
-        s"bm25TopK: id column $idCol not found in " +
-          s"[${docs.schema.fieldNames.mkString(", ")}]"))
-    idField.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case d: DecimalType if d.scale == 0 && d.precision <= 18 => ()
-      case other => throw new IllegalArgumentException(
-        s"bm25TopK requires an integral id column (doc ids ride the " +
-          s"top-k aggregate as LONG); got $idCol: ${other.simpleString}. " +
-          "Map non-integral ids to a unique integral surrogate first.")
-    }
-    def probeSide(d: DataFrame): DataFrame =
-      if (broadcastProbes) broadcast(d) else d
+    val idType = integralIdType(docs, idCol, "bm25TopK")
     // r20 (guide §6/§1 — one corpus text pass, not two): the corpus
     // scalars N/T ride the SAME pass that builds the gated postings,
     // as an `observe` metric on the tokenized stream harvested when
@@ -914,71 +785,47 @@ object CorpusStats {
       .observe(obs, count(lit(1)).as("n_docs"),
         coalesce(sum(greatest(size(col("__toks")), lit(0)).cast("long")),
           lit(0L)).as("n_toks"))
-    // one corpus explode → (doc_id, term, tf, len); len rides the
-    // aggregate (constant per doc) instead of a second self-join
-    val rawPosts = toks
-      .select(col("doc_id"), size(col("__toks")).cast("long").as("len"),
-        explode(col("__toks")).as("term"))
     val qterms = queries.select(col(qIdCol).as("q_id"),
         explode(TextAnalysis.tokens(col(qTextCol))).as("term"))
       .distinct()
-    // gate the postings on the query vocabulary FIRST — everything
-    // after this join is query-vocabulary-proportional. The gated
-    // postings feed BOTH the df count and the scoring join, so they
-    // are pinned: the corpus-proportional explode runs once.
-    //
-    // r19 gate placement: with broadcastable probes the vocabulary
-    // gate sits BELOW the (doc_id, term) aggregation — the broadcast
-    // semi-join filters the exploded token stream map-side, so the
-    // hash aggregate and its exchange process only query-term
-    // occurrences instead of the corpus's whole vocabulary (guide
-    // §2.3 "project/filter before the exchange": the exchange drops
-    // from corpus-vocabulary-sized to probe-vocabulary-sized, the
-    // dominant shuffle of the per-call retrieval shape). tf/len are
-    // unchanged — the gate keeps EVERY occurrence of a query term, so
-    // per-doc counts and the ridden doc length are exact, and df
-    // downstream still counts true corpus document frequency. With
-    // broadcastProbes = false the gate stays ABOVE the aggregation:
-    // a shuffle-join gate below it would move the raw token stream
-    // (corpus-token-sized) through an exchange, strictly worse than
-    // shuffling the aggregated postings.
     val qvocab = qterms.select(col("term")).distinct()
-    // the pin stays load-bearing after the r19 gate move: without it
-    // the gated explode+aggregate re-runs once per consumer subtree
-    // (measured r19: 5.8–8.1 s vs 1.6–2.4 s pinned at sf0.1 — AQE
-    // plans the duplicate subtrees as separate query stages and no
-    // ReusedExchange appears)
-    val gated = graft.ops.materialize(
-      if (broadcastProbes && collectVocab) {
-        // r20 (§2.3 taken one step further): with a driver-known probe
-        // vocabulary the gate fuses INTO the tokenize projection — a
-        // token matching no probe term never materializes as an
-        // exploded row, so the Generate emits query-term occurrences
-        // only and the broadcast semi-join disappears from the plan.
-        // tf/len/df are unchanged: every occurrence of a query term is
-        // kept, and `len` is the FULL doc token count, sized before
-        // the gate. The collect is bounded by the probe batch's
-        // vocabulary (the LexIndex.bm25TopKIndexed collectVocab
-        // standing); pass collectVocab = false when the probe
-        // vocabulary itself is unbounded.
-        val vocab = qvocab.collect().map(_.getString(0)).toSeq
+    val vocab = Retrieval.collectWithin(qvocab, probeBound)
+      .map(_.map(_.getString(0)).toSeq)
+    // gate the postings on the query vocabulary FIRST — everything
+    // after the gate is query-vocabulary-proportional. The gated
+    // postings feed BOTH the df count and the scoring join, so they
+    // are pinned: the corpus-proportional explode runs once (measured
+    // r19: 5.8–8.1 s vs 1.6–2.4 s pinned at sf0.1 — AQE plans the
+    // duplicate subtrees as separate query stages and no ReusedExchange
+    // appears). tf/len are unchanged by either gate — it keeps EVERY
+    // occurrence of a query term, and `len` is the FULL doc token
+    // count, sized before the gate — so df downstream still counts true
+    // corpus document frequency.
+    val gated = graft.ops.materialize(vocab match {
+      case Some(v) =>
+        // r20 (§2.3): with a driver-known probe vocabulary the gate
+        // fuses INTO the tokenize projection — a token matching no
+        // probe term never materializes as an exploded row, so the
+        // Generate emits query-term occurrences only and the
+        // aggregation and its exchange are probe-vocabulary-sized
         val gatedToks =
-          if (vocab.isEmpty) filter(col("__toks"), _ => lit(false))
-          else filter(col("__toks"), t => t.isin(vocab: _*))
+          if (v.isEmpty) filter(col("__toks"), _ => lit(false))
+          else filter(col("__toks"), t => t.isin(v: _*))
         toks.select(col("doc_id"),
             size(col("__toks")).cast("long").as("len"),
             explode(gatedToks).as("term"))
           .groupBy("doc_id", "term")
           .agg(count(lit(1)).as("tf"), max(col("len")).as("len"))
-      } else if (broadcastProbes)
-        rawPosts.join(broadcast(qvocab), "term")
+      case None =>
+        // one corpus explode → (doc_id, term, tf, len), gated AFTER the
+        // aggregation by a plain join
+        toks.select(col("doc_id"),
+            size(col("__toks")).cast("long").as("len"),
+            explode(col("__toks")).as("term"))
           .groupBy("doc_id", "term")
           .agg(count(lit(1)).as("tf"), max(col("len")).as("len"))
-      else
-        rawPosts.groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf"), max(col("len")).as("len"))
-          .join(qvocab, "term"))
-    val dfx = gated.groupBy("term").agg(count(lit(1)).as("df"))
+          .join(qvocab, "term")
+    })
     // corpus scalars N/T from the observed metrics (computed in the
     // pin's single corpus pass — every doc counts in N, null-text docs
     // pin to 0 tokens, matching the oracle's skip-null sum exactly)
@@ -986,20 +833,71 @@ object CorpusStats {
       val mx = obs.get
       (mx("n_docs").asInstanceOf[Long], mx("n_toks").asInstanceOf[Long])
     }
-    val idf = dfx
+    bm25Scores(gated, qterms, k, dfCap, idType, hinted = vocab.isDefined,
+      lit(nDocs), lit(nToks), identity)
+  }
+
+  /** The doc-id contract of both BM25 operators: ids ride the top-k
+    * aggregate as LONG, so a non-integral id (string '007', fractional
+    * decimal) would be silently corrupted or nulled by the round-trip
+    * cast — reject it up front (the keep-first/tie-break contract,
+    * smaller doc_id wins, is only order-preserving under an exact
+    * integral cast). The field resolves the way THIS session resolves
+    * columns — honoring spark.sql.caseSensitive, so the check always
+    * inspects the field `col(idCol)` later binds to; scale-0 decimals
+    * are exact integral values and pass, provided they fit a LONG
+    * (precision ≤ 18). Returns the id type the output carries back. */
+  private[operators] def integralIdType(df: DataFrame, idCol: String,
+                                        op: String): DataType = {
+    val resolver = df.sparkSession.sessionState.analyzer.resolver
+    val idField = df.schema.find(f => resolver(f.name, idCol))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$op: id column $idCol not found in " +
+          s"[${df.schema.fieldNames.mkString(", ")}]"))
+    idField.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case d: DecimalType if d.scale == 0 && d.precision <= 18 => ()
+      case other => throw new IllegalArgumentException(
+        s"$op requires an integral id column (doc ids ride the " +
+          s"top-k aggregate as LONG); got $idCol: ${other.simpleString}. " +
+          "Map non-integral ids to a unique integral surrogate first.")
+    }
+    idField.dataType
+  }
+
+  /**
+   * The scoring tail of both BM25 operators — idf, per-term
+   * contributions, the top-k aggregate — shared so [[bm25TopK]] and
+   * [[LexIndex.bm25TopKIndexed]] are bit-identical by construction.
+   * `gated` holds the probe vocabulary's (term, doc_id, tf, len)
+   * postings, `qterms` the (q_id, term) pairs; `withTotals` attaches
+   * whatever the `nDocs`/`nToks` corpus-scalar columns read. `hinted`
+   * broadcasts the probe-vocabulary-sized sides — only when the
+   * vocabulary is known to be within the probe bound.
+   */
+  private[operators] def bm25Scores(gated: DataFrame, qterms: DataFrame,
+                                    k: Int, dfCap: Double, idType: DataType,
+                                    hinted: Boolean, nDocs: Column,
+                                    nToks: Column,
+                                    withTotals: DataFrame => DataFrame)
+      : DataFrame = {
+    def side(d: DataFrame): DataFrame = if (hinted) broadcast(d) else d
+    // true corpus df per query term: the gate keeps every posting of a
+    // query term, so this count equals the ungated corpus's
+    val idf = withTotals(gated.groupBy("term").agg(count(lit(1)).as("df")))
       .filter(col("df").cast("double")
-        <= lit(dfCap) * lit(nDocs).cast("double"))
+        <= lit(dfCap) * nDocs.cast("double"))
       .select(col("term"),
-        floor((log(lit(nDocs).cast("double") * 2 + 2)
+        floor((log(nDocs.cast("double") * 2 + 2)
              - log(col("df").cast("double") * 2 + 1)) * lit(1e6) + lit(0.5))
           .cast("long").as("idf_u"),
-        lit(nDocs).as("n_docs"), lit(nToks).as("n_toks"))
+        nDocs.as("n_docs"), nToks.as("n_toks"))
     // tf/len at decimal(10,0): the documented ceiling is 10⁷ tokens/doc,
     // and the widened cast moves the silent overflow-to-null edge out to
     // 10¹⁰ — num ≤ 6.2e7·22·10¹⁰·10¹⁵ ≈ 1.4e34 still inside DECIMAL(38,0)
     val contrib = gated
-      .join(probeSide(idf), "term")
-      .join(probeSide(qterms), "term")
+      .join(side(idf), "term")
+      .join(side(qterms), "term")
       .select(col("q_id"), col("doc_id"),
         (col("idf_u").cast("decimal(8,0)") * lit(22)
            * col("tf").cast("decimal(10,0)")
@@ -1018,7 +916,6 @@ object CorpusStats {
     // bounded top-k: map-side partials cap every task at k rows per
     // probe; ties break to the smaller doc_id, identical to the
     // row_number() (score_u DESC, doc_id ASC) formulation
-    val idType = idField.dataType
     scored.groupBy(col("q_id"))
       .agg(graft.plans.Kernels.topK(col("score_u").cast("double"),
         col("doc_id").cast("long"), lit(k)).as("__topk"))

@@ -696,7 +696,7 @@ object Dedup {
   def resetDedupState(spark: org.apache.spark.sql.SparkSession,
                       base: String): Unit =
     for (t <- Seq("sigs", "bands", "tombstones"))
-      AnnIndex.dropStale(spark, s"${base}_$t")
+      StandingState.dropStale(spark, s"${base}_$t")
 
   /**
    * Bucket-preserving compaction of the [[writeDedupState]] tables —
@@ -727,25 +727,7 @@ object Dedup {
         StandingState.minusTombstones(spark, spark.table(table),
           s"${base}_tombstones", "doc_id"))
     }
-    AnnIndex.dropStale(spark, s"${base}_tombstones")
-  }
-
-  /** Dead-mass fraction of the dedup memory: tombstoned docs / live
-    * docs — the [[AnnIndex.tombstoneFraction]] twin. */
-  def tombstoneFraction(spark: org.apache.spark.sql.SparkSession,
-                        base: String): Double =
-    StandingState.deadFraction(spark, s"${base}_tombstones",
-      spark.table(s"${base}_sigs").count())
-
-  /** Compact iff the tombstone mass crossed `maxDeadFraction` — the
-    * automatic delete-loop trigger ([[AnnIndex.compactIfDead]]).
-    * Returns true when a compaction ran. */
-  def compactIfDead(spark: org.apache.spark.sql.SparkSession,
-                    base: String, maxDeadFraction: Double = 0.3,
-                    buckets: Int = 64): Boolean = {
-    val dead = tombstoneFraction(spark, base) > maxDeadFraction
-    if (dead) compactDedupState(spark, base, buckets)
-    dead
+    StandingState.dropStale(spark, s"${base}_tombstones")
   }
 
   /**

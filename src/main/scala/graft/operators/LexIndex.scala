@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,16 +29,15 @@ import org.apache.spark.sql.functions._
  *    same count the per-call plan produces (the gate keeps every
  *    posting of a query term);
  *  - N and T come from `_lexstats` generation rows summed at query
- *    time — the [[AnnIndex.appendToAnnIndex]] stats discipline — and
- *    each generation row is computed with bm25TopK's exact expressions
- *    (empty and null-text docs count in N and contribute 0 to T), so
- *    the sums equal the one-shot aggregate over the accumulated corpus.
+ *    time, and each generation row is computed with bm25TopK's exact
+ *    expressions (empty and null-text docs count in N and contribute 0
+ *    to T), so the sums equal the one-shot aggregate over the
+ *    accumulated corpus.
  *
  * Query-time plan shape at 100 TB: the state side is ONE scan of the
- * bucketed postings table. With `collectVocab = true` (default) the
- * probe vocabulary is collected driver-side — bounded by the probe
- * batch, the [[AnnIndex.ivfPqTopKBucketed]] collect-probes standing —
- * and pushed as an `isin` predicate, so the scan bucket-prunes to the
+ * bucketed postings table. A probe vocabulary within
+ * [[Retrieval.ProbeBound]] terms is collected driver-side and pushed
+ * as an `isin` predicate, so the scan bucket-prunes to the
  * query terms' buckets and the `sortBy(term)` layout row-group-prunes
  * inside them. Honest scaling claim: what the index REMOVES from every
  * batch is the corpus explode + (doc, term) aggregate — the dominant
@@ -53,10 +52,9 @@ import org.apache.spark.sql.functions._
  * scoring joins (query terms and idf broadcast) plan NO state-side
  * Exchange; the only shuffles carry scored candidates, capped at k rows
  * per probe per map task by the mergeable `graft_topk` aggregate.
- * `collectVocab = false` gates with a plain (AQE-planned) join instead
- * — no driver collect AND no forced broadcast anywhere the probe
- * vocabulary rides, for probe batches whose vocabulary itself is huge
- * — at the price of scanning all buckets once.
+ * A vocabulary above the bound gates with a plain (AQE-planned) join
+ * instead — no driver collect AND no forced broadcast anywhere the
+ * probe vocabulary rides — at the price of scanning all buckets once.
  *
  * Reference anchor: the reference ETL's standing warehouse tables
  * (e.g. `/root/reference/Lib/Migrations` staging discipline) hold
@@ -66,26 +64,6 @@ import org.apache.spark.sql.functions._
  * [[AnnIndex]]).
  */
 object LexIndex {
-
-  /** bm25TopK's integral-id contract, shared by the index build: doc
-    * ids ride the top-k aggregate as LONG, so only exact-integral
-    * column types are accepted (see [[CorpusStats.bm25TopK]]). */
-  private def requireIntegralId(df: DataFrame, idCol: String): Unit = {
-    import org.apache.spark.sql.types._
-    val resolver = df.sparkSession.sessionState.analyzer.resolver
-    val idField = df.schema.find(f => resolver(f.name, idCol))
-      .getOrElse(throw new IllegalArgumentException(
-        s"LexIndex: id column $idCol not found in " +
-          s"[${df.schema.fieldNames.mkString(", ")}]"))
-    idField.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case d: DecimalType if d.scale == 0 && d.precision <= 18 => ()
-      case other => throw new IllegalArgumentException(
-        s"LexIndex requires an integral id column; got $idCol: " +
-          s"${other.simpleString}. Map non-integral ids to a unique " +
-          "integral surrogate first.")
-    }
-  }
 
   /** bm25TopK's `posts` aggregate: one corpus explode →
     * (term, doc_id, tf, len), map-side combined on (doc_id, term).
@@ -104,7 +82,7 @@ object LexIndex {
   /** bm25TopK's corpus scalars over exactly `docs`: N counts every row
     * (empty/null text included), T sums token counts with null text
     * pinned to 0 under both null-semantics regimes. `batchId` is -1
-    * for manual builds/appends; [[appendToLexIndexExactlyOnce]] stamps
+    * for builds; [[appendToLexIndexExactlyOnce]] stamps
     * its caller's batch id here so redelivered batches are detectable
     * (the query-time N/T aggregate ignores the column). */
   private def statsRow(docs: DataFrame, textCol: String,
@@ -120,18 +98,17 @@ object LexIndex {
    * Fit-free full build: drop + rewrite postings and the generation-0
    * stats row. Idempotent over an unchanged corpus (the aggregates are
    * deterministic); rows arriving AFTER a build go through
-   * [[appendToLexIndex]]. The `_lexkey` freshness table is
+   * [[appendToLexIndexExactlyOnce]]. The `_lexkey` freshness table is
    * [[ensureLexIndex]]'s concern, not this method's.
    */
   def writeLexIndex(docs: DataFrame, idCol: String, textCol: String,
                     base: String, buckets: Int = 16): Unit = {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
-    requireIntegralId(docs, idCol)
+    CorpusStats.integralIdType(docs, idCol, "LexIndex")
     val spark = docs.sparkSession
     // tombstones described the previous index generation
-    AnnIndex.dropStale(spark, s"${base}_postings")
-    AnnIndex.dropStale(spark, s"${base}_lexstats")
-    AnnIndex.dropStale(spark, s"${base}_tombstones")
+    for (t <- Seq("postings", "lexstats", "tombstones"))
+      StandingState.dropStale(spark, s"${base}_$t")
     postings(docs, idCol, textCol)
       .write.bucketBy(buckets, "term").sortBy("term")
       .format("parquet").mode(SaveMode.Overwrite)
@@ -143,94 +120,20 @@ object LexIndex {
   }
 
   /**
-   * Build-if-needed — the [[AnnIndex.ensureAnnIndex]] corpus-key
-   * discipline verbatim: rebuild ONLY when the persisted one-row
-   * `<base>_lexkey` is absent or names a different (corpus key,
-   * buckets); the key is dropped BEFORE the rebuild (a crash mid-build
-   * leaves no key, so the next call rebuilds — never a stale key over
-   * mixed postings) and written only after every table committed.
-   * Returns true when a build ran.
+   * Build-if-needed: rebuild ONLY when the persisted one-row
+   * `<base>_lexkey` (n, fp, buckets) is absent or names a different
+   * corpus key or bucket count. `key` — the corpus-sized (count,
+   * id+text-length fingerprint) scan — is by-name: steady state skips
+   * it. Freshness, crash-safety and concurrency are
+   * [[StandingState.ensure]]'s. Returns the corpus key in force.
    */
   def ensureLexIndex(docs: DataFrame, idCol: String, textCol: String,
-                     base: String, key: (Long, Long),
-                     buckets: Int = 16): Boolean = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val fresh = scala.util.Try {
-      val r = spark.table(s"${base}_lexkey").head()
-      (r.getLong(0), r.getLong(1)) == key && r.getLong(2) == buckets.toLong
-    }.getOrElse(false)
-    if (fresh) false
-    else {
-      AnnIndex.dropStale(spark, s"${base}_lexkey")
+                     base: String, key: => (Long, Long),
+                     buckets: Int = 16): (Long, Long) =
+    StandingState.ensure(docs, s"${base}_lexkey", key,
+      Seq("buckets" -> buckets.toLong)) {
       writeLexIndex(docs, idCol, textCol, base, buckets)
-      Seq((key._1, key._2, buckets.toLong)).toDF("n", "fp", "buckets")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .saveAsTable(s"${base}_lexkey")
-      true
     }
-  }
-
-  /**
-   * [[ensureLexIndex]] with the caller's corpus-key aggregation gated
-   * behind [[StandingState.ensureWithSnapshot]] (r20): `key` — the
-   * corpus-sized (count, id+text-length fingerprint) scan — evaluates
-   * only when the corpus's physical snapshot is not already verified
-   * against the persisted `<base>_lexkey` row, so a steady-state
-   * probe call plans NO corpus-sized scan. Returns the corpus key in
-   * force; correctness contract is [[ensureLexIndex]]'s, freshness
-   * semantics [[StandingState.ensureWithSnapshot]]'s.
-   */
-  def ensureLexIndexSnap(docs: DataFrame, idCol: String, textCol: String,
-                         base: String, key: => (Long, Long),
-                         buckets: Int = 16): (Long, Long) =
-    StandingState.ensureWithSnapshot(docs, s"${base}_lexkey", key) { k =>
-      ensureLexIndex(docs, idCol, textCol, base, k, buckets)
-      ()
-    }
-
-  /**
-   * Nightly ingest: explode ONLY the batch into postings and append
-   * (Spark appends per-bucket files; `buckets` must match the build),
-   * plus one new `_lexstats` generation row. Stats-first ordering and
-   * the batch pin follow [[AnnIndex.appendToAnnIndex]]: the pin
-   * guarantees the stats row and the appended postings describe the
-   * same rows even when the batch plan is non-deterministic, and
-   * writing stats before postings means a crash between the two leaves
-   * the index UNDER-counting N/T (scores drift conservatively, and the
-   * next successful append re-converges) rather than counting docs
-   * whose postings never landed.
-   *
-   * Caller contract: batch doc ids must be new (an id appended twice
-   * doubles its tf — same last-writer duty as appendToAnnIndex), and
-   * must not be STILL-tombstoned (refused loudly — run
-   * [[compactLexIndex]] first, whose fold makes the re-append exact).
-   * Append-then-query ≡ one-shot build over the union (LexIndexSpec).
-   */
-  def appendToLexIndex(spark: SparkSession, rows: DataFrame, idCol: String,
-                       textCol: String, base: String,
-                       buckets: Int = 16): Unit = {
-    requireIntegralId(rows, idCol)
-    StandingState.requireNotTombstoned(spark, s"${base}_tombstones",
-      rows, idCol,
-      "compactLexIndex (drops the dead postings and folds the N/T " +
-        "bookkeeping, after which the re-append counts exactly once)")
-    val batch = graft.ops.materialize(rows)
-    try {
-      val gen = spark.table(s"${base}_lexstats")
-        .agg(coalesce(max(col("generation")), lit(-1))).head().getInt(0) + 1
-      statsRow(batch, textCol, gen).coalesce(1)
-        .write.mode(SaveMode.Append).saveAsTable(s"${base}_lexstats")
-      spark.catalog.refreshTable(s"${base}_lexstats")
-      rows.sparkSession.catalog.refreshTable(s"${base}_lexstats")
-      postings(batch, idCol, textCol)
-        .write.bucketBy(buckets, "term").sortBy("term")
-        .format("parquet").mode(SaveMode.Append)
-        .saveAsTable(s"${base}_postings")
-      spark.catalog.refreshTable(s"${base}_postings")
-      rows.sparkSession.catalog.refreshTable(s"${base}_postings")
-    } finally graft.ops.materialize.release(batch)
-  }
 
   /**
    * EXACTLY-ONCE append for an at-least-once batch source (one that
@@ -251,7 +154,10 @@ object LexIndex {
    * that didn't land, then the stats row (computed from the FULL
    * batch, not the fresh subset — N/T must describe every batch row)
    * commits the batch. Stats row present ⇒ both tables are complete.
-   * Returns true when the batch was (newly) applied.
+   * Returns true when the batch was (newly) applied. A batch's doc ids
+   * must not be STILL-tombstoned (refused loudly — run
+   * [[compactLexIndex]] first, whose fold makes the re-append exact).
+   * Append-then-query ≡ one-shot build over the union (LexIndexSpec).
    *
    * Contract boundary: batch ids must be stable across redeliveries
    * (a source checkpoint that assigns them). A wiped checkpoint
@@ -265,17 +171,17 @@ object LexIndex {
                                   base: String, batchId: Long,
                                   buckets: Int = 16): Boolean = {
     require(batchId >= 0L, s"batchId must be non-negative, got $batchId")
-    requireIntegralId(rows, idCol)
+    CorpusStats.integralIdType(rows, idCol, "LexIndex")
     spark.catalog.refreshTable(s"${base}_postings")
     spark.catalog.refreshTable(s"${base}_lexstats")
     val done = !spark.table(s"${base}_lexstats")
       .filter(col("batch_id") === batchId).isEmpty
     if (done) false
     else {
-      // same re-append guard as the manual path: a tombstoned id's
-      // fresh postings would be invisible while the stats row counts
-      // it — refuse loudly (checked only for undelivered batches; an
-      // already-applied batch skipped above never re-reaches here)
+      // re-append guard: a tombstoned id's fresh postings would be
+      // invisible while the stats row counts it — refuse loudly
+      // (checked only for undelivered batches; an already-applied
+      // batch skipped above never re-reaches here)
       StandingState.requireNotTombstoned(spark, s"${base}_tombstones",
         rows, idCol,
         "compactLexIndex (drops the dead postings and folds the N/T " +
@@ -461,39 +367,6 @@ object LexIndex {
     }
   }
 
-  /** Dead-mass fraction: not-yet-compacted tombstoned docs / live
-    * docs. Folded (null-id) rows are already applied physically and
-    * do not count. 0 with no tombstones. */
-  def tombstoneFraction(spark: SparkSession, base: String): Double =
-    tombstones(spark, base) match {
-      case None => 0.0
-      case Some(t) =>
-        val dead = t.filter(col("doc_id").isNotNull).count()
-        if (dead == 0L) 0.0
-        else {
-          val live = liveTotals(spark, base).head().getLong(0)
-          if (live <= 0L) Double.PositiveInfinity
-          else dead.toDouble / live.toDouble
-        }
-    }
-
-  /**
-   * Compact iff the tombstone mass crossed `maxDeadFraction` — the
-   * [[AnnIndex.compactIfDead]] twin: deletes accumulate through
-   * [[tombstoneLexDocs]] without moving any model-drift signal, this
-   * notices when the dead set has grown past the policy bound (both
-   * counts are cheap scalars) and [[compactLexIndex]] applies them
-   * physically + folds the bookkeeping. Scores are bit-identical
-   * before/after. Returns true when a compaction ran.
-   */
-  def compactIfDead(spark: SparkSession, base: String,
-                    maxDeadFraction: Double = 0.3,
-                    buckets: Int = 16): Boolean = {
-    val dead = tombstoneFraction(spark, base) > maxDeadFraction
-    if (dead) compactLexIndex(spark, base, buckets)
-    dead
-  }
-
   /**
    * BM25 top-k against the persisted postings — bit-identical to
    * [[CorpusStats.bm25TopK]] over the indexed corpus (LexIndexSpec),
@@ -510,72 +383,47 @@ object LexIndex {
    */
   def bm25TopKIndexed(spark: SparkSession, queries: DataFrame,
                       qIdCol: String, qTextCol: String, base: String,
-                      k: Int, dfCap: Double = 1.0,
-                      collectVocab: Boolean = true): DataFrame = {
+                      k: Int, dfCap: Double = 1.0): DataFrame =
+    bm25TopKIndexedWithin(spark, queries, qIdCol, qTextCol, base, k, dfCap,
+      Retrieval.ProbeBound)
+
+  /** [[bm25TopKIndexed]] with the probe-vocabulary bound as a parameter
+    * — the entry the specs use to run both sides of it. */
+  private[graft] def bm25TopKIndexedWithin(spark: SparkSession,
+                                           queries: DataFrame,
+                                           qIdCol: String, qTextCol: String,
+                                           base: String, k: Int,
+                                           dfCap: Double,
+                                           probeBound: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(dfCap > 0.0 && dfCap <= 1.0, s"dfCap must be in (0,1], got $dfCap")
     val qterms = queries.select(col(qIdCol).as("q_id"),
         explode(TextAnalysis.tokens(col(qTextCol))).as("term"))
       .distinct()
+    val qvocab = qterms.select(col("term")).distinct()
     // tombstone-aware state: deleted docs' postings are excluded (the
     // term gate pushes below the broadcast anti-join, so bucket
     // pruning is unaffected) and their N/T shares subtract from the
     // corpus scalars — scores equal a corpus that never held them
     val posts = livePostings(spark, base)
-    val gated =
-      if (collectVocab) {
-        // driver-known vocabulary → isin predicate → bucket + row-group
-        // pruning at the scan (the ivfPqTopKBucketed probed-cells move);
-        // bounded by the probe batch's vocabulary
-        val vocab = qterms.select(col("term")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        if (vocab.isEmpty) posts.filter(lit(false))
-        else posts.filter(col("term").isin(vocab: _*))
-      } else
-        // huge-vocabulary path: the gate, the idf table and the qterms
-        // scoring join all scale WITH the probe vocabulary, so none of
-        // them may be forced through a broadcast (r19, ADVICE fix —
-        // the old path broadcast exactly the thing it existed to keep
-        // unbounded). Plain joins: AQE still broadcasts when a side
-        // turns out small, shuffles when it doesn't.
-        posts.join(qterms.select(col("term")).distinct(), "term")
-    // true corpus df per query term: the vocab gate keeps every posting
-    // of a query term, so this count equals the per-call plan's
-    val dfx = gated.groupBy("term").agg(count(lit(1)).as("df"))
+    val vocab = Retrieval.collectWithin(qvocab, probeBound)
+      .map(_.map(_.getString(0)).toSeq)
+    val gated = vocab match {
+      // driver-known vocabulary → isin predicate → bucket + row-group
+      // pruning at the scan (the ivfPqTopKBucketed probed-cells move)
+      case Some(v) =>
+        if (v.isEmpty) posts.filter(lit(false))
+        else posts.filter(col("term").isin(v: _*))
+      // above the bound the gate, the idf table and the qterms scoring
+      // join all scale WITH the probe vocabulary, so none of them may
+      // be forced through a broadcast (r19, ADVICE fix). Plain joins:
+      // AQE still broadcasts when a side turns out small, shuffles
+      // when it doesn't.
+      case None => posts.join(qvocab, "term")
+    }
     val tot = liveTotals(spark, base)
-    def hinted(df: DataFrame): DataFrame =
-      if (collectVocab) broadcast(df) else df
-    val idf = dfx.crossJoin(broadcast(tot))
-      .filter(col("df").cast("double")
-        <= lit(dfCap) * col("n_docs").cast("double"))
-      .select(col("term"),
-        floor((log(col("n_docs").cast("double") * 2 + 2)
-             - log(col("df").cast("double") * 2 + 1)) * lit(1e6) + lit(0.5))
-          .cast("long").as("idf_u"),
-        col("n_docs"), col("n_toks"))
-    val contrib = gated
-      .join(hinted(idf), "term")
-      .join(hinted(qterms), "term")
-      .select(col("q_id"), col("doc_id"),
-        (col("idf_u").cast("decimal(8,0)") * lit(22)
-           * col("tf").cast("decimal(10,0)")
-           * col("n_toks").cast("decimal(16,0)")).as("__num"),
-        (col("tf").cast("decimal(10,0)") * lit(10)
-           * col("n_toks").cast("decimal(16,0)")
-           + col("n_toks").cast("decimal(16,0)") * lit(3)
-           + col("len").cast("decimal(10,0)") * lit(9)
-           * col("n_docs").cast("decimal(16,0)")).as("__den"))
-      .select(col("q_id"), col("doc_id"),
-        expr("__num DIV __den").as("contrib_u"))
-    val scored = contrib.groupBy("q_id", "doc_id")
-      .agg(sum(col("contrib_u")).as("score_u"))
-    val idType = posts.schema("doc_id").dataType
-    scored.groupBy(col("q_id"))
-      .agg(graft.plans.Kernels.topK(col("score_u").cast("double"),
-        col("doc_id").cast("long"), lit(k)).as("__topk"))
-      .select(col("q_id"), posexplode(col("__topk")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").cast(idType).as("doc_id"),
-        col("col.score").cast("long").as("score_u"))
+    CorpusStats.bm25Scores(gated, qterms, k, dfCap,
+      posts.schema("doc_id").dataType, hinted = vocab.isDefined,
+      col("n_docs"), col("n_toks"), _.crossJoin(broadcast(tot)))
   }
 }

@@ -12,14 +12,13 @@ import org.apache.spark.sql.types._
  * The Spark-side plumbing is real — schema, partition-local batch
  * processing via `mapPartitions` (the JVM analog of `mapInPandas`
  * batching: one buffer per partition, streaming iterator, no
- * per-row setup cost), deterministic output shapes. IMAGE decode and
- * resize are REAL — the JDK's built-in `javax.imageio` handles
- * PNG/JPEG/GIF/BMP with zero added dependencies ([[decodeImage]],
- * [[resizeImage]]). Audio/video codec work stays STUBBED
- * (`fakeDecode`) because no such libraries exist in this environment:
- * the stub derives deterministic pseudo-features from the content
- * bytes, so every pipeline stage around the decode is testable and the
- * stub swaps for a real codec without touching plans.
+ * per-row setup cost), deterministic output shapes. IMAGE decode is
+ * REAL — the JDK's built-in `javax.imageio` handles PNG/JPEG/GIF/BMP
+ * with zero added dependencies ([[decodeImage]]). Audio/video codec
+ * work stays STUBBED (`fakeDecode`) because no such libraries exist in
+ * this environment: the stub derives deterministic pseudo-features
+ * from the content bytes, so every pipeline stage around the decode is
+ * testable and the stub swaps for a real codec without touching plans.
  *
  * AUDIO decode is REAL as of r13 — the JDK's built-in
  * `javax.sound.sampled` parses WAV containers (PCM signed/unsigned,
@@ -31,19 +30,6 @@ import org.apache.spark.sql.types._
  * swaps for a real demuxer without touching plans.
  */
 object Multimodal {
-
-  /** Canonical media-table schema: content stays an opaque binary blob;
-    * everything queryable lives in typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image|audio|video
-    StructField("content", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true),
-      StructField("mime", StringType, nullable = true))), nullable = true)))
 
   val featureDim = 16
 
@@ -94,35 +80,6 @@ object Multimodal {
       // IllegalArgument) on malformed bytes, not just IOException — any
       // undecodable row must take the documented fallback, never fail
       // the Spark task
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** REAL image resize via `java.awt` bilinear scaling, re-encoded as
-    * PNG bytes. None when the input is not a decodable image. */
-  private[graft] def resizeImage(content: Array[Byte], maxSide: Int)
-      : Option[(Int, Int, Array[Byte])] =
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(content))
-      if (img == null) None
-      else {
-        val w = img.getWidth; val h = img.getHeight
-        val scale = math.min(1.0, maxSide.toDouble / math.max(w, h))
-        val nw = math.max(1, (w * scale).toInt)
-        val nh = math.max(1, (h * scale).toInt)
-        val scaled = new java.awt.image.BufferedImage(nw, nh,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g2 = scaled.createGraphics()
-        try {
-          g2.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g2.drawImage(img, 0, 0, nw, nh, null)
-        } finally g2.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(scaled, "png", bos)
-        Some((nw, nh, bos.toByteArray))
-      }
-      // same reasoning as decodeImage: malformed bytes → fallback path
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Decoded-audio summary: container-level facts plus the fixed-dim
@@ -314,31 +271,6 @@ object Multimodal {
           val amp = (((id % 100 + 100) % 100) * 300).toShort
           Row(id, "audio", encodeWavPcm16(Array.fill(n)(amp), 8000))
         }
-      }(enc)
-  }
-
-  /**
-   * REAL image resize: for decodable image rows, re-encode at
-   * `maxSide` via bilinear AWT scaling and emit the new bytes +
-   * actual dimensions; undecodable/non-image rows are dropped.
-   * Compose with [[resizedMeta]] when only the bookkeeping is needed
-   * (that path never reads the blob).
-   */
-  def resizeImages(media: DataFrame, maxSide: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("content", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select("media_id", "kind", "content")
-      .mapPartitions { rows =>
-        rows.filter(r => r.getString(1) == "image" && !r.isNullAt(2))
-          .flatMap { r =>
-            resizeImage(r.getAs[Array[Byte]]("content"), maxSide).map {
-              case (w, h, bytes) => Row(r.getLong(0), w, h, bytes)
-            }
-          }
       }(enc)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,6 +26,38 @@ import org.apache.spark.sql.functions._
  * ~nProbe/nCentroids of the corpus, not a full scan.
  */
 object Retrieval {
+
+  /**
+   * The most rows a search operator collects to the driver to plan
+   * itself: the probe vocabulary of both BM25 operators
+   * ([[CorpusStats.bm25TopK]], [[LexIndex.bm25TopKIndexed]]) or the
+   * probe batch of the ANN search ([[AnnIndex.ivfPqTopKBucketed]]).
+   * Within it, the collected set becomes a plan literal (an `InSet`
+   * vocabulary gate, a bucket-pruning probed-cell list); above it, each
+   * operator runs its collect-free plan, so the choice follows the
+   * observed input, not a caller flag. The registry's probe
+   * vocabularies (q127, q139, q140) are 31 terms at sf0.1 and 309 at
+   * sf1, its ANN probe batches 20 and 191 rows; 1024 keeps every
+   * registry scale on the collected plans while keeping the driver side
+   * small — at most (bound + 1) rows per input partition reach the
+   * driver, and a 1024-term `InSet` is a few KB of plan.
+   */
+  private[operators] val ProbeBound = 1024
+
+  /**
+   * `df`'s rows when it holds at most `bound`, else None — in ONE
+   * Spark job: each partition forwards at most `bound + 1` rows, so a
+   * too-big input is recognized without shipping all of it. (A
+   * `limit(n).collect()` scans partitions incrementally and can add
+   * jobs.)
+   */
+  private[operators] def collectWithin(df: DataFrame,
+                                       bound: Int): Option[Array[Row]] = {
+    val cap = bound + 1
+    val rows = df.mapPartitions((it: Iterator[Row]) => it.take(cap))(
+      Encoders.row(df.schema)).collect()
+    if (rows.length > bound) None else Some(rows)
+  }
 
   /**
    * Reciprocal-rank fusion of ranked runs. Each run must expose columns
@@ -280,35 +312,21 @@ object Retrieval {
    * the index search drops `neighbor_id = query_id` pairs, the lexical
    * leg filters `q_id = doc_id`. Output: q_id, rank (1..k), doc_id,
    * rrf_u — identical schema to the exact wrapper, so the two swap
-   * freely.
-   *
-   * `collectProbes` picks the dense-leg probe path: the default
-   * driver-collect form ([[AnnIndex.ivfPqTopKBucketed]]) isin-prunes
-   * the codes scan to the probed buckets — right for bounded probe
-   * batches; `collectProbes = false` computes probe cells and ADC
-   * tables as per-row COLUMN expressions
-   * ([[AnnIndex.ivfPqTopKBucketedDF]], bit-parity asserted in
-   * AnnIndexSpec) so a million-probe nightly batch never funnels
-   * through the driver — at that scale most cells are probed anyway,
-   * so the lost scan pruning is moot.
+   * freely. Each leg picks its own plan from the probe batch it
+   * observes ([[ProbeBound]]).
    */
   def hybridBm25AnnTopK(
       spark: SparkSession,
       docs: DataFrame, docIdCol: String, textCol: String,
       probeDocs: DataFrame, probeEmbs: DataFrame,
       embIdCol: String, vecCol: String, base: String,
-      kPerLeg: Int, k: Int, k0: Int = 60, nProbe: Int = 4,
-      collectProbes: Boolean = true): DataFrame = {
+      kPerLeg: Int, k: Int, k0: Int = 60, nProbe: Int = 4): DataFrame = {
     val lex = CorpusStats.bm25TopK(docs, docIdCol, textCol,
         probeDocs, docIdCol, textCol, kPerLeg)
       .filter(col("q_id") =!= col("doc_id"))
       .select(col("q_id"), col("doc_id"), col("rank"))
-    val den = (if (collectProbes)
-        AnnIndex.ivfPqTopKBucketed(spark, probeEmbs, embIdCol,
-          vecCol, kPerLeg, base, nProbe)
-      else
-        AnnIndex.ivfPqTopKBucketedDF(spark, probeEmbs, embIdCol,
-          vecCol, kPerLeg, base, nProbe))
+    val den = AnnIndex.ivfPqTopKBucketed(spark, probeEmbs, embIdCol,
+        vecCol, kPerLeg, base, nProbe)
       .select(col("query_id").as("q_id"),
         col("neighbor_id").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, den), k, k0)
@@ -339,18 +357,13 @@ object Retrieval {
       probeDocs: DataFrame, docIdCol: String, textCol: String,
       probeEmbs: DataFrame, embIdCol: String, vecCol: String,
       lexBase: String, annBase: String,
-      kPerLeg: Int, k: Int, k0: Int = 60, nProbe: Int = 4,
-      collectProbes: Boolean = true): DataFrame = {
+      kPerLeg: Int, k: Int, k0: Int = 60, nProbe: Int = 4): DataFrame = {
     val lex = LexIndex.bm25TopKIndexed(spark, probeDocs, docIdCol,
-        textCol, lexBase, kPerLeg, collectVocab = collectProbes)
+        textCol, lexBase, kPerLeg)
       .filter(col("q_id") =!= col("doc_id"))
       .select(col("q_id"), col("doc_id"), col("rank"))
-    val den = (if (collectProbes)
-        AnnIndex.ivfPqTopKBucketed(spark, probeEmbs, embIdCol,
-          vecCol, kPerLeg, annBase, nProbe)
-      else
-        AnnIndex.ivfPqTopKBucketedDF(spark, probeEmbs, embIdCol,
-          vecCol, kPerLeg, annBase, nProbe))
+    val den = AnnIndex.ivfPqTopKBucketed(spark, probeEmbs, embIdCol,
+        vecCol, kPerLeg, annBase, nProbe)
       .select(col("query_id").as("q_id"),
         col("neighbor_id").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, den), k, k0)

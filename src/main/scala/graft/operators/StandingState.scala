@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Shared lifecycle for the three persisted standing states — the
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
  *     destructive-retry window the r18 compactors had: a crash
  *     BETWEEN the DROP and the RENAME leaves the staging table as the
  *     only copy of the state, and the old re-run began with
- *     dropStale(staging) — permanently deleting that sole copy before
+ *     [[dropStale]](staging) — permanently deleting that sole copy before
  *     failing on the missing live table. On entry this helper detects
  *     the crashed-swap fingerprint (live absent, staging present) and
  *     PROMOTES the staging table via RENAME before anything is
@@ -30,6 +31,8 @@ import org.apache.spark.sql.functions._
  *     emits exactly one file per non-empty bucket, with no shuffle
  *     (the `repartition` formulation silently fails to collapse —
  *     see [[AnnIndex.compactAnnIndex]]'s Scaladoc for the trap).
+ *     [[compactIfDead]] runs a compactor once the tombstones' dead
+ *     mass crosses a bound.
  *  3. **Tombstone-table management** ([[appendTombstones]],
  *     [[minusTombstones]]): deletes ride a tiny side table that
  *     searches anti-join (broadcast — a delete set is small next to
@@ -51,11 +54,10 @@ import org.apache.spark.sql.functions._
  */
 object StandingState {
 
-  /** Process-local snapshot memo for [[ensureWithSnapshot]]:
-    * key table name → (corpus snapshot fingerprint, the key table's
-    * one persisted row as last verified, the corpus key in force). */
-  private val snapshotMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[Any], (Long, Long))]()
+  /** Process-local snapshot memo for [[ensure]]: key table name →
+    * (corpus snapshot fingerprint, the corpus key verified with it). */
+  private val snapshotMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, (Long, Long))]()
 
   /** Test hook: forget every snapshot (forces the next ensure call to
     * re-derive its corpus key from data). */
@@ -96,52 +98,105 @@ object StandingState {
   }.toOption.flatten
 
   /**
-   * Freshness-token gate for the per-call corpus-key aggregation of a
-   * standing index (r20): a steady-state probe used to pay a
-   * corpus-sized count+fingerprint scan on EVERY call just to prove
-   * the persisted index still matches its corpus — at 100 TB that
-   * full pass defeats the standing index's purpose. This gate makes
-   * the steady-state check corpus-scan-FREE:
+   * Build-if-needed (r17, snapshot gate r20) — the one freshness rule
+   * of every standing state. The state is current iff the one-row
+   * `keyTable` holds exactly (n, fp, params…): the caller's corpus key
+   * (row count plus a cheap content fingerprint that folds in a value
+   * term — two corpora with equal keys are treated as identical) and
+   * the build parameters (`params`, column name → value: the same
+   * corpus built with other geometry is another index). Otherwise:
    *
+   *  - the key table is dropped FIRST, `build` runs, and the key is
+   *    written only AFTER every table `build` writes has committed. A
+   *    crash mid-build leaves a mixed state but never a key, so the
+   *    next call rebuilds; a stale key surviving over a half-written
+   *    state is the one ordering that could serve wrong results as
+   *    fresh.
    *  - `key` (the corpus-sized aggregation) is BY-NAME and evaluated
    *    only when the corpus's physical snapshot ([[corpusSnapshot]])
-   *    is not the one already verified: first call per process, any
-   *    file-level change (path set, length, mtime), any plan change,
-   *    or a non-file source. `ensure` (the index build-if-needed path)
-   *    then runs with the data-derived key exactly as before.
-   *  - Steady state re-checks only the persisted ONE-ROW key table
-   *    (`keyTable`) against the row recorded when the snapshot was
-   *    verified — a scalar compare that still detects out-of-band
-   *    warehouse mutation (table dropped, rebuilt by another session
-   *    over a different corpus, parameter change): any mismatch falls
-   *    back to the full data-derived path.
+   *    is not the one this process last verified against the same key
+   *    row: first call per process, any file-level change (path set,
+   *    length, mtime), any plan change, or a non-file source. Steady
+   *    state re-checks only the persisted one-row key table — a scalar
+   *    compare that still detects out-of-band warehouse mutation
+   *    (table dropped, rebuilt by another session over a different
+   *    corpus, other parameters) — so a probe call plans NO
+   *    corpus-sized scan.
    *
    * Returns the corpus key in force — equal by construction to what
    * `key` would compute (snapshot equality ⇒ identical corpus bytes
-   * and plan ⇒ identical aggregate), so callers that need the key
-   * (oracle dump partitioning) read it from the return value instead
-   * of re-aggregating. The memo is process-local and never persisted:
-   * a fresh JVM's first call always re-derives the key from data.
+   * and plan ⇒ identical aggregate), so callers that partition oracle
+   * dumps by it read it here instead of re-aggregating. The memo is
+   * process-local and never persisted. Concurrency is last-writer-wins:
+   * deterministic builds make concurrent same-corpus builders converge
+   * on identical tables; serialize externally for mixed-corpus racers.
    */
-  def ensureWithSnapshot(corpus: DataFrame, keyTable: String,
-                         key: => (Long, Long))
-                        (ensure: ((Long, Long)) => Unit): (Long, Long) = {
+  def ensure(corpus: DataFrame, keyTable: String, key: => (Long, Long),
+             params: Seq[(String, Long)] = Nil)
+            (build: => Unit): (Long, Long) = {
     val spark = corpus.sparkSession
-    def storedRow(): Option[Seq[Any]] =
-      scala.util.Try(spark.table(keyTable).head().toSeq).toOption
+    def row(k: (Long, Long)): Seq[Any] = Seq(k._1, k._2) ++ params.map(_._2)
+    def stored: Option[Seq[Any]] =
+      if (!spark.catalog.tableExists(keyTable)) None
+      else scala.util.Try(spark.table(keyTable).head().toSeq).toOption
     val snap = corpusSnapshot(corpus)
     val hit = snap.flatMap { sn =>
       Option(snapshotMemo.get(keyTable)).collect {
-        case (s, row, k) if s == sn && storedRow().contains(row) => k
+        case (s, k) if s == sn && stored.contains(row(k)) => k
       }
     }
     hit.getOrElse {
       val k = key
-      ensure(k)
-      for (sn <- snap; row <- storedRow())
-        snapshotMemo.put(keyTable, (sn, row, k))
+      if (!stored.contains(row(k))) {
+        dropStale(spark, keyTable)
+        build
+        val schema = StructType(("n" +: "fp" +: params.map(_._1))
+          .map(StructField(_, LongType, nullable = false)))
+        spark.createDataFrame(java.util.List.of(Row.fromSeq(row(k))), schema)
+          .coalesce(1).write.mode(SaveMode.Overwrite).saveAsTable(keyTable)
+      }
+      snap.foreach(sn => snapshotMemo.put(keyTable, (sn, k)))
       k
     }
+  }
+
+  /** Drop a managed table AND its warehouse location: a location left
+    * by a previous session is invisible to a fresh in-memory catalog,
+    * so Overwrite alone would refuse the "orphaned directory" case. */
+  private[graft] def dropStale(spark: SparkSession, table: String): Unit = {
+    // the warehouse/<name> orphan-path derivation below only holds for
+    // unqualified names in the default database; a qualified base would
+    // compute the wrong path (deleting a sibling, missing the orphan)
+    require(!table.contains("."),
+      s"index base must be an unqualified default-database table name, " +
+        s"got '$table'")
+    // if the table IS registered, trust the catalog for its location
+    // (one metadata call — getTableMetadata throws for absent tables
+    // and the Try converts that to None; this runs 4× per build)
+    val catalogLoc =
+      scala.util.Try(new org.apache.hadoop.fs.Path(
+        spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(table)).location))
+        .toOption
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val wh = new org.apache.hadoop.fs.Path(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")))
+    val p = catalogLoc.getOrElse(
+      new org.apache.hadoop.fs.Path(wh, table.toLowerCase))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** Run `body` with auto-bucketed-scan conversion OFF, restoring the
+    * session's previous setting after — the compaction read-side pin
+    * (see [[compactBucketed]]). Session-scoped like any conf toggle:
+    * concurrent queries on the SAME session during the window read
+    * bucketed plans too (correct, possibly slower); other sessions are
+    * unaffected. */
+  private def withBucketedScanPinned[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, prev)
   }
 
   /**
@@ -163,7 +218,7 @@ object StandingState {
     }
     // live exists (or neither does): a leftover staging table is
     // garbage from a crash during the staging WRITE — safe to clear
-    AnnIndex.dropStale(spark, staging)
+    dropStale(spark, staging)
     write
     spark.sql(s"DROP TABLE $live")
     spark.sql(s"ALTER TABLE $staging RENAME TO $live")
@@ -183,7 +238,7 @@ object StandingState {
                       rows: => DataFrame): Unit = {
     val staging = s"${table}_compacting"
     stagedSwap(spark, table, staging) {
-      AnnIndex.withBucketedScanPinned(spark) {
+      withBucketedScanPinned(spark) {
         rows.write.bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
           .sortBy(bucketCols.head, bucketCols.tail: _*)
           .format("parquet").mode(SaveMode.Overwrite)
@@ -250,29 +305,48 @@ object StandingState {
     }
   }
 
-  /** Count of standing tombstones — the dead side of the
-    * tombstone-mass staleness policy. 0 when no table exists. */
-  def tombstoneCount(spark: SparkSession, table: String): Long =
-    if (spark.catalog.tableExists(table)) spark.table(table).count() else 0L
-
   /**
-   * Dead-mass fraction: tombstoned keys / live keys. The staleness
-   * signal [[AnnIndex.staleness]]'s reconstruction-error ratio is
-   * blind to — heavy deletes skew cell/posting distributions and grow
-   * every search's anti-join without moving PQ error at all. Both
-   * indexes fold this into their compaction policy
-   * ([[AnnIndex.compactIfDead]] / [[LexIndex.compactIfDead]]).
-   * Returns 0 with no tombstones; `totalKeys` counts tombstoned keys
-   * too (live = total − dead), so the fraction is dead/live.
+   * Dead-mass fraction: tombstoned keys / live keys. Heavy deletes skew
+   * cell/posting distributions and grow every search's anti-join
+   * without moving any model-quality measure, so this is the signal
+   * [[compactIfDead]] acts on. Returns 0 with no tombstones; rows with
+   * a null key (the lexical index's folded N/T row, already applied
+   * physically) are not dead weight and do not count. `totalKeys`
+   * counts tombstoned keys too (live = total − dead), so the fraction
+   * is dead/live.
    */
   def deadFraction(spark: SparkSession, tombTable: String,
                    totalKeys: => Long): Double = {
-    val dead = tombstoneCount(spark, tombTable)
+    val dead =
+      if (!spark.catalog.tableExists(tombTable)) 0L
+      else {
+        val t = spark.table(tombTable)
+        t.filter(col(t.columns.head).isNotNull).count()
+      }
     if (dead == 0L) 0.0
     else {
       val live = totalKeys - dead
       if (live <= 0L) Double.PositiveInfinity
       else dead.toDouble / live.toDouble
     }
+  }
+
+  /**
+   * Compact iff the dead mass ([[deadFraction]]) crossed
+   * `maxDeadFraction` — the automatic trigger closing the delete loop
+   * of any tombstoned state: deletes accumulate through the index's
+   * tombstone append, this notices when the dead set has grown past the
+   * policy bound (two scalar counts), and `compact` — the index's own
+   * compactor ([[AnnIndex.compactAnnIndex]],
+   * [[LexIndex.compactLexIndex]], [[Dedup.compactDedupState]]) applies
+   * them physically. Results are bit-identical before/after: the rows
+   * were already excluded logically. Returns true when a compaction ran.
+   */
+  def compactIfDead(spark: SparkSession, tombTable: String,
+                    totalKeys: => Long, maxDeadFraction: Double = 0.3)
+                   (compact: => Unit): Boolean = {
+    val dead = deadFraction(spark, tombTable, totalKeys) > maxDeadFraction
+    if (dead) compact
+    dead
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Physical-layout operators: multi-dimensional clustering for
+ * Physical-layout operators: a multi-dimensional clustering key for
  * data-skipping.
  *
  * At 100 TB the scan cost of a query is decided before it runs — by how
@@ -35,14 +35,4 @@ object layout {
         .bitwiseOR(shiftleft(shiftright(yi, i).bitwiseAND(1), 2 * i + 1))
     }.reduce(_ bitwiseOR _)
   }
-
-  /**
-   * Cluster a DataFrame for writing: range-partition on the clustering
-   * key (contiguous key ranges per output file → tight min/max per
-   * file) and sort within partitions (row-group-level skipping inside
-   * each file). With a [[zorder2]] key this is multi-dimensional
-   * clustering; with a plain column it is classic single-key layout.
-   */
-  def clusterBy(df: DataFrame, key: Column, numPartitions: Int): DataFrame =
-    df.repartitionByRange(numPartitions, key).sortWithinPartitions(key)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
+import graft.functions.business.truthySwap
 import graft.ops.relational
 
 /**
@@ -18,9 +19,6 @@ object DealTrackingDealFact extends Pipeline {
   val sources = Seq("deals", "companies")
   val factKeys = Seq("id")
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   /** deals ⟕ companies for the city (`DealTrackingDeal/run.js:86`, J2).
     * The reference then reads `item.contact.lastName` on rows that only
     * carry `contactName` (`run.js:109` — throws whenever contactName is
@@ -32,28 +30,28 @@ object DealTrackingDealFact extends Pipeline {
     d.join(c, Seq("company_id"), "left").select(
       col("isDeleted").cast("string").as("deleted"),
       col("id").cast("string").as("id"), // T5, ungated (run.js:100)
-      sw(col("code")).as("code"),
+      truthySwap(col("code")).as("code"),
       date_format(business.wibTimestamp(col("createdUtc")), "yyyy-MM-dd")
         .as("created_date"), // ungated (run.js:102)
       col("createdBy").as("created_by"),
-      sw(col("name")).as("name"),
+      truthySwap(col("name")).as("name"),
       col("amount").cast("string").as("amount"), // `'${item.amount}'`
-      sw(col("companyCode")).as("company_code"),
-      sw(col("companyName")).as("company_name"),
-      sw(col("company_city")).as("company_city"),
-      sw(col("contactCode")).as("contact_code"),
-      sw(col("contactName")).as("contact_name"),
+      truthySwap(col("companyCode")).as("company_code"),
+      truthySwap(col("companyName")).as("company_name"),
+      truthySwap(col("company_city")).as("company_city"),
+      truthySwap(col("contactCode")).as("contact_code"),
+      truthySwap(col("contactName")).as("contact_name"),
       when(col("closeDate").isNotNull,
         date_format(business.wibTimestamp(col("closeDate")), "yyyy-MM-dd"))
         .as("close_date"),
-      sw(col("description")).as("description"),
-      sw(col("reason")).as("reason"),
+      truthySwap(col("description")).as("description"),
+      truthySwap(col("reason")).as("reason"),
       lit(null).cast("string").as("product_code"), // run.js:115-118
       lit(null).cast("string").as("product_name"),
       // `!= undefined` dialect: zero survives, as string (run.js:120)
       business.nullIfUndefined(col("quantity")).cast("string")
         .as("quantity"),
-      sw(col("uomUnit")).as("uom"))
+      truthySwap(col("uomUnit")).as("uom"))
   }
 }
 
@@ -61,9 +59,6 @@ object DealTrackingActivityFact extends Pipeline {
   val name = "deal-tracking-activity-fact"
   val sources = Seq("activities")
   val factKeys = Seq("id")
-
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
 
   /** Single-table scalar transform (`DealTrackingActivity/run.js:91-110`).
     * The extract aliases `taskTitle` but the transform reads the
@@ -75,15 +70,15 @@ object DealTrackingActivityFact extends Pipeline {
     t("activities").select(
       col("isDeleted").cast("string").as("deleted"),
       col("id").cast("string").as("id"),
-      sw(col("code")).as("code"),
+      truthySwap(col("code")).as("code"),
       date_format(business.wibTimestamp(col("createdUtc")),
         "yyyy-MM-dd HH:mm:ss").as("created_date"),
       col("createdBy").as("created_by"),
       when(business.nullIfFalsyNum(col("dealId")).isNotNull,
         col("dealId").cast("string")).as("deal_id"),
-      sw(col("type")).as("type"),
-      sw(col("notes")).as("notes"),
-      sw(col("taskTitle")).as("title"),
+      truthySwap(col("type")).as("type"),
+      truthySwap(col("notes")).as("notes"),
+      truthySwap(col("taskTitle")).as("title"),
       when(col("dueDate").isNotNull,
         date_format(business.wibTimestamp(col("dueDate")), "yyyy-MM-dd"))
         .as("due_date"),
@@ -95,16 +90,13 @@ object DealTrackingActivityFact extends Pipeline {
       when(business.nullIfFalsyNum(col("targetStageId")).isNotNull,
         business.quoteSwap(col("targetStageId").cast("string")))
         .as("target_stage_id"),
-      sw(col("assignedTo")).as("assigned_to"))
+      truthySwap(col("assignedTo")).as("assigned_to"))
 }
 
 object DealTrackingBoardFact extends Pipeline {
   val name = "deal-tracking-board-fact"
   val sources = Seq("boards", "currencies")
   val factKeys = Seq("id")
-
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
 
   /** boards + J4 keep-first currency-rate lookup by code
     * (`DealTrackingBoard/run.js:107-112`); the rate is emitted as a
@@ -118,15 +110,15 @@ object DealTrackingBoardFact extends Pipeline {
       .select(
         col("isDeleted").cast("string").as("deleted"),
         col("id").cast("string").as("id"),
-        sw(col("code")).as("code"),
+        truthySwap(col("code")).as("code"),
         date_format(business.wibTimestamp(col("createdUtc")), "yyyy-MM-dd")
           .as("created_date"),
         col("createdBy").as("created_by"),
-        sw(col("title")).as("title"),
-        sw(col("currencyCode")).as("currency_code"),
+        truthySwap(col("title")).as("title"),
+        truthySwap(col("currencyCode")).as("currency_code"),
         business.nullIfFalsyNum(col("currency_rate_raw")).cast("string")
           .as("currency_rate"),
-        sw(col("currencySymbol")).as("currency_symbol"))
+        truthySwap(col("currencySymbol")).as("currency_symbol"))
   }
 }
 
@@ -144,19 +136,16 @@ object DealTrackingStageFact extends Pipeline {
   val sources = Seq("stages", "stageDeals")
   val factKeys = Seq("id")
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   def transform(t: Map[String, DataFrame]): DataFrame =
     t("stages").select(
       col("isDeleted").cast("string").as("deleted"),
       col("id").cast("string").as("id"),
-      sw(col("code")).as("code"),
+      truthySwap(col("code")).as("code"),
       date_format(business.wibTimestamp(col("createdUtc")), "yyyy-MM-dd")
         .as("created_date"),
       col("createdBy").as("created_by"),
       col("boardId").cast("string").as("board_id"), // ungated toString
-      sw(col("name")).as("name"))
+      truthySwap(col("name")).as("name"))
 
   /** The stage↔deal map staging table (second sink). */
   def transformDeals(t: Map[String, DataFrame]): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
+import graft.functions.business.truthySwap
 
 /**
  * Fabric-QC fact pipeline — re-expression of the reference's `FabricQC`
@@ -41,9 +42,6 @@ object FabricQCFact extends Pipeline {
   /** `x >= 0 && x` — JS truthiness drops zero (run.js:144). */
   private def gateNumDropZero(c: Column): Column =
     when(c.isNotNull && c >= 0 && c =!= 0, c)
-
-  private def gateStr(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
 
   def transform(t: Map[String, DataFrame]): DataFrame = {
     val qc = t("fabricQCs").select(col("id").as("qc_id"),
@@ -90,29 +88,29 @@ object FabricQCFact extends Pipeline {
       coalesce(c, lit(0)) + coalesce(d, lit(0))
 
     fanned.select(
-      gateStr(col("qc_code_raw")).as("qc_code"),
+      truthySwap(col("qc_code_raw")).as("qc_code"),
       gateNumDropZero(col("qc_point_system")).cast("string")
         .as("qc_point_system"),
       when(col("qc_date").isNotNull,
         date_format(business.wibTimestamp(col("qc_date")), "yyyy-MM-dd"))
         .as("date_im"),
-      gateStr(col("qc_shift")).as("shift_im"),
-      gateStr(col("qc_group")).as("group_im"),
-      gateStr(col("qc_operator")).as("operator_im"),
-      gateStr(col("qc_machine_no")).as("machine_no_im"),
-      gateStr(col("qc_po_no")).as("production_order_no"),
-      gateStr(col("qc_po_type")).as("production_order_type"),
-      gateStr(col("qc_kanban_code")).as("kanban_code"),
-      gateStr(col("qc_cart_no")).as("cart_no"),
-      gateStr(col("qc_buyer")).as("buyer"),
+      truthySwap(col("qc_shift")).as("shift_im"),
+      truthySwap(col("qc_group")).as("group_im"),
+      truthySwap(col("qc_operator")).as("operator_im"),
+      truthySwap(col("qc_machine_no")).as("machine_no_im"),
+      truthySwap(col("qc_po_no")).as("production_order_no"),
+      truthySwap(col("qc_po_type")).as("production_order_type"),
+      truthySwap(col("qc_kanban_code")).as("kanban_code"),
+      truthySwap(col("qc_cart_no")).as("cart_no"),
+      truthySwap(col("qc_buyer")).as("buyer"),
       gateNumDropZero(col("qc_order_qty")).as("order_quantity"),
-      gateStr(col("qc_color")).as("color"),
-      gateStr(col("qc_construction")).as("construction"),
-      gateStr(col("qc_packing")).as("packing_instruction"),
-      gateStr(col("qc_uom")).as("uom"),
-      gateStr(col("t_type")).as("test_type"),
-      gateStr(col("t_pcs_no")).as("pcs_no"),
-      gateStr(col("t_grade")).as("grade"),
+      truthySwap(col("qc_color")).as("color"),
+      truthySwap(col("qc_construction")).as("construction"),
+      truthySwap(col("qc_packing")).as("packing_instruction"),
+      truthySwap(col("qc_uom")).as("uom"),
+      truthySwap(col("t_type")).as("test_type"),
+      truthySwap(col("t_pcs_no")).as("pcs_no"),
+      truthySwap(col("t_grade")).as("grade"),
       gateNumKeepZero(col("t_width")).as("width"),
       gateNumDropZero(col("t_init_length")).as("init_length"),
       gateNumKeepZero(col("t_aval_length")).as("aval_length"),
@@ -123,9 +121,9 @@ object FabricQCFact extends Pipeline {
       gateNumKeepZero(col("t_score")).as("score"),
       gateNumKeepZero(col("t_final_score")).as("final_score"),
       gateNumKeepZero(col("t_point_system")).as("point_system"),
-      gateStr(col("c_code")).as("criteria_code"),
-      gateStr(col("c_group")).as("criteria_group"),
-      gateStr(col("c_name")).as("criteria_name"),
+      truthySwap(col("c_code")).as("criteria_code"),
+      truthySwap(col("c_group")).as("criteria_group"),
+      truthySwap(col("c_name")).as("criteria_name"),
       gateNumKeepZero(col("c_a")).as("criteria_a"),
       gateNumKeepZero(col("c_b")).as("criteria_b"),
       gateNumKeepZero(col("c_c")).as("criteria_c"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
+import graft.functions.business.truthySwap
 
 /**
  * Packing fact pipeline — re-expression of the reference's `Packing`
@@ -19,8 +20,6 @@ object PackingFact extends Pipeline {
   // reference extracts >= the watermark (Packing/run.js:108)
   override val watermarkInclusive = true
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
   private def g(c: Column): Column = business.nullIfFalsyStr(c)
 
   def transform(t: Map[String, DataFrame]): DataFrame = {
@@ -40,45 +39,45 @@ object PackingFact extends Pipeline {
       g(col("productionOrderNo")).as("production_order_no"),
       g(col("orderType")).as("order_type"),
       g(col("salesContractNo")).as("sales_contract_no"),
-      sw(col("designCode")).as("design_code"),
-      sw(col("designNumber")).as("design_number"),
+      truthySwap(col("designCode")).as("design_code"),
+      truthySwap(col("designNumber")).as("design_number"),
       // run.js:131-134 — ids stringified, code/type unswapped
       when(business.nullIfFalsyNum(col("buyerId")).isNotNull,
         col("buyerId").cast("string")).as("buyer_id"),
       g(col("buyerCode")).as("buyer_code"),
-      sw(col("buyerName")).as("buyer_name"),
-      sw(col("buyerAddress")).as("buyer_address"),
+      truthySwap(col("buyerName")).as("buyer_name"),
+      truthySwap(col("buyerAddress")).as("buyer_address"),
       g(col("buyerType")).as("buyer_type"),
       when(col("date").isNotNull,
         date_format(business.wibTimestamp(col("date")), "yyyy-MM-dd"))
         .as("date"),
       g(col("packingUom")).as("packing_uom"),
-      sw(col("colorCode")).as("color_code"),
-      sw(col("colorName")).as("color_name"),
-      sw(col("colorType")).as("color_type"),
+      truthySwap(col("colorCode")).as("color_code"),
+      truthySwap(col("colorName")).as("color_name"),
+      truthySwap(col("colorType")).as("color_type"),
       // run.js:141-146 — the material block
       when(business.nullIfFalsyNum(col("materialConstructionFinishId"))
         .isNotNull, col("materialConstructionFinishId").cast("string"))
         .as("material_construction_finish_id"),
-      sw(col("materialConstructionFinishName"))
+      truthySwap(col("materialConstructionFinishName"))
         .as("material_construction_finish_name"),
       when(business.nullIfFalsyNum(col("materialId")).isNotNull,
         col("materialId").cast("string")).as("material_id"),
-      sw(col("material")).as("material"),
-      sw(col("materialWidthFinish")).as("material_width_finish"),
-      sw(col("construction")).as("construction"),
-      sw(col("deliveryType")).as("delivery_type"),
-      sw(col("finishedProductType")).as("finished_product_type"),
-      sw(col("motif")).as("motif"),
-      sw(col("lot")).as("lot"),
-      sw(col("grade")).as("grade"),
+      truthySwap(col("material")).as("material"),
+      truthySwap(col("materialWidthFinish")).as("material_width_finish"),
+      truthySwap(col("construction")).as("construction"),
+      truthySwap(col("deliveryType")).as("delivery_type"),
+      truthySwap(col("finishedProductType")).as("finished_product_type"),
+      truthySwap(col("motif")).as("motif"),
+      truthySwap(col("lot")).as("lot"),
+      truthySwap(col("grade")).as("grade"),
       // M4: `x ? x : 0` (run.js:151-153)
       coalesce(business.nullIfFalsyNum(col("weight")), lit(0)).as("weight"),
       coalesce(business.nullIfFalsyNum(col("length")), lit(0)).as("length"),
       coalesce(business.nullIfFalsyNum(col("quantity")), lit(0))
         .as("quantity"),
-      sw(col("remark")).as("remark"),
-      sw(col("status")).as("status"),
+      truthySwap(col("remark")).as("remark"),
+      truthySwap(col("status")).as("status"),
       col("accepted").cast("string").as("accepted"),
       col("declined").cast("string").as("declined"))
   }
@@ -98,8 +97,6 @@ object PackingReceiptFact extends Pipeline {
   val sources = Seq("packingReceipts", "packingReceiptItems")
   val factKeys = Seq("code", "product")
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
   private def g(c: Column): Column = business.nullIfFalsyStr(c)
 
   def transform(t: Map[String, DataFrame]): DataFrame = {
@@ -119,17 +116,17 @@ object PackingReceiptFact extends Pipeline {
       col("declined").cast("string").as("declined"),
       g(col("referenceNo")).as("reference_no"),
       g(col("referenceType")).as("reference_type"),
-      sw(col("type")).as("type"),
+      truthySwap(col("type")).as("type"),
       g(col("productionOrderNo")).as("production_order_no"),
-      sw(col("buyer")).as("buyer"),
-      sw(col("colorName")).as("color_name"),
-      sw(col("construction")).as("construction"),
-      sw(col("packingUom")).as("packing_uom"),
-      sw(col("orderType")).as("order_type"),
-      sw(col("colorType")).as("color_type"),
+      truthySwap(col("buyer")).as("buyer"),
+      truthySwap(col("colorName")).as("color_name"),
+      truthySwap(col("construction")).as("construction"),
+      truthySwap(col("packingUom")).as("packing_uom"),
+      truthySwap(col("orderType")).as("order_type"),
+      truthySwap(col("colorType")).as("color_type"),
       g(col("designCode")).as("design_code"),
-      sw(col("designNumber")).as("design_number"),
-      sw(col("product")).as("product"),
+      truthySwap(col("designNumber")).as("design_number"),
+      truthySwap(col("product")).as("product"),
       // T5: numerics as quoted strings, truthiness-gated (run.js:157-159)
       business.nullIfFalsyNum(col("i_qty")).cast("string").as("quantity"),
       business.nullIfFalsyNum(col("i_len")).cast("string").as("length"),
@@ -149,28 +146,25 @@ object InventoryMovementFact extends Pipeline {
   override val watermarkColumn = "_lastmodifiedutc"
   val factKeys = Seq("code", "date")
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   def transform(t: Map[String, DataFrame]): DataFrame =
     t("inventoryMovements").select(
-      sw(col("storageCode")).as("storage_code"),
-      sw(col("storageName")).as("storage_name"),
+      truthySwap(col("storageCode")).as("storage_code"),
+      truthySwap(col("storageName")).as("storage_name"),
       when(col("date").isNotNull,
         date_format(business.wibTimestamp(col("date")), "yyyy-MM-dd"))
         .as("date"),
       col("quantity").as("quantity"),
       business.nullIfFalsyStr(col("type")).as("status"),
-      sw(col("productCode")).as("product_code"),
-      sw(col("productName")).as("product_name"),
-      sw(col("uom")).as("uom"),
+      truthySwap(col("productCode")).as("product_code"),
+      truthySwap(col("productName")).as("product_name"),
+      truthySwap(col("uom")).as("uom"),
       col("_deleted").cast("string").as("deleted"),
-      sw(col("code")).as("code"),
-      sw(col("referenceNo")).as("reference_no"),
-      sw(col("referenceType")).as("reference_type"),
+      truthySwap(col("code")).as("code"),
+      truthySwap(col("referenceNo")).as("reference_no"),
+      truthySwap(col("referenceType")).as("reference_type"),
       col("before").as("before"),
       col("after").as("after"),
-      sw(col("remark")).as("remark"))
+      truthySwap(col("remark")).as("remark"))
 }
 
 /**
@@ -184,17 +178,14 @@ object InventorySummaryFact extends Pipeline {
   override val watermarkColumn = "_lastmodifiedutc"
   val factKeys = Seq("code")
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   def transform(t: Map[String, DataFrame]): DataFrame =
     t("inventorySummaries").select(
-      sw(col("storageCode")).as("storage_code"),
-      sw(col("storageName")).as("storage_name"),
+      truthySwap(col("storageCode")).as("storage_code"),
+      truthySwap(col("storageName")).as("storage_name"),
       col("quantity").as("quantity"),
-      sw(col("productCode")).as("product_code"),
-      sw(col("productName")).as("product_name"),
-      sw(col("uom")).as("uom"),
+      truthySwap(col("productCode")).as("product_code"),
+      truthySwap(col("productName")).as("product_name"),
+      truthySwap(col("uom")).as("uom"),
       col("_deleted").cast("string").as("deleted"),
-      sw(col("code")).as("code"))
+      truthySwap(col("code")).as("code"))
 }

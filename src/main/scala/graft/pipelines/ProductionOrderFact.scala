@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
+import graft.functions.business.truthySwap
 
 /**
  * Production-order fact pipeline — re-expression of the reference's
@@ -24,24 +25,21 @@ object ProductionOrderFact extends Pipeline {
   // reference extracts >= the watermark (ProductionOrder/run.js:89)
   override val watermarkInclusive = true
 
-  private def sw(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   def transform(t: Map[String, DataFrame]): DataFrame = {
     val po = t("productionOrders")
     po.select(
-      sw(col("salesContractNo")).as("sales_contract_no"),
-      sw(col("orderNo")).as("production_order_no"),
-      sw(col("orderTypeName")).as("order_type"),
-      sw(col("processTypeName")).as("process_type"),
-      sw(col("materialName")).as("material"),
-      sw(col("materialConstructionName")).as("material_construction"),
-      sw(col("yarnMaterialName")).as("yarn_material_no"),
-      sw(col("materialWidth")).as("material_width"),
+      truthySwap(col("salesContractNo")).as("sales_contract_no"),
+      truthySwap(col("orderNo")).as("production_order_no"),
+      truthySwap(col("orderTypeName")).as("order_type"),
+      truthySwap(col("processTypeName")).as("process_type"),
+      truthySwap(col("materialName")).as("material"),
+      truthySwap(col("materialConstructionName")).as("material_construction"),
+      truthySwap(col("yarnMaterialName")).as("yarn_material_no"),
+      truthySwap(col("materialWidth")).as("material_width"),
       business.nullIfFalsyNum(col("orderQuantity")).as("order_quantity"),
-      sw(col("uomUnit")).as("order_uom"),
-      sw(col("buyerName")).as("buyer"),
-      sw(col("buyerType")).as("buyer_type"),
+      truthySwap(col("uomUnit")).as("order_uom"),
+      truthySwap(col("buyerName")).as("buyer"),
+      truthySwap(col("buyerType")).as("buyer_type"),
       when(col("deliveryDate").isNotNull,
         date_format(business.wibTimestamp(col("deliveryDate")), "yyyy-MM-dd"))
         .as("delivery_date"),
@@ -57,9 +55,9 @@ object ProductionOrderFact extends Pipeline {
         business.quoteSwap(col("materialConstructionName")),
         business.quoteSwap(col("yarnMaterialName")),
         business.quoteSwap(col("materialWidth"))).as("construction"),
-      sw(col("buyerCode")).as("buyer_code"),
+      truthySwap(col("buyerCode")).as("buyer_code"),
       col("isDeleted").cast("string").as("deleted"),
-      sw(col("accountUserName")).as("username"),
+      truthySwap(col("accountUserName")).as("username"),
       col("isClosed").cast("string").as("is_closed"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.business
+import graft.functions.business.truthySwap
 
 /**
  * Shipment-document fact — the deepest nesting shape in the reference
@@ -32,9 +33,6 @@ object ShipmentFact extends Pipeline {
     "packingReceiptItems")
   val factKeys = Seq("shipment_code", "detail_id", "item_id", "pri_id")
 
-  private def gs(c: Column): Column =
-    when(business.nullIfFalsyStr(c).isNotNull, business.quoteSwap(c))
-
   def transform(t: Map[String, DataFrame]): DataFrame = {
     // reference loops skip empty child lists at every level → INNER
     val j = t("shipments")
@@ -42,25 +40,25 @@ object ShipmentFact extends Pipeline {
       .join(t("shipmentItems"), Seq("detailId"))
       .join(t("packingReceiptItems"), Seq("itemId"))
     j.select(
-      gs(col("buyerCode")).as("buyer_code"),
-      gs(col("buyerName")).as("buyer_name"),
-      gs(col("buyerType")).as("buyer_type"),
-      gs(col("shipmentCode")).as("shipment_code"),
+      truthySwap(col("buyerCode")).as("buyer_code"),
+      truthySwap(col("buyerName")).as("buyer_name"),
+      truthySwap(col("buyerType")).as("buyer_type"),
+      truthySwap(col("shipmentCode")).as("shipment_code"),
       // run.js:180 — formatted WITHOUT the WIB shift
       when(col("deliveryDate").isNotNull,
         date_format(col("deliveryDate"), "yyyy-MM-dd")).as("delivery_date"),
       col("isVoid").cast("string").as("is_void"),
-      gs(col("designCode")).as("design_code"),
-      gs(col("designNumber")).as("design_number"),
-      gs(col("productionOrderNo")).as("production_order_no"),
-      gs(col("productionOrderType")).as("production_order_type"),
-      gs(col("colorType")).as("color_type"),
+      truthySwap(col("designCode")).as("design_code"),
+      truthySwap(col("designNumber")).as("design_number"),
+      truthySwap(col("productionOrderNo")).as("production_order_no"),
+      truthySwap(col("productionOrderType")).as("production_order_type"),
+      truthySwap(col("colorType")).as("color_type"),
       // `!= undefined` dialect (run.js:181,184,186): 0 survives
       col("length").as("length"),
-      gs(col("productCode")).as("product_code"),
-      gs(col("productName")).as("product_name"),
+      truthySwap(col("productCode")).as("product_code"),
+      truthySwap(col("productName")).as("product_name"),
       col("quantity").as("quantity"),
-      gs(col("uomUnit")).as("uom_unit"),
+      truthySwap(col("uomUnit")).as("uom_unit"),
       col("weight").as("weight"),
       col("detailId").as("detail_id"),
       col("itemId").as("item_id"),

@@ -480,8 +480,8 @@ object MoreEtlQueries {
         "window order — one stratum-keyed shuffle, no global sort, no RNG"),
 
     // ── Z-order clustering key: bit-interleaved (custkey, order-day) —
-    // the multi-dimensional data-skipping layout; graft.ops.layout
-    // .clusterBy range-partitions on this key at write time ──
+    // the multi-dimensional data-skipping layout: range-partitioning a
+    // write on this key keeps every file's min/max tight on both ──
     QuerySpec("q82_zorder_cluster",
       (s, dir) => t(s, dir, "orders")
         .select(col("o_orderkey"),

@@ -1874,7 +1874,7 @@ object TextQueries {
         val docs = Tables.load(s, dir, "documents")
         val corpus = docs.filter(col("doc_id") % 101 =!= 0)
         val probes = docs.filter(col("doc_id") % 101 === 0)
-        graft.operators.LexIndex.ensureLexIndexSnap(corpus, "doc_id",
+        graft.operators.LexIndex.ensureLexIndex(corpus, "doc_id",
           "text", base = "graft_lex_q139", key = VectorQueries.docsKey(corpus), buckets = 8)
         graft.operators.LexIndex.bm25TopKIndexed(s, probes, "doc_id",
           "text", base = "graft_lex_q139", k = 10)
@@ -1947,7 +1947,7 @@ object TextQueries {
         val docs = Tables.load(s, dir, "documents")
         val corpus = docs.filter(col("doc_id") % 101 =!= 0)
         val probes = docs.filter(col("doc_id") % 101 === 0)
-        graft.operators.LexIndex.ensureLexIndexSnap(corpus, "doc_id",
+        graft.operators.LexIndex.ensureLexIndex(corpus, "doc_id",
           "text", base = "graft_lex_q142", key = VectorQueries.docsKey(corpus), buckets = 8)
         graft.operators.LexIndex.tombstoneLexDocs(s, "graft_lex_q142",
           corpus.filter(col("doc_id") % 7 === 1).select("doc_id"))

@@ -74,9 +74,9 @@ object VectorQueries {
     * deterministic functions of their key, so within one process the
     * first write settles the content — re-dumping per bench sample
     * only added an agg job plus a coalesce(1) /tmp write to every
-    * timed run (ADVICE r10 on q50/q51). Cross-run staleness
-    * protection is unchanged: a new binary's first run still
-    * overwrites whatever an older code version left behind. */
+    * timed run (ADVICE r10 on q50/q51). Across runs nothing changes:
+    * a new binary's first run still overwrites whatever an older code
+    * version left behind. */
   private val dumpedThisRun =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -2069,7 +2069,7 @@ object VectorQueries {
         // state and the oracle's dumped state can never diverge; r20
         // gates the per-call key aggregation behind the snapshot
         // check, so steady state plans NO corpus-sized scan.
-        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndexSnap(
+        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndex(
           corpusEmbs, "vec_id", "embedding", base = "graft_ann_q133",
           dim = 64, key = corpusKey(corpusEmbs),
           nCentroids = 16, m = 16, pqK = 16, buckets = 8)
@@ -2106,7 +2106,7 @@ object VectorQueries {
         val corpusDocs = docs.filter(col("doc_id") % 101 =!= 0)
         val probeDocs = docs.filter(col("doc_id") % 101 === 0)
         val corpusEmbs = embs.filter(col("vec_id") % 101 =!= 0)
-        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndexSnap(
+        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndex(
           corpusEmbs, "vec_id", "embedding", base = "graft_ann_q133",
           dim = 64, key = corpusKey(corpusEmbs),
           nCentroids = 16, m = 16, pqK = 16, buckets = 8)
@@ -2193,13 +2193,13 @@ object VectorQueries {
         val embs = Tables.load(s, dir, "embeddings")
         val corpusDocs = docs.filter(col("doc_id") % 101 =!= 0)
         val corpusEmbs = embs.filter(col("vec_id") % 101 =!= 0)
-        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndexSnap(
+        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndex(
           corpusEmbs, "vec_id", "embedding", base = "graft_ann_q133",
           dim = 64, key = corpusKey(corpusEmbs),
           nCentroids = 16, m = 16, pqK = 16, buckets = 8)
         for (t <- Seq("centroids", "codebooks", "codes"))
           dumpOracle(s.table(s"graft_ann_q133_$t"), t, n, fp)
-        graft.operators.LexIndex.ensureLexIndexSnap(corpusDocs, "doc_id",
+        graft.operators.LexIndex.ensureLexIndex(corpusDocs, "doc_id",
           "text", base = "graft_lex_q139", key = docsKey(corpusDocs), buckets = 8)
         graft.operators.Retrieval.hybridStandingTopK(s,
           docs.filter(col("doc_id") % 101 === 0), "doc_id", "text",
@@ -2228,7 +2228,7 @@ object VectorQueries {
       (s, dir) => {
         val embs = Tables.load(s, dir, "embeddings")
         val corpusEmbs = embs.filter(col("vec_id") % 101 =!= 0)
-        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndexSnap(
+        val (n, fp) = graft.operators.AnnIndex.ensureAnnIndex(
           corpusEmbs, "vec_id", "embedding", base = "graft_ann_q141",
           dim = 64, key = corpusKey(corpusEmbs),
           nCentroids = 16, m = 16, pqK = 16, buckets = 8)
@@ -2333,44 +2333,32 @@ object VectorQueries {
         // the LIVE corpus identity (post-delete) keys the replay dumps
         // — distinct from q133's full-corpus index by construction.
         // ingest-if-needed: the wave replay is guarded by its own key
-        // (the ensureAnnIndex drop-key-first discipline — a crash
-        // mid-ingest leaves no key, the next call replays from wave 0);
-        // r20 gates the per-call key aggregation behind the snapshot
-        // check, so steady state plans NO corpus-sized scan
-        val ingestKey = s"${annBase}_ingestkey"
+        // (StandingState.ensure — a crash mid-ingest leaves no key, the
+        // next call replays from wave 0; steady state plans NO
+        // corpus-sized scan)
         val liveEmbs = corpusEmbs.filter(col("vec_id") % 91 =!= 3)
-        val (n, fp) = graft.operators.StandingState.ensureWithSnapshot(
-          liveEmbs, ingestKey, corpusKey(liveEmbs)) { case (kn, kfp) =>
-          val fresh = scala.util.Try {
-            val r = s.table(ingestKey).head()
-            (r.getLong(0), r.getLong(1)) == (kn, kfp)
-          }.getOrElse(false)
-          if (!fresh) {
-            graft.operators.AnnIndex.dropStale(s, ingestKey)
-            graft.operators.AnnIndex.writeAnnIndex(
-              corpusEmbs.filter(col("vec_id") % 3 === 0), "vec_id",
-              "embedding", annBase, dim = 64, nCentroids = 16, m = 16,
-              pqK = 16, buckets = 8)
-            graft.operators.LexIndex.writeLexIndex(
-              corpusDocs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-              lexBase, buckets = 8)
-            for (w <- 1 to 2) {
-              graft.operators.AnnIndex.appendToAnnIndex(s,
-                corpusEmbs.filter(col("vec_id") % 3 === w), "vec_id",
-                "embedding", annBase, buckets = 8)
-              graft.operators.LexIndex.appendToLexIndexExactlyOnce(s,
-                corpusDocs.filter(col("doc_id") % 3 === w), "doc_id",
-                "text", lexBase, batchId = w, buckets = 8)
-            }
-            // the takedown wave: deletes land on BOTH standing indexes
-            graft.operators.AnnIndex.tombstoneAnnIds(s, annBase,
-              corpusEmbs.filter(col("vec_id") % 91 === 3).select("vec_id"))
-            graft.operators.LexIndex.tombstoneLexDocs(s, lexBase,
-              corpusDocs.filter(col("doc_id") % 91 === 3).select("doc_id"))
-            Seq((kn, kfp)).toDF("n", "fp").coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .saveAsTable(ingestKey)
+        val (n, fp) = graft.operators.StandingState.ensure(liveEmbs,
+            s"${annBase}_ingestkey", corpusKey(liveEmbs)) {
+          graft.operators.AnnIndex.writeAnnIndex(
+            corpusEmbs.filter(col("vec_id") % 3 === 0), "vec_id",
+            "embedding", annBase, dim = 64, nCentroids = 16, m = 16,
+            pqK = 16, buckets = 8)
+          graft.operators.LexIndex.writeLexIndex(
+            corpusDocs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+            lexBase, buckets = 8)
+          for (w <- 1 to 2) {
+            graft.operators.AnnIndex.appendToAnnIndex(s,
+              corpusEmbs.filter(col("vec_id") % 3 === w), "vec_id",
+              "embedding", annBase, buckets = 8)
+            graft.operators.LexIndex.appendToLexIndexExactlyOnce(s,
+              corpusDocs.filter(col("doc_id") % 3 === w), "doc_id",
+              "text", lexBase, batchId = w, buckets = 8)
           }
+          // the takedown wave: deletes land on BOTH standing indexes
+          graft.operators.AnnIndex.tombstoneAnnIds(s, annBase,
+            corpusEmbs.filter(col("vec_id") % 91 === 3).select("vec_id"))
+          graft.operators.LexIndex.tombstoneLexDocs(s, lexBase,
+            corpusDocs.filter(col("doc_id") % 91 === 3).select("doc_id"))
         }
         for (t <- Seq("centroids", "codebooks", "codes"))
           dumpOracle(s.table(s"${annBase}_$t"), t, n, fp)

@@ -328,26 +328,14 @@ object Serve {
                 s""""error":"${jsonEscape(msg)}"}""")
           }
         } else if (path == "status") {
-          // the control table is rows-per-run tiny (WatermarkManager
-          // scaladoc) — ONE collect serves both the latest row and the
-          // watermark per pipeline (no per-pipeline re-read)
-          val runs = control.log
-            .orderBy(org.apache.spark.sql.functions.col("finish").desc)
-            .collect()
-          val entries = runs.groupBy(_.getString(0)).toSeq.sortBy(_._1)
-            .map { case (name, rs) =>
-              val r = rs.head // newest finish first
-              // watermark rule = WatermarkManager.lastWatermark: start
-              // of the latest Successful run, epoch when none exists
-              val wm = rs.find(_.getString(4) == "Successful")
-                .map(_.getTimestamp(1)).getOrElse(control.epoch)
-              s"""{"pipeline":"${jsonEscape(name)}",""" +
-                s""""lastStart":"${r.getTimestamp(1)}",""" +
-                s""""lastFinish":"${r.getTimestamp(2)}",""" +
-                s""""executionTime":"${jsonEscape(r.getString(3))}",""" +
-                s""""status":"${jsonEscape(r.getString(4))}",""" +
-                s""""watermark":"$wm"}"""
-            }
+          val entries = control.latestRuns().map { case (r, wm) =>
+            s"""{"pipeline":"${jsonEscape(r.getString(0))}",""" +
+              s""""lastStart":"${r.getTimestamp(1)}",""" +
+              s""""lastFinish":"${r.getTimestamp(2)}",""" +
+              s""""executionTime":"${jsonEscape(r.getString(3))}",""" +
+              s""""status":"${jsonEscape(r.getString(4))}",""" +
+              s""""watermark":"$wm"}"""
+          }
           respond(ex, 200, entries.mkString("[", ",", "]"))
         } else {
           try {

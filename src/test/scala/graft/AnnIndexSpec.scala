@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, ProductQuant, Similarity}
+import graft.operators.{AnnIndex, ProductQuant, Similarity, StandingState}
 
 /** Persisted IVF+PQ index state: search parity with the per-call
   * operator, Exchange-free state side, bucket pruning to the probed
@@ -19,7 +19,7 @@ class AnnIndexSpec extends SparkSpec {
   private def freshTables(): Unit = {
     spark.catalog.clearCache()
     for (t <- Seq(s"${Base}_centroids", s"${Base}_codebooks",
-        s"${Base}_codes", s"${Base}_stats")) {
+        s"${Base}_codes")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val p = new org.apache.hadoop.fs.Path(s"spark-warehouse/$t")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -29,6 +29,15 @@ class AnnIndexSpec extends SparkSpec {
 
   private def embeddings =
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+
+  /** The codes table's data files: a build rewrites every one of them,
+    * a skipped ensure leaves them as they were. */
+  private def codesFiles(): Set[String] =
+    if (!spark.catalog.tableExists(s"${Base}_codes")) Set.empty
+    else {
+      spark.catalog.refreshTable(s"${Base}_codes")
+      spark.table(s"${Base}_codes").inputFiles.toSet
+    }
 
   test("bucketed search over persisted state ≡ per-call ivfPqTopK, bit-identical") {
     freshTables()
@@ -168,8 +177,6 @@ class AnnIndexSpec extends SparkSpec {
     val expected = enc(AnnIndex.encodeCorpus(e, "vec_id", "embedding",
       cents, model))
     assert(stored === expected)
-    // the append records its fit stats for every appended row
-    assert(AnnIndex.staleness(spark, Base).appendedRows === e2.count())
     // and the appended rows are immediately searchable
     val hits = AnnIndex.ivfPqTopKBucketed(spark, e.filter(col("vec_id") < 10),
       "vec_id", "embedding", k, Base, nProbe)
@@ -177,41 +184,38 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("ensureAnnIndex builds once per corpus key, rebuilds on a swap") {
-    import org.apache.spark.sql.functions._
     freshTables()
     spark.sql(s"DROP TABLE IF EXISTS ${Base}_corpuskey")
+    StandingState.clearSnapshotMemo()
     val e = embeddings
-    val built1 = graft.operators.AnnIndex.ensureAnnIndex(e, "vec_id",
-      "embedding", Base, dim, key = (1L, 42L), nCent, m, pqK, buckets)
-    assert(built1, "first call must build")
+    // true when the call rebuilt the index
+    def ensure(c: org.apache.spark.sql.DataFrame, key: (Long, Long),
+               bk: Int): Boolean = {
+      val before = codesFiles()
+      AnnIndex.ensureAnnIndex(c, "vec_id", "embedding", Base, dim, key,
+        nCent, m, pqK, bk)
+      codesFiles() != before
+    }
+    assert(ensure(e, (1L, 42L), buckets), "first call must build")
     val codes1 = spark.table(s"${Base}_codes").count()
-    val built2 = graft.operators.AnnIndex.ensureAnnIndex(e, "vec_id",
-      "embedding", Base, dim, key = (1L, 42L), nCent, m, pqK, buckets)
-    assert(!built2, "same key must skip the rebuild")
+    assert(!ensure(e, (1L, 42L), buckets), "same key must skip the rebuild")
     // a different corpus key forces a rebuild — here over a SMALLER
     // corpus so the swap is visible in the codes row count
-    val built3 = graft.operators.AnnIndex.ensureAnnIndex(
-      e.filter(col("vec_id") < 100), "vec_id",
-      "embedding", Base, dim, key = (2L, 43L), nCent, m, pqK, buckets)
-    assert(built3, "new key must rebuild")
+    val small = e.filter(col("vec_id") < 100)
+    assert(ensure(small, (2L, 43L), buckets), "new key must rebuild")
     assert(spark.table(s"${Base}_codes").count() < codes1)
     // same corpus key but different build GEOMETRY is a different
     // index — the params ride the persisted key, so this must rebuild
-    val built4 = graft.operators.AnnIndex.ensureAnnIndex(
-      e.filter(col("vec_id") < 100), "vec_id",
-      "embedding", Base, dim, key = (2L, 43L), nCent, m, pqK,
-      buckets = buckets + 1)
-    assert(built4, "changed build params must rebuild")
-    // and a key table from a crashed build must not exist: simulate
-    // the crash window by dropping one index table — the key was
-    // written after ALL index tables, so the inverse (key present,
-    // index mixed) is unreachable; here we just assert the freshness
-    // probe rebuilds when the key is absent even with index tables up
+    assert(ensure(small, (2L, 43L), buckets + 1),
+      "changed build params must rebuild")
+    assert(!ensure(small, (2L, 43L), buckets + 1))
+    // the key is written after ALL index tables, so the inverse (key
+    // present, index mixed) is unreachable; a missing key (a crashed
+    // build) must rebuild even with every index table up
     spark.sql(s"DROP TABLE IF EXISTS ${Base}_corpuskey")
-    val built5 = graft.operators.AnnIndex.ensureAnnIndex(
-      e.filter(col("vec_id") < 100), "vec_id",
-      "embedding", Base, dim, key = (2L, 43L), nCent, m, pqK, buckets)
-    assert(built5, "missing key (crashed build) must rebuild")
+    assert(ensure(small, (2L, 43L), buckets + 1),
+      "missing key (crashed build) must rebuild")
+    assert(spark.table(s"${Base}_corpuskey").count() === 1)
   }
 
   test("ensureAnnIndexSnap: steady state skips the key aggregation; " +
@@ -219,7 +223,7 @@ class AnnIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     freshTables()
     spark.sql(s"DROP TABLE IF EXISTS ${Base}_corpuskey")
-    graft.operators.StandingState.clearSnapshotMemo()
+    StandingState.clearSnapshotMemo()
     val dir0 = java.nio.file.Files.createTempDirectory("annsnap").toString
     embeddings.write.mode("overwrite").parquet(dir0)
     var dataDir = dir0
@@ -229,12 +233,12 @@ class AnnIndexSpec extends SparkSpec {
       evals += 1
       (c.count(), 7L)
     }
-    val k1 = graft.operators.AnnIndex.ensureAnnIndexSnap(corpus,
+    val k1 = AnnIndex.ensureAnnIndex(corpus,
       "vec_id", "embedding", Base, dim, key(corpus), nCent, m, pqK,
       buckets)
     assert(evals === 1)
     val codes1 = spark.table(s"${Base}_codes").count()
-    val k2 = graft.operators.AnnIndex.ensureAnnIndexSnap(corpus,
+    val k2 = AnnIndex.ensureAnnIndex(corpus,
       "vec_id", "embedding", Base, dim, key(corpus), nCent, m, pqK,
       buckets)
     assert(evals === 1, "steady state must NOT re-aggregate the corpus")
@@ -246,7 +250,7 @@ class AnnIndexSpec extends SparkSpec {
     embeddings.filter(col("vec_id") < 100).write
       .mode("overwrite").parquet(dir1)
     dataDir = dir1
-    val k3 = graft.operators.AnnIndex.ensureAnnIndexSnap(corpus,
+    val k3 = AnnIndex.ensureAnnIndex(corpus,
       "vec_id", "embedding", Base, dim, key(corpus), nCent, m, pqK,
       buckets)
     assert(evals === 2, "changed corpus files must re-derive the key")
@@ -347,58 +351,6 @@ class AnnIndexSpec extends SparkSpec {
       m2.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
-  test("staleness: drifted appends trip the metric, rebuild restores " +
-      "it and the recall floor") {
-    freshTables()
-    val e = embeddings
-    val e1 = e.filter(col("vec_id") % 5 =!= 0)
-    // production config (m=16) so a post-rebuild recall floor means
-    // something, as in the recall test below
-    AnnIndex.writeAnnIndex(e1, "vec_id", "embedding", Base, dim,
-      nCentroids = nCent, m = 16, pqK = 16, buckets = buckets)
-    // a fresh build has no appended generations: ratio is exactly 1
-    assert(AnnIndex.staleness(spark, Base).ratio === 1.0)
-    // drifted appends: rescaled + offset vectors — the embedding-model-
-    // swap shape of drift. The frozen codebooks were fitted on zero-
-    // centred components, so reconstruction error on the shifted batch
-    // jumps, exactly the decay the metric must see
-    val drifted = e.filter(col("vec_id") % 5 === 0)
-      .withColumn("embedding",
-        transform(col("embedding"), x => x * lit(0.2) + lit(0.4))
-          .cast("array<float>"))
-    AnnIndex.appendToAnnIndex(spark, drifted, "vec_id", "embedding", Base,
-      buckets = buckets)
-    val after = AnnIndex.staleness(spark, Base)
-    assert(after.ratio > 1.25, s"drifted batch must trip: $after")
-    assert(after.appendedRows > 0 && after.builtRows > 0)
-    // a rebuild over the current corpus restores the baseline (fresh
-    // fit → fresh gen-0 stats; no appends → ratio 1)
-    val full = e1.unionByName(drifted)
-    def rebuild(): Unit = AnnIndex.writeAnnIndex(full, "vec_id",
-      "embedding", Base, dim, nCentroids = nCent, m = 16, pqK = 16,
-      buckets = buckets)
-    rebuild()
-    assert(AnnIndex.staleness(spark, Base).ratio === 1.0)
-    // a legacy index (persisted before fit-stats existed) has no
-    // baseline: staleness reports +∞, and a rebuild seeds the missing
-    // gen-0 row
-    spark.sql(s"DROP TABLE IF EXISTS ${Base}_stats")
-    assert(AnnIndex.staleness(spark, Base).ratio.isPosInfinity)
-    rebuild()
-    assert(AnnIndex.staleness(spark, Base).ratio === 1.0)
-    // recall floor re-asserted against exact L2 over the REBUILT state
-    val q = full.filter(col("vec_id") < 10)
-    val approx = AnnIndex.ivfPqTopKBucketed(spark, q, "vec_id", "embedding",
-      k, Base, nProbe = 6).select("query_id", "neighbor_id")
-    val exact = Similarity.l2TopK(full, q, "vec_id", "embedding", k)
-      .select("query_id", "neighbor_id")
-    val total = exact.count()
-    val hits = exact.join(approx, Seq("query_id", "neighbor_id"),
-      "left_semi").count()
-    assert(total > 0 && hits.toDouble / total >= 0.3,
-      s"recall ${hits.toDouble / total} below floor after rebuild")
-  }
-
   test("recall@k of the persisted index vs exact L2 is usable") {
     freshTables()
     val e = embeddings
@@ -423,6 +375,25 @@ class AnnIndexSpec extends SparkSpec {
     // same fixture + same fits measure 0.34 every run.
     assert(hits.toDouble / total >= 0.3,
       s"recall ${hits.toDouble / total} below floor")
+    // a rebuild over a drifted corpus (rescaled + offset vectors for
+    // every 5th id — the embedding-model-swap shape) must clear the
+    // same floor against exact L2 over the REBUILT state
+    val drifted = e.filter(col("vec_id") % 5 =!= 0).unionByName(
+      e.filter(col("vec_id") % 5 === 0).withColumn("embedding",
+        transform(col("embedding"), x => x * lit(0.2) + lit(0.4))
+          .cast("array<float>")))
+    AnnIndex.writeAnnIndex(drifted, "vec_id", "embedding", Base, dim,
+      nCentroids = nCent, m = 16, pqK = 16, buckets = buckets)
+    val dq = drifted.filter(col("vec_id") < 10)
+    val dApprox = AnnIndex.ivfPqTopKBucketed(spark, dq, "vec_id",
+      "embedding", k, Base, nProbe = 6).select("query_id", "neighbor_id")
+    val dExact = Similarity.l2TopK(drifted, dq, "vec_id", "embedding", k)
+      .select("query_id", "neighbor_id")
+    val dTotal = dExact.count()
+    val dHits = dExact.join(dApprox, Seq("query_id", "neighbor_id"),
+      "left_semi").count()
+    assert(dTotal > 0 && dHits.toDouble / dTotal >= 0.3,
+      s"recall ${dHits.toDouble / dTotal} below floor after rebuild")
   }
   test("tombstones: search ≡ index without the rows; compact applies and clears; rebuild resets") {
     freshTables()
@@ -450,7 +421,7 @@ class AnnIndexSpec extends SparkSpec {
     // a re-fit over the filtered corpus would move the centroids and
     // prove nothing)
     val twin = "astate_twin"
-    for (t <- Seq("centroids", "codebooks", "codes", "stats", "tombstones")) {
+    for (t <- Seq("centroids", "codebooks", "codes", "tombstones")) {
       spark.sql(s"DROP TABLE IF EXISTS ${twin}_$t")
       val p = new org.apache.hadoop.fs.Path(s"spark-warehouse/${twin}_$t")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -510,20 +481,24 @@ class AnnIndexSpec extends SparkSpec {
     val e = embeddings
     AnnIndex.writeAnnIndex(e, "vec_id", "embedding", Base, dim,
       nCentroids = nCent, m = m, pqK = pqK, buckets = buckets)
-    assert(AnnIndex.tombstoneFraction(spark, Base) === 0.0)
-    assert(!AnnIndex.compactIfDead(spark, Base, 0.3, buckets))
+    val tombs = s"${Base}_tombstones"
+    def ids = spark.table(s"${Base}_codes").count()
+    def compactIfDead(bound: Double): Boolean =
+      StandingState.compactIfDead(spark, tombs, ids, bound)(
+        AnnIndex.compactAnnIndex(spark, Base, buckets))
+    assert(StandingState.deadFraction(spark, tombs, ids) === 0.0)
+    assert(!compactIfDead(0.3))
     // ~1/5 of ids dead → dead/live = 0.25: under 0.3, over 0.1
     AnnIndex.tombstoneAnnIds(spark, Base,
       e.filter(col("vec_id") % 5 === 2).select("vec_id"))
-    val frac = AnnIndex.tombstoneFraction(spark, Base)
+    val frac = StandingState.deadFraction(spark, tombs, ids)
     assert(frac > 0.1 && frac < 0.3, s"fixture fraction $frac")
-    assert(!AnnIndex.compactIfDead(spark, Base, 0.3, buckets))
-    assert(spark.catalog.tableExists(s"${Base}_tombstones"))
-    assert(AnnIndex.compactIfDead(spark, Base, 0.1, buckets))
-    assert(!spark.catalog.tableExists(s"${Base}_tombstones"))
-    assert(AnnIndex.tombstoneFraction(spark, Base) === 0.0)
-    assert(!AnnIndex.compactIfDead(spark, Base, 0.1, buckets),
-      "already applied — must not loop")
+    assert(!compactIfDead(0.3))
+    assert(spark.catalog.tableExists(tombs))
+    assert(compactIfDead(0.1))
+    assert(!spark.catalog.tableExists(tombs))
+    assert(StandingState.deadFraction(spark, tombs, ids) === 0.0)
+    assert(!compactIfDead(0.1), "already applied — must not loop")
   }
 
   test("compaction crash windows: staging-write crash is discarded, " +

@@ -233,16 +233,6 @@ class BpeSpec extends SparkSpec {
     assert(stream === expected)
   }
 
-  test("persisted model round-trips exactly through the warehouse") {
-    val docs = Tables.load(spark, dir, "documents")
-    val model = Bpe.fit(docs, "doc_id", "text", nMerges = 64)
-    Bpe.writeBpeModel(spark, model, "graft_bpespec")
-    assert(Bpe.readBpeModel(spark, "graft_bpespec") === model)
-    // overwrite is idempotent
-    Bpe.writeBpeModel(spark, model, "graft_bpespec")
-    assert(Bpe.readBpeModel(spark, "graft_bpespec") === model)
-  }
-
   test("exact token counts drive packing and shard manifests") {
     val docs = Tables.load(spark, dir, "documents")
     // 32 merges: the fixture's ~61-piece vocabulary must NOT merge to

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, StandingState, TextAnalysis}
 
 class DedupSpec extends SparkSpec {
 
@@ -539,9 +539,11 @@ class DedupSpec extends SparkSpec {
     assert(night("tstate2") !== want,
       "fixture must contain a batch doc shadowed only by a deleted doc")
     // compaction applies physically (both tables) and clears
-    val frac = Dedup.tombstoneFraction(spark, "tstate")
+    def sigs = spark.table("tstate_sigs").count()
+    val frac = StandingState.deadFraction(spark, "tstate_tombstones", sigs)
     assert(frac > 0.1, s"fixture dead mass $frac")
-    assert(Dedup.compactIfDead(spark, "tstate", 0.1, buckets))
+    assert(StandingState.compactIfDead(spark, "tstate_tombstones", sigs,
+      0.1)(Dedup.compactDedupState(spark, "tstate", buckets)))
     assert(!spark.catalog.tableExists("tstate_tombstones"))
     assert(spark.table("tstate_sigs")
       .filter(col("doc_id") % 7 === 1 && col("doc_id") < 250).count() === 0)

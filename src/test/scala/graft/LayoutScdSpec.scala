@@ -96,15 +96,4 @@ class LayoutScdSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(z.map(_ >> 4).distinct.length === 1)
   }
-
-  test("clusterBy plans a range partitioning on the cluster key") {
-    import spark.implicits._
-    val df = (1 to 1000).map(i => (i.toLong, (i * 37 % 100).toLong))
-      .toDF("a", "b")
-    val plan = layout.clusterBy(df,
-        layout.zorder2(col("a"), col("b")), 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"),
-      s"expected range partitioning on z-key, got:\n$plan")
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, CorpusStats, LexIndex, Retrieval}
+import graft.operators.{AnnIndex, CorpusStats, LexIndex, Retrieval, StandingState}
 
 /** Persisted BM25 postings state: scoring parity with the per-call
   * operator (bit-identical, both vocab-gate paths), append ≡ rebuild,
@@ -43,6 +43,15 @@ class LexIndexSpec extends SparkSpec {
 
   private def probes: DataFrame = docs.filter(col("doc_id") % 23 === 0)
 
+  /** The postings table's data files: a build rewrites every one of
+    * them, a skipped ensure leaves them as they were. */
+  private def postingsFiles(): Set[String] =
+    if (!spark.catalog.tableExists(s"${Base}_postings")) Set.empty
+    else {
+      spark.catalog.refreshTable(s"${Base}_postings")
+      spark.table(s"${Base}_postings").inputFiles.toSet
+    }
+
   private def rows(df: DataFrame): Set[(Long, Int, Long, Long)] =
     df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -52,15 +61,31 @@ class LexIndexSpec extends SparkSpec {
     freshTables()
     val d = docs
     LexIndex.writeLexIndex(d, "doc_id", "text", Base, Buckets)
+    // each operator on both sides of the probe-vocabulary bound: the
+    // collected-vocabulary plan (the default at this size) and, with
+    // the bound at 0, the plain-join gate
     val perCall = rows(CorpusStats.bm25TopK(d, "doc_id", "text",
       probes, "doc_id", "text", K))
-    val viaIsin = rows(LexIndex.bm25TopKIndexed(spark, probes,
-      "doc_id", "text", Base, K))
-    val viaJoin = rows(LexIndex.bm25TopKIndexed(spark, probes,
-      "doc_id", "text", Base, K, collectVocab = false))
-    assert(viaIsin === perCall)
-    assert(viaJoin === perCall)
+    val perCallJoin = rows(CorpusStats.bm25TopKWithin(d, "doc_id", "text",
+      probes, "doc_id", "text", K, dfCap = 1.0, probeBound = 0))
+    val isin = LexIndex.bm25TopKIndexed(spark, probes,
+      "doc_id", "text", Base, K)
+    val join = LexIndex.bm25TopKIndexedWithin(spark, probes,
+      "doc_id", "text", Base, K, dfCap = 1.0, probeBound = 0)
+    assert(perCallJoin === perCall)
+    assert(rows(isin) === perCall)
+    assert(rows(join) === perCall)
     assert(perCall.nonEmpty)
+    // the bound picked the plan: only the collected vocabulary becomes
+    // an IN predicate on the postings term
+    def termIn(df: DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+        case _: org.apache.spark.sql.catalyst.expressions.In |
+             _: org.apache.spark.sql.catalyst.expressions.InSet => true
+        case _ => false
+      }))
+    assert(termIn(isin))
+    assert(!termIn(join))
   }
 
   test("dfCap stopword gating matches the per-call operator") {
@@ -85,7 +110,8 @@ class LexIndexSpec extends SparkSpec {
     val old = d.filter(col("doc_id") % 3 =!= 0)
     val batch = d.filter(col("doc_id") % 3 === 0)
     LexIndex.writeLexIndex(old, "doc_id", "text", Base, Buckets)
-    LexIndex.appendToLexIndex(spark, batch, "doc_id", "text", Base, Buckets)
+    LexIndex.appendToLexIndexExactlyOnce(spark, batch, "doc_id", "text",
+      Base, batchId = 1L, Buckets)
     val incremental = rows(LexIndex.bm25TopKIndexed(spark, probes,
       "doc_id", "text", Base, K))
     freshTables()
@@ -104,9 +130,9 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.writeLexIndex(d.filter(col("doc_id") % slices === 0),
       "doc_id", "text", Base, Buckets)
     for (b <- 1 until slices)
-      LexIndex.appendToLexIndex(spark,
+      LexIndex.appendToLexIndexExactlyOnce(spark,
         d.filter(col("doc_id") % slices === b), "doc_id", "text",
-        Base, Buckets)
+        Base, batchId = b.toLong, Buckets)
     def files: Int = {
       val loc = new org.apache.hadoop.fs.Path(
         spark.sessionState.catalog.getTableMetadata(
@@ -137,25 +163,33 @@ class LexIndexSpec extends SparkSpec {
       s.bucketColumnNames == Seq("term")))
     // ingest keeps working against the compacted table
     import spark.implicits._
-    LexIndex.appendToLexIndex(spark,
+    LexIndex.appendToLexIndexExactlyOnce(spark,
       Seq((900010L, "zq zq unique tokens")).toDF("doc_id", "text"),
-      "doc_id", "text", Base, Buckets)
+      "doc_id", "text", Base, batchId = slices.toLong, Buckets)
     assert(spark.table(s"${Base}_postings")
       .filter(col("doc_id") === 900010L).count() > 0)
   }
 
   test("ensureLexIndex: fresh key skips, corpus or bucket change rebuilds, crash window leaves no key") {
     freshTables()
+    StandingState.clearSnapshotMemo()
     val d = docs
     val key = (d.count(), 424242L)
-    assert(LexIndex.ensureLexIndex(d, "doc_id", "text", Base, key, Buckets))
-    assert(!LexIndex.ensureLexIndex(d, "doc_id", "text", Base, key, Buckets))
-    // different corpus key → rebuild
-    assert(LexIndex.ensureLexIndex(d, "doc_id", "text", Base,
-      (key._1, key._2 + 1), Buckets))
+    // true when the call rebuilt the index
+    def ensure(key: (Long, Long), buckets: Int): Boolean = {
+      val before = postingsFiles()
+      LexIndex.ensureLexIndex(d, "doc_id", "text", Base, key, buckets)
+      postingsFiles() != before
+    }
+    assert(ensure(key, Buckets))
+    assert(!ensure(key, Buckets))
+    // different corpus key → rebuild (the memo is cleared first: with
+    // the corpus files unchanged, a warm process would not re-derive
+    // the key at all)
+    StandingState.clearSnapshotMemo()
+    assert(ensure((key._1, key._2 + 1), Buckets))
     // same key, different bucket count → different index → rebuild
-    assert(LexIndex.ensureLexIndex(d, "doc_id", "text", Base,
-      (key._1, key._2 + 1), Buckets * 2))
+    assert(ensure((key._1, key._2 + 1), Buckets * 2))
     // the crash-window ordering observable: a key only ever describes a
     // fully-committed index, so after every successful ensure exactly
     // one key row exists (a crash mid-build would have left zero)
@@ -165,7 +199,7 @@ class LexIndexSpec extends SparkSpec {
   test("ensureLexIndexSnap: steady state skips the key aggregation; " +
       "stale corpus and out-of-band key mutation still detected") {
     freshTables()
-    graft.operators.StandingState.clearSnapshotMemo()
+    StandingState.clearSnapshotMemo()
     val dir0 = java.nio.file.Files.createTempDirectory("lexsnap").toString
     docs.write.mode("overwrite").parquet(dir0)
     var dataDir = dir0
@@ -179,10 +213,10 @@ class LexIndexSpec extends SparkSpec {
         .head()
       (r.getLong(0), r.getLong(1))
     }
-    val k1 = LexIndex.ensureLexIndexSnap(corpus, "doc_id", "text", Base,
+    val k1 = LexIndex.ensureLexIndex(corpus, "doc_id", "text", Base,
       key(corpus), Buckets)
     assert(evals === 1, "first call must derive the key from data")
-    val k2 = LexIndex.ensureLexIndexSnap(corpus, "doc_id", "text", Base,
+    val k2 = LexIndex.ensureLexIndex(corpus, "doc_id", "text", Base,
       key(corpus), Buckets)
     assert(evals === 1, "steady state must NOT re-aggregate the corpus")
     assert(k2 === k1, "steady state must return the key in force")
@@ -203,7 +237,7 @@ class LexIndexSpec extends SparkSpec {
     docs.filter(col("doc_id") % 3 =!= 1).write
       .mode("overwrite").parquet(dir1)
     dataDir = dir1
-    val k3 = LexIndex.ensureLexIndexSnap(corpus, "doc_id", "text", Base,
+    val k3 = LexIndex.ensureLexIndex(corpus, "doc_id", "text", Base,
       key(corpus), Buckets)
     assert(evals === 2, "changed corpus files must re-derive the key")
     assert(k3 !== k1)
@@ -216,7 +250,7 @@ class LexIndexSpec extends SparkSpec {
     // scalar the steady-state check compares against — dropping it
     // must force the full data-derived path (and a rebuild)
     spark.sql(s"DROP TABLE ${Base}_lexkey")
-    LexIndex.ensureLexIndexSnap(corpus, "doc_id", "text", Base,
+    LexIndex.ensureLexIndex(corpus, "doc_id", "text", Base,
       key(corpus), Buckets)
     assert(evals === 3, "missing key table must re-derive the key")
     assert(spark.table(s"${Base}_lexkey").count() === 1)
@@ -267,7 +301,7 @@ class LexIndexSpec extends SparkSpec {
     freshTables()
     val annBase = "lstate_ann"
     spark.catalog.clearCache()
-    for (t <- Seq("centroids", "codebooks", "codes", "stats"))
+    for (t <- Seq("centroids", "codebooks", "codes"))
       spark.sql(s"DROP TABLE IF EXISTS ${annBase}_$t")
     val d = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
       "documents").select(col("doc_id"), col("text"))
@@ -374,8 +408,8 @@ class LexIndexSpec extends SparkSpec {
     val folded = spark.table(s"${Base}_tombstones").collect()
     assert(folded.length === 1 && folded.head.isNullAt(0),
       s"expected one null-keyed fold row, got ${folded.toSeq}")
-    assert(LexIndex.tombstoneFraction(spark, Base) === 0.0,
-      "folded mass is already applied — not dead weight")
+    assert(StandingState.deadFraction(spark, s"${Base}_tombstones",
+      d.count()) === 0.0, "folded mass is already applied — not dead weight")
     assert(spark.table(s"${Base}_postings")
       .filter(col("doc_id") % 7 === 1).count() === 0)
     assert(rows(LexIndex.bm25TopKIndexed(spark, probes, "doc_id",
@@ -396,19 +430,15 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.tombstoneLexDocs(spark, Base, victim.select("doc_id"))
     // still tombstoned → the append would be invisible; refuse loudly
     val err = intercept[IllegalStateException] {
-      LexIndex.appendToLexIndex(spark, victim, "doc_id", "text",
-        Base, Buckets)
-    }
-    assert(err.getMessage.contains("tombstoned id 42"))
-    intercept[IllegalStateException] {
       LexIndex.appendToLexIndexExactlyOnce(spark, victim, "doc_id",
         "text", Base, batchId = 99L, Buckets)
     }
+    assert(err.getMessage.contains("tombstoned id 42"))
     // after the fold the old generation row and the fold cancel, so a
     // re-append counts the doc exactly once: scores ≡ the full corpus
     LexIndex.compactLexIndex(spark, Base, Buckets)
-    LexIndex.appendToLexIndex(spark, victim, "doc_id", "text",
-      Base, Buckets)
+    LexIndex.appendToLexIndexExactlyOnce(spark, victim, "doc_id", "text",
+      Base, batchId = 100L, Buckets)
     val want = rows(CorpusStats.bm25TopK(d, "doc_id", "text",
       probes, "doc_id", "text", K))
     assert(rows(LexIndex.bm25TopKIndexed(spark, probes, "doc_id",
@@ -420,17 +450,23 @@ class LexIndexSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${Base}_tombstones")
     val d = docs
     LexIndex.writeLexIndex(d, "doc_id", "text", Base, Buckets)
-    assert(!LexIndex.compactIfDead(spark, Base, 0.3, Buckets),
-      "no tombstones → no compaction")
+    val tombs = s"${Base}_tombstones"
+    // every indexed doc, zero-token ones included: N of the stats rows
+    def docsIn = spark.table(s"${Base}_lexstats").agg(sum("n_docs"))
+      .head().getLong(0)
+    def compactIfDead(bound: Double): Boolean =
+      StandingState.compactIfDead(spark, tombs, docsIn, bound)(
+        LexIndex.compactLexIndex(spark, Base, Buckets))
+    assert(!compactIfDead(0.3), "no tombstones → no compaction")
     // ~1/5 deleted: under a 0.3 bound, over a 0.1 bound
     LexIndex.tombstoneLexDocs(spark, Base,
       d.filter(col("doc_id") % 5 === 2).select("doc_id"))
-    val frac = LexIndex.tombstoneFraction(spark, Base)
+    val frac = StandingState.deadFraction(spark, tombs, docsIn)
     assert(frac > 0.1 && frac < 0.3, s"fixture fraction $frac")
-    assert(!LexIndex.compactIfDead(spark, Base, 0.3, Buckets))
-    assert(LexIndex.compactIfDead(spark, Base, 0.1, Buckets))
-    assert(LexIndex.tombstoneFraction(spark, Base) === 0.0)
-    assert(!LexIndex.compactIfDead(spark, Base, 0.1, Buckets),
-      "already applied — must not loop")
+    assert(!compactIfDead(0.3))
+    assert(compactIfDead(0.1))
+    // the fold row left behind carries applied mass, not dead keys
+    assert(StandingState.deadFraction(spark, tombs, docsIn) === 0.0)
+    assert(!compactIfDead(0.1), "already applied — must not loop")
   }
 }

@@ -10,11 +10,6 @@ class MultimodalSpec extends SparkSpec {
   private def media = Multimodal.syntheticMedia(spark,
     Tables.load(spark, "/root/testdata/sf0.001", "documents"))
 
-  test("syntheticMedia conforms to the canonical media schema") {
-    // simpleString compares names+types, ignoring inferred nullability
-    assert(media.schema.simpleString === Multimodal.mediaSchema.simpleString)
-  }
-
   test("extractFeatures: one fixed-dim feature row per media item, deterministic") {
     val f1 = Multimodal.extractFeatures(media)
     assert(f1.count() === media.count())
@@ -101,28 +96,6 @@ class MultimodalSpec extends SparkSpec {
     assert((w, h) === (64, 32))
   }
 
-  test("image resize is REAL: bytes re-encode at the capped size") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, "image", realPng(200, 100)),
-      (2L, "image", "junk".getBytes),      // undecodable → dropped
-      (3L, "audio", realPng(64, 64))       // non-image → dropped
-    ).toDF("media_id", "kind", "content")
-    val out = Multimodal.resizeImages(rows, maxSide = 50).collect()
-    assert(out.map(_.getLong(0)).toSeq === Seq(1L))
-    val r = out.head
-    assert(r.getInt(1) === 50 && r.getInt(2) === 25) // aspect kept
-    // the emitted bytes are themselves a decodable PNG at the new size
-    val Some((w2, h2, _)) =
-      Multimodal.decodeImage(r.getAs[Array[Byte]]("content"))
-    assert((w2, h2) === (50, 25))
-    // an already-small image is not upscaled
-    val small = Seq((9L, "image", realPng(20, 10)))
-      .toDF("media_id", "kind", "content")
-    val sr = Multimodal.resizeImages(small, maxSide = 50).collect().head
-    assert(sr.getInt(1) === 20 && sr.getInt(2) === 10)
-  }
-
   test("truncated/corrupt image bytes take the fallback, whatever ImageIO throws") {
     // a real PNG signature with a corrupted body drives ImageIO into its
     // plugin decode path, where malformed data can surface as runtime
@@ -133,7 +106,6 @@ class MultimodalSpec extends SparkSpec {
     java.util.Arrays.fill(corrupted, 20, corrupted.length, 0x7f.toByte)
     for (bytes <- Seq(truncated, corrupted)) {
       assert(Multimodal.decodeImage(bytes).isEmpty)
-      assert(Multimodal.resizeImage(bytes, 50).isEmpty)
     }
   }
 

@@ -99,25 +99,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r.getSeq[String](1).sorted === Seq("a b", "b a"))
   }
 
-  test("topNgramFraction and repetitionFilter flag repetitive docs") {
-    import spark.implicits._
-    import graft.operators.CorpusStats
-    val docs = Seq(
-      (1L, "spam ham spam ham spam ham"),   // 'spam ham' 3× of 5 grams → 6/6 tokens
-      (2L, "one two three four five six"),  // all grams unique → 2/6
-      (3L, "solo")                          // no 2-grams → null score
-    ).toDF("doc_id", "text")
-    val scores = CorpusStats.topNgramFraction(docs, "doc_id", "text", 2)
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
-    assert(scores(1L) === Some(1.0))        // 3 hits × 2 tokens / 6 tokens
-    assert(scores(2L) === Some(2.0 / 6))
-    assert(scores(3L) === None)
-    val kept = CorpusStats.repetitionFilter(docs, "doc_id", "text", 2, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(2L, 3L))            // doc 1 repetitive; null passes
-  }
-
   test("tokenEstimate counts word/number/punct runs with leading spaces") {
     import spark.implicits._
     val df = Seq(
@@ -393,47 +374,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(math.abs(out(3L)._2 - math.log(9.0)) < 1e-5)
   }
 
-  test("dsirScores rank target-like docs above off-target docs; " +
-      "no-bigram docs score the neutral 0") {
-    import spark.implicits._
-    import graft.operators.CorpusStats
-    val raw = Seq(
-      (1L, "alpha beta gamma alpha beta"),
-      (2L, "delta epsilon zeta delta epsilon"),
-      (3L, "x")
-    ).toDF("doc_id", "text")
-    val target = Seq(Tuple1("alpha beta gamma alpha beta gamma"))
-      .toDF("text")
-    val model = CorpusStats.dsirModel(raw, "text", target, "text")
-    val scores = CorpusStats.dsirScores(raw, "doc_id", "text", model)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(scores(3L) === 0L, "a doc with no bigrams is neutral")
-    assert(scores(1L) > scores(2L),
-      s"target-vocab doc must outscore off-target: $scores")
-    assert(scores(1L) > 0L && scores(2L) < 0L,
-      s"signs must follow the likelihood ratio: $scores")
-  }
-
-  test("dsirScores derives its modulus from the model: a non-default " +
-      "bucket count scores correctly (a hard-coded 4096 would hash " +
-      "every bigram past the 97-row model and zero all scores)") {
-    import spark.implicits._
-    import graft.operators.CorpusStats
-    val raw = Seq(
-      (1L, "alpha beta gamma alpha beta"),
-      (2L, "delta epsilon zeta delta epsilon")
-    ).toDF("doc_id", "text")
-    val target = Seq(Tuple1("alpha beta gamma alpha beta gamma"))
-      .toDF("text")
-    val model = CorpusStats.dsirModel(raw, "text", target, "text",
-      buckets = 97)
-    assert(model.count() === 97L, "dsirModel must emit one row per bucket")
-    val scores = CorpusStats.dsirScores(raw, "doc_id", "text", model)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(scores(1L) > 0L && scores(2L) < 0L,
-      s"scores under B=97 must still follow the likelihood ratio: $scores")
-  }
-
   test("dsirResample: uniform weights reduce to a plain hash sample of " +
       "expected size; deterministic across calls") {
     import spark.implicits._
@@ -469,16 +409,26 @@ class TextAnalysisSpec extends SparkSpec {
         else s"zinc yttrium xenon zinc yttrium tungsten${i % 5}"
       (i, style, t)
     }.toDF("doc_id", "style", "text")
-    val kept = CorpusStats.dsirResample(docs, "doc_id", "text",
-      docs.filter(col("style") === "A"),
-      "text", fraction = 0.3)
-    val byStyle = kept.groupBy("style").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val a = byStyle.getOrElse("A", 0L)
-    val b = byStyle.getOrElse("B", 0L)
+    def survivors(buckets: Int): Array[(String, Long)] =
+      CorpusStats.dsirResample(docs, "doc_id", "text",
+          docs.filter(col("style") === "A"), "text", fraction = 0.3,
+          buckets = buckets)
+        .select("style", "score_q").as[(String, Long)].collect()
+    val kept = survivors(4096)
+    val a = kept.count(_._1 == "A").toLong
+    val b = kept.count(_._1 == "B").toLong
     assert(a + b > 0, "resample kept nothing")
     assert(a > 5L * math.max(b, 1L),
       s"target style must dominate the survivors: A=$a B=$b")
+    // the model's scores follow the likelihood ratio's sign — at the
+    // default 4096 buckets and at a non-default 97 (a modulus that
+    // disagreed with the fit would hash every bigram past the model
+    // and zero all scores)
+    for ((buckets, rows) <- Seq(4096 -> kept, 97 -> survivors(97))) {
+      assert(rows.exists(_._1 == "A"), s"B=$buckets kept no target doc")
+      assert(rows.forall { case (st, sc) => if (st == "A") sc > 0L
+        else sc < 0L }, s"B=$buckets scores must follow the ratio")
+    }
   }
 
   test("globalLineDedup removes corpus-wide boilerplate lines, keeps order") {
@@ -796,5 +746,18 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(2).getDouble(5) === 0.25)              // ellipsis
     assert(out(3).getDouble(2) === 1.0 - 2.0 / 3.0)   // dup paragraphs
     assert((1 to 5).forall(out(4).isNullAt))          // null text
+    // the top-n-gram repetition score over the same kind of edges
+    val grams = Seq(
+      (1L, "spam ham spam ham spam ham"),   // 'spam ham' 3× of 5 grams → 6/6 tokens
+      (2L, "one two three four five six"),  // all grams unique → 2/6
+      (3L, "solo")                          // no 2-grams → null score
+    ).toDF("doc_id", "text")
+    val scores = graft.operators.CorpusStats
+      .topNgramFraction(grams, "doc_id", "text", 2)
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
+    assert(scores(1L) === Some(1.0))        // 3 hits × 2 tokens / 6 tokens
+    assert(scores(2L) === Some(2.0 / 6))
+    assert(scores(3L) === None)
   }
 }
