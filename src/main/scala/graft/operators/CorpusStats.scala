@@ -830,7 +830,7 @@ object CorpusStats {
     // pin's single corpus pass — every doc counts in N, null-text docs
     // pin to 0 tokens, matching the oracle's skip-null sum exactly)
     val (nDocs, nToks) = {
-      val mx = obs.get
+      val mx = graft.ops.observed(obs, "bm25TopK")
       (mx("n_docs").asInstanceOf[Long], mx("n_toks").asInstanceOf[Long])
     }
     bm25Scores(gated, qterms, k, dfCap, idType, hinted = vocab.isDefined,

@@ -264,7 +264,9 @@ object Dedup {
           .observe(obs, count(when(col("label") =!= col("old"), lit(1)))
             .as("changed"))
           .select("node", "label"))
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged =
+        graft.ops.observed(obs, "duplicateClusters")("changed")
+          .asInstanceOf[Long] == 0L
       graft.ops.materialize.release(labels)
       labels = next
       labelsCut = cut(next)

@@ -140,16 +140,6 @@ object ProductQuant {
     array(codes: _*)
   }
 
-  /** Reconstruct the (lossy) vector from its codes — for error audits;
-    * search never decodes ([[adcTopK]]). */
-  def decode(codes: Column, model: PqModel): Column = {
-    val parts = (0 until model.m).map { j =>
-      element_at(typedLit(model.codebooks(j).map(_.toSeq).toSeq),
-        element_at(codes, j + 1) + 1)
-    }
-    concat(parts: _*)
-  }
-
   /** Codebook table rows (subspace, code, centroid) — the persisted
     * model layout AND the driver-oracle dump share this flattening, so
     * the two schemas cannot drift apart. */

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /**
  * Hybrid retrieval: reciprocal-rank fusion of ranked candidate lists
@@ -109,30 +110,6 @@ object Retrieval {
         col("col.id").as("doc_id"), col("col.score").cast("long").as("rrf_u"))
   }
 
-  /** Release the persisted blocks behind an eagerly local-checkpointed
-    * DataFrame (its analyzed plan is one LogicalRDD leaf). Only call
-    * once NOTHING will read the frame again: a local checkpoint has no
-    * lineage, so unpersisted blocks are unrecoverable by design. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Cosine with the zero-norm convention of [[ProductQuant.cosArr]]:
-    * a degenerate (all-zero) vector scores 0.0 against anything. The
-    * norms gate the DIVISION itself — under ANSI mode (Spark 4's
-    * default) 0/0 is a runtime error, so an after-the-fact `nanvl`
-    * never gets to run; the `when` keeps the divisor provably
-    * non-zero. Same sequential-fold dot product as
-    * [[Similarity.cosine]], so the non-degenerate path is
-    * bit-identical. */
-  private def guardedCosine(a: Column, b: Column): Column = {
-    val den = Similarity.l2Norm(a) * Similarity.l2Norm(b)
-    when(den > lit(0.0), Similarity.dot(a, b) / den).otherwise(lit(0.0))
-  }
-
   /**
    * Maximal-marginal-relevance re-rank (Carbonell & Goldstein, SIGIR
    * 1998 — public) of a per-query candidate list: greedily select `k`
@@ -141,53 +118,36 @@ object Retrieval {
    * the diversification step a retrieval-augmented pipeline runs after
    * fusion so near-duplicate passages don't crowd out coverage.
    *
-   * Exact-replay discipline: `rel_u` is an integer relevance (e.g.
-   * [[rrfFuse]]'s `rrf_u`), the similarity penalty is the cosine
-   * quantized to integer micro-units — `floor(1e6·cosine)`, where the
-   * cosine double is bit-identical across engines (sequential-fold dot
-   * product, q40's proven parity) — so every MMR score is an exact
-   * BIGINT and the greedy argmax (ties to the smaller doc_id) replays
-   * deterministically anywhere. A zero-norm embedding's cosine is
-   * defined as 0.0 ([[guardedCosine]] — the convention of
-   * [[ProductQuant.cosArr]]), so a degenerate vector is penalty-neutral
-   * instead of erroring under ANSI mode (or NaN-poisoning the greedy
-   * order with ANSI off); external SQL replaying the penalty must
-   * apply the same convention if its corpus can hold zero vectors.
-   *
    * `candidates` must be unique per (q_id, doc_id) with integral
    * `rel_u`; rows whose doc_id has no row in `vecs` are dropped (inner
    * join — a candidate without an embedding cannot be diversified
-   * against). Output: q_id, rank (1..k, selection order), doc_id,
-   * mmr_u (the score AT selection; rank 1's is `rel_u·relW`). Queries
-   * with fewer than `k` candidates yield that many rows.
+   * against), and so are rows with a null q_id. Output: q_id, rank
+   * (1..k, selection order), doc_id, mmr_u (the score AT selection;
+   * rank 1's is `rel_u·relW`). Queries with fewer than `k` candidates
+   * yield that many rows.
    *
-   * Plan: the greedy loop unrolls at plan-build time (k is small by
-   * contract), carrying ONE state table of all candidates — unselected
-   * rows hold the running `sim_u = max similarity-to-selected` (null =
-   * empty set), selected rows ride along frozen with their selection
-   * `rank`/`mmr_u` —
-   * `max_{s∈S∪{p}} sim(d,s) = greatest(max_{s∈S} sim(d,s), sim(d,p))`,
-   * so each step joins the state to the ONE newly picked row per q_id
-   * (the argmax struct carries the winner's vector out of the
-   * aggregate — no self-join to recover it) and computes |remaining|
-   * cosines, not |remaining|·|selected|. Every side is candidate-list-
-   * proportional (≤ |probes|·|candidates| rows), never corpus-
-   * proportional. Each step's state is an EAGER local checkpoint, not
-   * a cache pin: a pin short-circuits execution but leaves the logical
-   * tree intact, and a growing self-referencing tree blows up ANALYSIS
-   * (the first formulation referenced the selection 3× per step —
-   * ~3^k copies of the upstream retrieval tree, measured 36 s of
-   * driver-side analysis at sf0.1 before any task ran).
-   * `localCheckpoint(eager=true)` rewrites the step to a LogicalRDD,
-   * so analysis stays O(step) — and because the selected rows live IN
-   * the state, step t's checkpoint fully supersedes step t−1's, whose
-   * blocks are released immediately (r16 kept per-step pick frames
-   * alive for a final union, so no intermediate checkpoint was ever
-   * safe to free; executor storage grew by the whole state chain per
-   * call). Peak pinned storage is now ≤ 2 state snapshots regardless
-   * of k or call count. (Local checkpoints do not survive executor
-   * loss; for a multi-hour cluster backfill, write the candidate list
-   * to a table first and re-rank from that scan.)
+   * Exact-replay discipline — every score is an exact BIGINT, so the
+   * greedy order replays deterministically in any engine:
+   *  - the cosine is `dot(a,b) / (sqrt(dot(a,a))·sqrt(dot(b,b)))`, each
+   *    dot [[graft.plans.DotProduct]]'s sequential fold (index order
+   *    over the shorter length, a pair with a null element skipped),
+   *    and 0.0 when either vector is null or the denominator is not
+   *    positive — a zero-norm vector is penalty-neutral;
+   *  - `sim_u = floor(1e6·cosine)`; the running max-similarity-to-
+   *    selected starts EMPTY, not at zero, so a negative cosine stays a
+   *    diversity bonus;
+   *  - the score is `rel_u·relW − sim_u·penW` (`rel_u·relW` while
+   *    nothing is selected), in overflow-checked arithmetic, so an
+   *    overflow fails the query instead of wrapping;
+   *  - the argmax is score descending, then the smaller doc_id; a null
+   *    `rel_u` scores null and ranks below every non-null score.
+   *
+   * Plan: ONE pass — the candidates join their vectors, group by q_id,
+   * and each query's whole k-step selection runs inside one task in JVM
+   * code, so the re-rank is one shuffle with no driver round trip per
+   * step and nothing persisted. A task holds one query's candidate list
+   * at a time, so memory is candidate-list-proportional (≤ |candidates|
+   * rows per probe), never corpus-proportional.
    */
   def mmrRerank(candidates: DataFrame, vecs: DataFrame, idCol: String,
                 vecCol: String, k: Int, relW: Long = 1L,
@@ -195,70 +155,70 @@ object Retrieval {
     require(k >= 1, s"k must be positive, got $k")
     require(relW >= 0 && penW >= 0,
       s"weights must be non-negative, got relW=$relW penW=$penW")
-    // state: every candidate, its vector, the running max-similarity-
-    // to-selected (`sim_u`, null = empty set — `greatest` skips nulls,
-    // so the first fold takes the raw value even when it is negative;
-    // a zero init would wrongly clamp negative-cosine "bonuses"), and
-    // the selection slot (`rank`/`mmr_u`, null = not yet picked)
-    var state = candidates
+    val out = StructType(Seq(StructField("q_id", LongType),
+      StructField("rank", IntegerType), StructField("doc_id", LongType),
+      StructField("mmr_u", LongType)))
+    candidates
       .select(col("q_id").cast("long").as("q_id"),
         col("doc_id").cast("long").as("doc_id"),
         col("rel_u").cast("long").as("rel_u"))
+      .filter(col("q_id").isNotNull)
       .join(vecs.select(col(idCol).cast("long").as("doc_id"),
         col(vecCol).cast("array<double>").as("__v")), "doc_id")
-      .withColumn("sim_u", lit(null).cast("long"))
-      .withColumn("rank", lit(null).cast("int"))
-      .withColumn("mmr_u", lit(null).cast("long"))
-      // r20 (§2.4 — establish the partitioning once): hash the state on
-      // q_id BEFORE the first checkpoint. LogicalRDD preserves the
-      // physical partitioning across (local)checkpoints, so every
-      // step's per-q_id argmax aggregate AND its join-back to the state
-      // are co-partitioned and plan ZERO exchanges — previously each of
-      // the k steps paid two (aggregate + join), over a candidate-list-
-      // sized state where the exchanges were pure fixed overhead. No N
-      // is pinned: AQE sizes (and locally coalesces) the one shuffle.
-      .repartition(col("q_id"))
-      .localCheckpoint(true)
-    def mmr = col("rel_u") * lit(relW) -
-      coalesce(col("sim_u") * lit(penW), lit(0L))
-    for (t <- 1 to k) {
-      // per-q_id argmax over the UNSELECTED rows as an integer-
-      // lexicographic struct max — (score desc, doc_id asc) exactly
-      // like the topK kernel; `max` ignores the nulls the `when`
-      // assigns to already-selected rows, and a query whose candidates
-      // are all selected yields a null struct (filtered from the pick
-      // side, so the left join leaves its state untouched)
-      val pv = state.groupBy(col("q_id"))
-        .agg(max(when(col("rank").isNull,
-          struct(mmr.as("m"), (col("doc_id") * lit(-1L)).as("nd"),
-            col("doc_id").as("doc_id"), col("__v").as("__pv")))).as("__p"))
-        .filter(col("__p").isNotNull)
-        .select(col("q_id"), col("__p.doc_id").as("__pid"),
-          col("__p.m").as("__pm"), col("__p.__pv").as("__pv"))
-      val prev = state
-      state = state.join(pv, Seq("q_id"), "left")
-        .select(col("q_id"), col("doc_id"), col("rel_u"), col("__v"),
-          when(col("rank").isNotNull || col("__pid").isNull ||
-              col("doc_id") === col("__pid"), col("sim_u"))
-            .otherwise(greatest(col("sim_u"),
-              floor(guardedCosine(col("__v"), col("__pv"))
-                * lit(1000000.0)))).as("sim_u"),
-          when(col("doc_id") === col("__pid") && col("rank").isNull,
-            lit(t)).otherwise(col("rank")).cast("int").as("rank"),
-          when(col("doc_id") === col("__pid") && col("mmr_u").isNull,
-            col("__pm")).otherwise(col("mmr_u")).as("mmr_u"))
-        .localCheckpoint(true)
-      releaseCheckpoint(prev)
+      .select(col("q_id"), col("doc_id"), col("rel_u"), col("__v"))
+      .groupByKey((r: Row) => r.getLong(0))(Encoders.scalaLong)
+      .flatMapGroups((q: Long, rows: Iterator[Row]) =>
+        mmrSelect(q, rows.toArray, k, relW, penW))(Encoders.row(out))
+  }
+
+  /** One query's greedy selection over its (q_id, doc_id, rel_u, __v)
+    * rows, by the rules of [[mmrRerank]]. */
+  private def mmrSelect(q: Long, cands: Array[Row], k: Int, relW: Long,
+                        penW: Long): Seq[Row] = {
+    val n = cands.length
+    val doc = cands.map(_.getLong(1))
+    val rel = cands.map(r => if (r.isNullAt(2)) None else Some(r.getLong(2)))
+    val vec = cands.map(r =>
+      if (r.isNullAt(3)) null else r.getSeq[java.lang.Double](3).toArray)
+    val norm = vec.map(v => if (v == null) 0.0 else math.sqrt(dot(v, v)))
+    // running max similarity to the selected set; None = empty set
+    val sim = Array.fill[Option[Long]](n)(None)
+    val picked = new Array[Boolean](n)
+    // argmax order: score (a null score below every other), then the
+    // smaller doc_id
+    val order = Ordering.Tuple2(Ordering[Option[Long]], Ordering[Long].reverse)
+    val sel = Seq.newBuilder[Row]
+    for (t <- 1 to math.min(k, n)) {
+      val (best, score) = (0 until n).filterNot(picked).map { i =>
+        val pen = sim(i).fold(0L)(Math.multiplyExact(_, penW))
+        i -> rel(i).map(r => Math.subtractExact(Math.multiplyExact(r, relW), pen))
+      }.maxBy { case (i, s) => (s, doc(i)) }(order)
+      picked(best) = true
+      sel += Row(q, t, doc(best), score.map(Long.box).orNull)
+      for (i <- 0 until n if !picked(i)) {
+        val den = norm(i) * norm(best)
+        val cos =
+          if (vec(i) == null || vec(best) == null || !(den > 0.0)) 0.0
+          else dot(vec(i), vec(best)) / den
+        val s = math.floor(cos * 1000000.0).toLong
+        sim(i) = Some(sim(i).fold(s)(math.max(_, s)))
+      }
     }
-    // the returned frame reads the LAST state checkpoint directly — one
-    // bounded candidate-list-sized snapshot that ContextCleaner frees
-    // when the caller drops the frame. (An eager output checkpoint
-    // would free it immediately but costs one more per-call job — on
-    // the 50-probe bench shape the k+2nd job is ~10% of the whole
-    // re-rank; the superseded-chain release above is where the real
-    // storage was.)
-    state.filter(col("rank").isNotNull)
-      .select(col("q_id"), col("rank"), col("doc_id"), col("mmr_u"))
+    sel.result()
+  }
+
+  /** [[graft.plans.DotProduct]]'s fold on boxed elements. */
+  private def dot(a: Array[java.lang.Double],
+                  b: Array[java.lang.Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (a(i) != null && b(i) != null)
+        s += a(i).doubleValue * b(i).doubleValue
+      i += 1
+    }
+    s
   }
 
   /**

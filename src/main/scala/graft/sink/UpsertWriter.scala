@@ -79,7 +79,8 @@ object UpsertWriter {
     val obs = org.apache.spark.sql.Observation()
     merged.observe(obs, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    Staged(target, staging, backup, obs.get("rows").asInstanceOf[Long])
+    Staged(target, staging, backup,
+      graft.ops.observed(obs, "upsert")("rows").asInstanceOf[Long])
   }
 
   private def promote(fs: FileSystem, s: Staged): Unit = {

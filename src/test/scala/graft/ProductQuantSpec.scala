@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -30,12 +31,21 @@ class ProductQuantSpec extends SparkSpec {
     assert(rows.map(_.getSeq[Int](1)).toSeq === again.map(_.getSeq[Int](1)).toSeq)
   }
 
+  /** Reconstruct the (lossy) vector from its codes — an error audit;
+    * search never decodes. */
+  private def decode(codes: Column, model: ProductQuant.PqModel): Column = {
+    val parts = (0 until model.m).map { j =>
+      element_at(typedLit(model.codebooks(j).map(_.toSeq).toSeq),
+        element_at(codes, j + 1) + 1)
+    }
+    concat(parts: _*)
+  }
+
   test("reconstruction error shrinks as the codebook grows") {
     def mse(k: Int): Double = {
       val model = ProductQuant.fit(emb, "embedding", dim = 64, m = 8, k = k)
       val err = emb.select(col("embedding").cast("array<double>").as("v"),
-          ProductQuant.decode(
-            ProductQuant.encode(col("embedding"), model), model).as("d"))
+          decode(ProductQuant.encode(col("embedding"), model), model).as("d"))
         .select(aggregate(zip_with(col("v"), col("d"),
             (a, b) => (a - b) * (a - b)),
           lit(0.0), (acc, x) => acc + x).as("se"))

@@ -290,4 +290,13 @@ class RelationalOpsSpec extends SparkSpec {
     }
     graft.ops.materialize.releaseAll()
   }
+
+  test("observed fails naming the operator when metrics never arrive") {
+    // an Observation no action ever fires: the bounded wait must give
+    // up and say whose metrics are missing instead of blocking forever
+    val never = org.apache.spark.sql.Observation()
+    val e = intercept[IllegalStateException](graft.ops.observed(never,
+      "duplicateClusters", scala.concurrent.duration.Duration(100, "ms")))
+    assert(e.getMessage.contains("duplicateClusters"), e.getMessage)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Retrieval, Similarity, CorpusStats}
@@ -95,23 +96,22 @@ class RetrievalSpec extends SparkSpec {
     val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)),
       (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val before = spark.sparkContext.getPersistentRDDs.size
-    // two full re-rank calls; each builds k+1 = 4 state checkpoints
-    // plus the output frame — only the OUTPUT (k·|probes| rows, the
-    // caller's handle) may stay pinned; every state snapshot must be
-    // released by the time the call returns
+    // two full re-rank calls: the one-pass plan persists nothing, so
+    // no call may leave a block-store entry behind
     for (_ <- 1 to 2)
       graft.operators.Retrieval
         .mmrRerank(cand, vecs, "vec_id", "embedding", k = 3).collect()
     val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 2,
-      s"state chain leaked: $before -> $after persistent RDDs")
+    assert(after === before,
+      s"re-rank left persistent RDDs: $before -> $after")
   }
 
   test("mmrRerank zero-norm vector is penalty-neutral, not NaN") {
     import spark.implicits._
     // doc 2 is the zero vector: its cosine against any pick is 0/0 →
-    // the nanvl guard pins the penalty term to 0, so doc 2 ranks by
-    // relevance alone instead of NaN-poisoning the struct max
+    // the guarded division (zero denominator ⇒ cosine 0.0) pins the
+    // penalty term to 0, so doc 2 ranks by relevance alone instead of
+    // failing or NaN-poisoning the argmax
     val cand = Seq((7L, 1L, 1000L), (7L, 2L, 900L), (7L, 3L, 800L))
       .toDF("q_id", "doc_id", "rel_u")
     val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 0.0)),
@@ -121,6 +121,122 @@ class RetrievalSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("mmr_u"))).sortBy(_._1)
     assert(out === Seq((1, 1L, 1000L), (2, 2L, 900L), (3, 3L, 800L)))
+  }
+
+  /** The k-step formulation `mmrRerank` replaced, kept as its parity
+    * reference: one state table of all candidates, one eager local
+    * checkpoint per greedy step, the argmax as a per-q_id struct max
+    * and the running max similarity folded with `greatest`. */
+  private def mmrRerankSteps(candidates: DataFrame, vecs: DataFrame,
+                             idCol: String, vecCol: String, k: Int,
+                             relW: Long = 1L, penW: Long = 33L): DataFrame = {
+    def release(df: DataFrame): Unit =
+      df.queryExecution.analyzed.collectLeaves().foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          l.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+    def guardedCosine(a: Column, b: Column): Column = {
+      val den = Similarity.l2Norm(a) * Similarity.l2Norm(b)
+      when(den > lit(0.0), Similarity.dot(a, b) / den).otherwise(lit(0.0))
+    }
+    var state = candidates
+      .select(col("q_id").cast("long").as("q_id"),
+        col("doc_id").cast("long").as("doc_id"),
+        col("rel_u").cast("long").as("rel_u"))
+      .join(vecs.select(col(idCol).cast("long").as("doc_id"),
+        col(vecCol).cast("array<double>").as("__v")), "doc_id")
+      .withColumn("sim_u", lit(null).cast("long"))
+      .withColumn("rank", lit(null).cast("int"))
+      .withColumn("mmr_u", lit(null).cast("long"))
+      .repartition(col("q_id"))
+      .localCheckpoint(true)
+    def mmr = col("rel_u") * lit(relW) -
+      coalesce(col("sim_u") * lit(penW), lit(0L))
+    for (t <- 1 to k) {
+      val pv = state.groupBy(col("q_id"))
+        .agg(max(when(col("rank").isNull,
+          struct(mmr.as("m"), (col("doc_id") * lit(-1L)).as("nd"),
+            col("doc_id").as("doc_id"), col("__v").as("__pv")))).as("__p"))
+        .filter(col("__p").isNotNull)
+        .select(col("q_id"), col("__p.doc_id").as("__pid"),
+          col("__p.m").as("__pm"), col("__p.__pv").as("__pv"))
+      val prev = state
+      state = state.join(pv, Seq("q_id"), "left")
+        .select(col("q_id"), col("doc_id"), col("rel_u"), col("__v"),
+          when(col("rank").isNotNull || col("__pid").isNull ||
+              col("doc_id") === col("__pid"), col("sim_u"))
+            .otherwise(greatest(col("sim_u"),
+              floor(guardedCosine(col("__v"), col("__pv"))
+                * lit(1000000.0)))).as("sim_u"),
+          when(col("doc_id") === col("__pid") && col("rank").isNull,
+            lit(t)).otherwise(col("rank")).cast("int").as("rank"),
+          when(col("doc_id") === col("__pid") && col("mmr_u").isNull,
+            col("__pm")).otherwise(col("mmr_u")).as("mmr_u"))
+        .localCheckpoint(true)
+      release(prev)
+    }
+    state.filter(col("rank").isNotNull)
+      .select(col("q_id"), col("rank"), col("doc_id"), col("mmr_u"))
+  }
+
+  private def mmrRows(df: DataFrame): Seq[(Long, Int, Long, Option[Long])] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+      Option(r.get(3)).map(_.asInstanceOf[Long]))).toSeq.sorted
+
+  test("mmrRerank equals the k-step reference on seeded candidate lists") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(131)
+    // a few shared vectors, so exact score ties are common: negative
+    // components, a zero-norm vector, a null element, a shorter vector
+    val protos = Seq[Seq[Any]](
+      Seq(1.0, 0.0, 0.0, 0.0), Seq(0.6, 0.8, 0.0, 0.0),
+      Seq(-1.0, 0.0, 0.0, 0.0), Seq(-0.3, 0.5, -0.7, 0.1),
+      Seq(0.0, 0.0, 0.0, 0.0), Seq(0.2, null, 0.9, -0.4),
+      Seq(0.5, -0.5, 0.5), Seq(0.1, 0.2, 0.3, 0.4))
+      .map(_.map(_.asInstanceOf[java.lang.Double]))
+    // docs 0..59 carry one of the vectors, doc 60 a null embedding;
+    // docs 100.. have no row in `vecs` at all
+    val vecs = ((0 until 60).map(d => (d.toLong, protos(rnd.nextInt(protos.size)))) :+
+      (60L, null.asInstanceOf[Seq[java.lang.Double]]))
+      .toDF("vec_id", "embedding").repartition(3)
+    val rels = Seq(0L, 1000000L, 5000000L, 20000000L)
+    val cand = (1L to 40L).flatMap { q =>
+      val docs = rnd.shuffle((0L to 60L) ++ Seq(100L, 101L))
+        .take(1 + rnd.nextInt(9))
+      docs.map(d => (q, d, rels(rnd.nextInt(rels.size))))
+    }
+    val candDf = cand.toDF("q_id", "doc_id", "rel_u").repartition(5)
+    for ((k, relW, penW) <- Seq((6, 1L, 33L), (3, 7L, 2L))) {
+      val got = mmrRows(Retrieval.mmrRerank(candDf, vecs, "vec_id",
+        "embedding", k, relW, penW))
+      val want = mmrRows(mmrRerankSteps(candDf, vecs, "vec_id",
+        "embedding", k, relW, penW))
+      assert(got === want, s"k=$k relW=$relW penW=$penW")
+      // rank 1 is the max-relevance candidate with a vector, ties to
+      // the smaller doc_id — the lists above tie there often
+      val first = got.filter(_._2 == 1).map(r => r._1 -> r._3).toMap
+      val withVec = cand.filter(_._2 <= 60L).groupBy(_._1)
+      assert(first === withVec.map { case (q, cs) =>
+        q -> cs.minBy(c => (-c._3, c._2))._2 })
+      assert(withVec.exists(_._2.map(_._3).groupBy(identity)
+        .exists(_._2.size > 1)))
+    }
+  }
+
+  test("mmrRerank fails on an overflowing score instead of wrapping") {
+    import spark.implicits._
+    val cand = Seq((7L, 1L, Long.MaxValue / 2), (7L, 2L, 1L))
+      .toDF("q_id", "doc_id", "rel_u")
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    for (rerank <- Seq(Retrieval.mmrRerank _, mmrRerankSteps _)) {
+      val e = intercept[Exception](
+        rerank(cand, vecs, "vec_id", "embedding", 2, 3L, 33L).collect())
+      assert(causes(e).exists(_.isInstanceOf[ArithmeticException]), e)
+    }
   }
 
   test("hybrid lexical leg drops self-matches when probes overlap corpus") {
