@@ -26,16 +26,18 @@ class WatermarkManager(spark: SparkSession, path: String) {
   /** Epoch fallback used on first run (`Pembelian/run.js:121-122`). */
   val epoch: Timestamp = Timestamp.valueOf("1970-01-01 00:00:00")
 
+  /** The whole control log, read with its declared schema
+    * ([[WatermarkManager.logSchema]]): no schema-inference job, so a
+    * watermark read is the one collect job. A missing or empty control
+    * directory reads as the empty log. */
   def log: DataFrame =
-    try spark.read.parquet(path)
+    try spark.read.schema(WatermarkManager.logSchema).parquet(path)
     catch { case _: Exception => emptyLog }
 
   private def emptyLog: DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "description STRING, start TIMESTAMP, finish TIMESTAMP, " +
-          "executionTime STRING, status STRING"))
+      WatermarkManager.logSchema)
 
   /** Low watermark for `pipeline`: `start` of the latest successful run
     * (by `finish`), falling back to the epoch. Failed runs never advance
@@ -87,6 +89,11 @@ class WatermarkManager(spark: SparkSession, path: String) {
 }
 
 object WatermarkManager {
+  /** The control log's columns, as [[WatermarkManager.logRun]] writes them. */
+  private val logSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "description STRING, start TIMESTAMP, finish TIMESTAMP, " +
+      "executionTime STRING, status STRING")
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def appendLock(path: String): Object =

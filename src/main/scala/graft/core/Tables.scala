@@ -16,8 +16,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One corpus table; its schema comes from a footer read on the
+    * driver ([[Parquet.read]]), so loading it runs no Spark job. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** `events` with its `ts` column normalized to a microsecond
     * `TimestampType`, whatever encoding the fixture generation used —

@@ -73,24 +73,35 @@ class PipelineRunner(spark: SparkSession, control: WatermarkManager,
     *                message (the reference host kills a run at
     *                `functionTimeout`, host.json:3)
     * @param runNote free-text note for the control row (e.g. the
-    *                late-fire flag of a past-due timer tick) */
+    *                late-fire flag of a past-due timer tick)
+    *
+    * Every Spark job the run submits is described
+    * `<pipeline>:<phase>` (watermark, transform, merge, append); the
+    * calling thread's previous job description is restored afterwards. */
   def run(p: Pipeline, loadTable: String => DataFrame,
           startAt: Option[Timestamp] = None,
           failureStatus: Exception => String =
             e => s"Failed: ${e.getMessage}",
           runNote: Option[String] = None): Long = {
     val start = startAt.getOrElse(new Timestamp(System.currentTimeMillis()))
+    val sc = spark.sparkContext
+    def phase[A](name: String)(body: => A): A = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"${p.name}:$name")
+      try body finally sc.setJobDescription(prev)
+    }
     try {
-      val wm = control.lastWatermark(p.name)
-      val tables = p.sources.map(s => s -> loadTable(s)).toMap
-      val driving = p.sources.head
-      val incremental = tables.updated(driving,
-        relational.incrementalScan(tables(driving), col(p.watermarkColumn),
-          lit(wm), inclusive = p.watermarkInclusive))
-      val fact = p.transform(incremental)
+      val wm = phase("watermark")(control.lastWatermark(p.name))
+      val fact = phase("transform") {
+        val tables = p.sources.map(s => s -> loadTable(s)).toMap
+        val driving = p.sources.head
+        p.transform(tables.updated(driving,
+          relational.incrementalScan(tables(driving), col(p.watermarkColumn),
+            lit(wm), inclusive = p.watermarkInclusive)))
+      }
       // the fact row count comes back from the merge's own write job
       // (Dataset.observe) — no post-hoc re-scan of the fact
-      val n =
+      val n = phase("merge") {
         if (p.dateColumns.isEmpty)
           UpsertWriter.upsert(spark, fact,
             s"$warehouseDir/${p.name}", p.factKeys)
@@ -107,8 +118,9 @@ class PipelineRunner(spark: SparkSession, control: WatermarkManager,
               Seq("cal_date")))).head
           finally fact.unpersist()
         }
-      control.logRun(p.name, start,
-        new Timestamp(System.currentTimeMillis()), "Successful", runNote)
+      }
+      phase("append")(control.logRun(p.name, start,
+        new Timestamp(System.currentTimeMillis()), "Successful", runNote))
       n
     } catch {
       case e: Exception =>
@@ -116,9 +128,9 @@ class PipelineRunner(spark: SparkSession, control: WatermarkManager,
         // interrupt; the interrupt flag must not also kill this
         // failure-row write (a small Spark job of its own)
         Thread.interrupted(): Unit
-        control.logRun(p.name, start,
+        phase("append")(control.logRun(p.name, start,
           new Timestamp(System.currentTimeMillis()),
-          failureStatus(e), runNote)
+          failureStatus(e), runNote))
         throw e
     }
   }

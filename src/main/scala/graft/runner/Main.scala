@@ -178,9 +178,11 @@ object Main {
     names.foreach { n =>
       val p = Pipelines.byName(n)
       try {
-        val rows = runner.run(p, t => conn.read(spark, t), startAt)
+        // a successful run's start becomes its watermark
+        val start = startAt.getOrElse(new Timestamp(System.currentTimeMillis()))
+        val rows = runner.run(p, t => conn.read(spark, t), Some(start))
         System.err.println(s"[runner] ${p.name}: OK, fact rows=$rows, " +
-          s"watermark=${control.lastWatermark(p.name)}")
+          s"watermark=$start")
       } catch {
         case e: Exception =>
           failures += 1

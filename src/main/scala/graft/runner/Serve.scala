@@ -2,6 +2,7 @@ package graft.runner
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.sql.Timestamp
 import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -241,7 +242,11 @@ object Serve {
         val deadline = new Deadline(s"run-${p.name}")
         val src = conns.getOrElse(p.name, conn)
         try {
+          // a successful run's start becomes its watermark: report it
+          // instead of reading it back from the control log
+          val start = new Timestamp(System.currentTimeMillis())
           val rows = runner.run(p, t => src.read(spark, t),
+            startAt = Some(start),
             // evaluated at catch entry, BEFORE the failure row is
             // written — disarming here keeps the watchdog's repeating
             // cancel/interrupt off the bookkeeping job
@@ -251,13 +256,8 @@ object Serve {
               else s"Failed: ${e.getMessage}"
             },
             runNote = note)
-          // the run has committed; a deadline lapsing during the
-          // post-run watermark read must not convert success into a
-          // 500 Failed-timeout
-          deadline.disarm()
-          val wm = control.lastWatermark(p.name)
           (200, s"""{"pipeline":"${p.name}","status":"Successful",""" +
-            s""""rows":$rows,"watermark":"$wm"}""")
+            s""""rows":$rows,"watermark":"$start"}""")
         } catch {
           case e: Exception if deadline.timedOut.get =>
             (500, s"""{"pipeline":"${p.name}","status":"Failed-timeout",""" +

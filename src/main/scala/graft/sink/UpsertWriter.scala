@@ -74,7 +74,8 @@ object UpsertWriter {
     // batch, silently dropping the table
     if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
     val merged =
-      if (fs.exists(target)) mergedPlan(spark.read.parquet(path), batch, keys)
+      if (fs.exists(target))
+        mergedPlan(graft.core.Parquet.read(spark, path), batch, keys)
       else batch
     val obs = org.apache.spark.sql.Observation()
     merged.observe(obs, count(lit(1)).as("rows"))

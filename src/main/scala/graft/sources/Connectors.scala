@@ -17,16 +17,19 @@ sealed trait Connector {
 }
 
 /** Directory-of-parquet connector (the lake layout; one file/dir per
-  * table). `mergeSchema = true` reconciles files written under evolved
-  * schemas (added columns surface as nulls on old files) — at a cost:
-  * every file footer is read at planning, so leave it off for tables
-  * with a settled schema. */
+  * table). By default a table's schema is that of its first data file,
+  * as Spark infers it, but read from that file's footer on the driver
+  * ([[graft.core.Parquet.read]]), so opening a source runs no Spark job.
+  * `mergeSchema = true` reconciles files written under evolved schemas
+  * (added columns surface as nulls on old files) — at a cost: every
+  * file footer is read at planning, in a Spark job, so leave it off for
+  * tables with a settled schema. */
 final case class ParquetConnector(dir: String,
                                   mergeSchema: Boolean = false) extends Connector {
   def read(spark: SparkSession, table: String): DataFrame = {
-    val r = spark.read
-    (if (mergeSchema) r.option("mergeSchema", "true") else r)
-      .parquet(s"$dir/$table.parquet")
+    val path = s"$dir/$table.parquet"
+    if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
+    else graft.core.Parquet.read(spark, path)
   }
   def write(df: DataFrame, table: String, mode: SaveMode): Unit =
     df.write.mode(mode).parquet(s"$dir/$table.parquet")

@@ -147,6 +147,32 @@ class PipelineSpec extends SparkSpec {
     assert(control.lastWatermark(PurchasingFact.name).after(control.epoch))
   }
 
+  test("every job of a run is described <pipeline>:<phase>; the caller's " +
+      "description is restored") {
+    val dir = Files.createTempDirectory("graft-pipe-desc").toString
+    val control = new WatermarkManager(spark, s"$dir/control")
+    val runner = new PipelineRunner(spark, control, s"$dir/warehouse")
+    val lake = graft.sources.ParquetConnector(s"$dir/lake")
+    fixtures("2020-03-01 00:00:00").foreach { case (t, df) =>
+      lake.write(df, t, org.apache.spark.sql.SaveMode.Overwrite)
+    }
+    val phases = Set("watermark", "transform", "merge", "append")
+      .map(ph => s"${PurchasingFact.name}:$ph")
+    val (after, jobs) = JobWatch(spark) {
+      // a first run, a merging rerun and a failing run
+      runner.run(PurchasingFact, lake.read(spark, _), Some(ts("2020-01-31 00:00:00")))
+      runner.run(PurchasingFact, lake.read(spark, _), Some(ts("2020-03-01 00:00:00")))
+      intercept[RuntimeException] {
+        runner.run(PurchasingFact, _ => throw new RuntimeException("source down"))
+      }
+      spark.sparkContext.getLocalProperty("spark.job.description")
+    }
+    assert(after === JobWatch.Tag)
+    assert(jobs.nonEmpty && jobs.forall(phases), jobs.distinct)
+    Seq("watermark", "merge", "append").foreach(ph =>
+      assert(jobs.contains(s"${PurchasingFact.name}:$ph"), jobs.distinct))
+  }
+
   test("PipelineRunner logs failures without advancing the watermark") {
     val dir = Files.createTempDirectory("graft-pipe-fail").toString
     val control = new WatermarkManager(spark, s"$dir/control")

@@ -74,11 +74,24 @@ class RunnerSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-runner").toString
     writePembelianFixtures(ParquetConnector(s"$dir/lake"))
 
-    def invoke(): Unit = Main.main(Array("pembelian",
-      "--sources", s"$dir/lake", "--warehouse", s"$dir/dwh",
-      "--control", s"$dir/dwh/control"))
+    // the runner's stderr report of one invocation
+    def invoke(): String = {
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      try Main.main(Array("pembelian",
+        "--sources", s"$dir/lake", "--warehouse", s"$dir/dwh",
+        "--control", s"$dir/dwh/control"))
+      finally System.setErr(saved)
+      err.toString("UTF-8")
+    }
+    val control = new WatermarkManager(spark, s"$dir/dwh/control")
+    // the reported watermark is the one the control log now holds
+    def assertReportedWatermark(report: String): Unit =
+      assert(report.contains("[runner] purchasing-fact: OK") && report.contains(
+        s"watermark=${control.lastWatermark("purchasing-fact")}"), report)
 
-    invoke()
+    assertReportedWatermark(invoke())
     val fact = spark.read.parquet(s"$dir/dwh/purchasing-fact")
     assert(fact.count() === 2)
     assert(fact.filter("pr_no = 'PR-1'").collect().head
@@ -88,10 +101,9 @@ class RunnerSpec extends SparkSpec {
 
     // second invocation: watermark advanced past every fixture row, so
     // the incremental batch is empty and the fact must not change
-    invoke()
+    assertReportedWatermark(invoke())
     assert(spark.read.parquet(s"$dir/dwh/purchasing-fact").count() === 2)
 
-    val control = new WatermarkManager(spark, s"$dir/dwh/control")
     assert(control.log.filter("status = 'Successful'").count() === 2)
     assert(control.lastWatermark("purchasing-fact").after(control.epoch))
   }

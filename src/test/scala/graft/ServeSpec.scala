@@ -43,6 +43,19 @@ class ServeSpec extends SparkSpec {
     val h = Serve.start(spark,
       graft.sources.JsonLinesConnector(s"$dir/mongo"),
       s"$dir/dwh", s"$dir/dwh/control", port = 0)
+    val control = new WatermarkManager(spark, s"$dir/dwh/control")
+    // a successful reply's watermark is the control log's: the
+    // pipeline's watermark and the start of its newest Successful row
+    def assertReportedWatermark(body: String): String = {
+      val wm = """"watermark":"([^"]+)"""".r.findFirstMatchIn(body)
+        .map(_.group(1)).getOrElse(fail(body))
+      assert(wm === control.lastWatermark("migration-log-sync").toString)
+      val newest = control.log
+        .filter("description = 'migration-log-sync' AND status = 'Successful'")
+        .orderBy(org.apache.spark.sql.functions.col("finish").desc).first()
+      assert(wm === newest.getTimestamp(1).toString)
+      wm
+    }
     try {
       // discovery endpoint lists engine names AND reference aliases
       val (ls, lb) = get(h.port, "/api")
@@ -54,12 +67,14 @@ class ServeSpec extends SparkSpec {
       assert(s1 === 200, b1)
       assert(b1.contains("\"status\":\"Successful\"") &&
         b1.contains("\"rows\":1"), b1)
+      assertReportedWatermark(b1)
       assert(spark.read.parquet(s"$dir/dwh/migration-log-sync").count() === 1)
 
       // the reference's HTTP trigger accepts GET too (function.json);
       // the empty incremental batch leaves the merged fact at 1 row
       val (s2, b2) = get(h.port, "/api/migration-log")
       assert(s2 === 200 && b2.contains("\"status\":\"Successful\""), b2)
+      val wm2 = assertReportedWatermark(b2)
       assert(spark.read.parquet(s"$dir/dwh/migration-log-sync").count() === 1)
 
       // unknown name → 404, not a server crash
@@ -70,7 +85,6 @@ class ServeSpec extends SparkSpec {
       // watermark untouched (same contract as the CLI runner)
       val (s4, b4) = post(h.port, "/api/pembelian")
       assert(s4 === 500 && b4.contains("\"status\":\"Failed\""), b4)
-      val control = new WatermarkManager(spark, s"$dir/dwh/control")
       assert(control.log.filter("status like 'Failed%'").count() === 1)
       assert(control.lastWatermark("purchasing-fact") === control.epoch)
 
@@ -91,6 +105,13 @@ class ServeSpec extends SparkSpec {
       assert(b5.contains("\"pipeline\":\"purchasing-fact\"") &&
         b5.contains("\"status\":\"Failed") &&
         b5.contains(s""""watermark":"${control.epoch}""""), b5)
+
+      // a failed run leaves the reported watermark where it was
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$dir/mongo/externalLog.jsonl"))
+      val (s6, b6) = post(h.port, "/api/migration-log")
+      assert(s6 === 500 && b6.contains("\"status\":\"Failed\""), b6)
+      assert(control.lastWatermark("migration-log-sync").toString === wm2)
     } finally h.stop()
   }
 
