@@ -86,10 +86,11 @@ object Pipelines {
  * other requested pipelines still run (the reference's functions are
  * independently scheduled), and the exit code reports any failure.
  *
- * `--sources` accepts a parquet directory (default), `jsonl:<dir>` (the
- * document-store connector), `bson:<host>:<port>[:<token>]` (the OP_MSG
- * binary document store) or `jdbc:<url>` — the ConnectorRegistry
- * abstraction, selected per run.
+ * `--sources` binds the run's one source by URI ([[connectorFor]]): a
+ * parquet directory (default), `jsonl:<dir>` (the document-store
+ * connector), `csv:<dir>`, `orc:<dir>`, `binary:<dir>` (raw media),
+ * `jdbc:<url>` or `bson:<host>:<port>[:<token>]` (the OP_MSG binary
+ * document store).
  */
 object Main {
 
@@ -103,10 +104,13 @@ object Main {
     case u if u.startsWith("bson:") =>
       // bson:<host>:<port>[:<token>] — the OP_MSG binary document store
       val parts = u.stripPrefix("bson:").split(":", 3)
-      require(parts.length >= 2 && parts(1).forall(_.isDigit),
-        s"bson source must be bson:<host>:<port>[:<token>], got '$u'")
+      val port = parts.lift(1).flatMap(_.toIntOption)
+        .filter(p => p >= 1 && p <= 65535)
+      require(parts(0).nonEmpty && port.isDefined,
+        s"bson source must be bson:<host>:<port>[:<token>] with a port " +
+          s"in 1-65535, got '$u'")
       graft.sources.DocumentStoreConnector(
-        graft.sources.BsonSocketDocumentStore(parts(0), parts(1).toInt,
+        graft.sources.BsonSocketDocumentStore(parts(0), port.get,
           authToken = if (parts.length > 2) parts(2) else ""))
     case dir => ParquetConnector(dir)
   }
@@ -126,10 +130,10 @@ object Main {
         throw new IllegalArgumentException(s"invalid value '$v' for $name")
     }
 
-  /** `SPARK_GRAFT_CPUS`, or 4 when unset. */
-  private[graft] def envCpus: Int =
+  /** `SPARK_GRAFT_CPUS`, or `default` when unset. */
+  private[graft] def envCpus(default: Int): Int =
     sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(4)(parseFlag("SPARK_GRAFT_CPUS", _)(_.toInt))
+      .fold(default)(parseFlag("SPARK_GRAFT_CPUS", _)(_.toInt))
 
   def main(args: Array[String]): Unit =
     if (run(args) > 0) sys.exit(1)
@@ -143,9 +147,10 @@ object Main {
     var warehouse = "warehouse"
     var controlPath: Option[String] = None
     var startAt: Option[Timestamp] = None
-    var cpus = envCpus
+    var cpus = envCpus(4)
     val usage =
-      "usage: graft.runner.Main <pipeline ...|--all> [--sources <dir|jsonl:dir|jdbc:url>] " +
+      "usage: graft.runner.Main <pipeline ...|--all> [--sources <dir|jsonl:dir|" +
+        "csv:dir|orc:dir|binary:dir|jdbc:url|bson:<host>:<port>[:<token>]>] " +
         "[--warehouse <dir>] [--control <path>] [--start-at <ts>] [--cpus N]"
     var i = 0
     while (i < args.length) {

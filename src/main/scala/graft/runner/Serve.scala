@@ -35,10 +35,12 @@ import graft.sources.Connector
  *    production cadence belongs to cron/k8s, the loop is for parity
  *    and tests).
  *
- * Runs execute on a single worker thread: the reference's functions
- * are independently scheduled but its DWH merge serializes on the
- * stored-proc transaction anyway; one-at-a-time keeps watermark
- * semantics identical to the CLI runner. Failures return HTTP 500
+ * Runs go one at a time by default: the reference's functions are
+ * independently scheduled but its DWH merge serializes on the
+ * stored-proc transaction anyway, and one-at-a-time keeps watermark
+ * semantics identical to the CLI runner. `maxConcurrentRuns = N` admits
+ * up to N DIFFERENT pipelines at once; a per-pipeline lock keeps any one
+ * pipeline from overlapping itself. Failures return HTTP 500
  * with the error body and leave the watermark untouched — the failed
  * run is still logged in the control table, exactly like the CLI.
  *
@@ -453,7 +455,7 @@ object Serve {
     var sources = "."
     var warehouse = "warehouse"
     var controlPath: Option[String] = None
-    var cpus = Main.envCpus
+    var cpus = Main.envCpus(4)
     var every: Option[(Long, Seq[String])] = None
     var crons: Seq[(String, Seq[String])] = Nil
     // the analog of Azure's function keys: any --key (repeatable) or

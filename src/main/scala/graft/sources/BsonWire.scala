@@ -23,8 +23,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
  * its 24-hex string, datetime → ISO-8601 UTC, null → null — exactly
  * the flattening the reference applies before its SQL insert.
  *
- * This is the layer where the failure modes line framing can never
- * exercise live: torn reads mid-document ([[readFully]] counts its
+ * This is the layer where the binary framing's own failure modes are
+ * exercised live: torn reads mid-document ([[readFully]] counts its
  * bytes), a partial length prefix at frame start, and
  * endianness/corruption of the length word itself (caught by the
  * plausibility bounds in [[readMsg]] before any allocation).
@@ -318,17 +318,18 @@ object BsonWire {
 
 /**
  * [[DocumentStore]] over the [[BsonWire]] binary framing — the
- * upgrade path from [[SocketDocumentStore]]'s line-framed text
- * protocol. Same command surface as a MongoDB driver's
- * `find`/`getMore`/`insert`, same cursor batching, same failure
- * contract: any wire fault surfaces as `IOException`, which a
+ * engine's wire client for the reference's one MongoDB source, bound by
+ * the runner's `bson:<host>:<port>[:<token>]` source URI. Same command
+ * surface as a MongoDB driver's `find`/`getMore`/`insert`, with an
+ * authenticated handshake, connect/read timeouts, cursor batching and
+ * one failure contract: any wire fault surfaces as `IOException`, which a
  * pipeline run records as a failure WITHOUT advancing its watermark.
  * ConnectorSpec's fault-injecting OP_MSG server exercises each binary
  * failure shape — torn frame mid-document, partial length prefix,
  * corrupted length word, refused handshake, hard drop mid-cursor —
  * under MigrationLogSync and asserts the watermark stays at epoch.
- * Unlike line framing, documents may carry ANY characters — newlines
- * included — because frames are delimited by length, not bytes.
+ * Documents may carry ANY characters — newlines included — because
+ * frames are delimited by length, not by a separator byte.
  *
  * Commands (one OP_MSG each; replies carry `ok: 1.0` or
  * `ok: 0.0, errmsg`):

@@ -20,8 +20,7 @@ object CoverageDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val out = args(1)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "coverage-dump")
+    val spark = Sessions.local(graft.runner.Main.envCpus(32), "coverage-dump")
     val e = graft.core.Tables.load(spark, dir, "embeddings")
     // the operator derives from the DISTINCT-vector rep count — mirror
     // it exactly (one extra aggregate here, for the printed record)

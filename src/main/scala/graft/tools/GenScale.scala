@@ -110,7 +110,7 @@ object GenScale {
     require(Replicas >= 1 && Replicas <= 312,
       s"replicas must be in [1, 312], got $Replicas")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .master(s"local[${graft.runner.Main.envCpus(8)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.sources.{BinaryFileConnector, ConnectorRegistry, CsvConnector, JdbcConnector, JsonLinesConnector, OrcConnector, ParquetConnector}
+import graft.sources.{BinaryFileConnector, BsonSocketDocumentStore, CsvConnector, DocumentStoreConnector, JdbcConnector, JsonLinesConnector, JsonLinesStore, OrcConnector, ParquetConnector}
 
-/** Exercises the real JDBC code path against embedded Derby (the same
-  * engine Spark ships for its metastore) — write, plain read,
-  * partitioned parallel read, and predicate pushdown into the remote
-  * query. */
+/** Exercises every connector the runner's `--sources` URIs bind: the
+  * real JDBC code path against embedded Derby (the same engine Spark
+  * ships for its metastore) — write, read and predicate pushdown into
+  * the remote query — the document stores, including the OP_MSG wire
+  * client against an in-process fault-injecting server, and the file
+  * formats. */
 class ConnectorSpec extends SparkSpec {
 
   private lazy val url = {
@@ -39,14 +41,6 @@ class ConnectorSpec extends SparkSpec {
     assert(got.length === 1 && got.head.getString(1) === long)
   }
 
-  test("partitioned JDBC read slices by bounds and returns everything") {
-    val got = JdbcConnector(url, partitionColumn = Some("id"),
-      numPartitions = 4).read(spark, "items")
-    assert(got.rdd.getNumPartitions === 4)
-    assert(got.count() === 100)
-    assert(got.agg(sum(col("id"))).collect().head.getLong(0) === 5050L)
-  }
-
   test("filters push down into the remote JDBC query") {
     val df = JdbcConnector(url).read(spark, "items")
       .filter(col("id") > 90)
@@ -73,8 +67,7 @@ class ConnectorSpec extends SparkSpec {
     ).toDF("description", "start", "finish", "executionTime", "status")
     val conn = JsonLinesConnector(dir)
     conn.write(docs, "externalLog", SaveMode.Overwrite)
-    val reg = ConnectorRegistry(Map("docstore" -> conn))
-    val got = reg.read(spark, "docstore", "externalLog")
+    val got = conn.read(spark, "externalLog")
     // timestamps survive the document round-trip (schema-on-read)
     assert(got.schema("finish").dataType ===
       org.apache.spark.sql.types.TimestampType)
@@ -127,75 +120,6 @@ class ConnectorSpec extends SparkSpec {
     assert(conn.read(spark, "copy").count() === 1)
   }
 
-  /** In-process server speaking the SocketDocumentStore line protocol,
-    * with fault injection: after serving `failAfterDocs` documents it
-    * hard-closes the TCP connection mid-cursor — the wire failure no
-    * file- or memory-backed store can produce. */
-  private final class DocServer(token: String,
-      data: scala.collection.mutable.Map[String, Vector[String]],
-      failAfterDocs: Int = Int.MaxValue) {
-    private val server = new java.net.ServerSocket(0) // ephemeral port
-    def port: Int = server.getLocalPort
-    @volatile private var servedDocs = 0
-    private val acceptor = new Thread(() => {
-      try while (!server.isClosed) {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock))
-        t.setDaemon(true); t.start()
-      } catch { case _: Throwable => () }
-    })
-    acceptor.setDaemon(true); acceptor.start()
-    def close(): Unit = server.close()
-
-    private def handle(sock: java.net.Socket): Unit = {
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-      val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-      try {
-        if (in.readLine() != s"HELLO $token") { out.println("DENIED"); return }
-        out.println("OK")
-        var cursor = Vector.empty[String]
-        var pos = 0
-        var batch = 64
-        def sendBatch(): Unit = {
-          val end = math.min(pos + batch, cursor.length)
-          while (pos < end) {
-            if (servedDocs >= failAfterDocs) { sock.close(); return }
-            servedDocs += 1
-            out.println("DOC " + cursor(pos)); pos += 1
-          }
-          out.println(if (pos < cursor.length) "MORE c0" else "END")
-        }
-        var line = in.readLine()
-        while (line != null) {
-          val p = line.split(" ")
-          p(0) match {
-            case "QUERY" =>
-              cursor = data.getOrElse(p(1), Vector.empty)
-              pos = 0; batch = p(2).toInt
-              sendBatch()
-            case "GETMORE" => sendBatch()
-            case "INSERT" =>
-              val buf = Vector.newBuilder[String]
-              var l = in.readLine()
-              while (l != null && l != "COMMIT") {
-                buf += l.stripPrefix("DOC "); l = in.readLine()
-              }
-              val docs = buf.result()
-              data(p(1)) =
-                if (p(2) == "Append") data.getOrElse(p(1), Vector.empty) ++ docs
-                else docs
-              out.println(s"OK ${docs.size}")
-            case _ => out.println("ERR")
-          }
-          line = in.readLine()
-        }
-      } catch { case _: Throwable => () }
-      finally { try sock.close() catch { case _: Throwable => () } }
-    }
-  }
-
   private val logDocs = Vector(
     """{"description":"fact-kanban","start":"2024-03-01T00:00:00.000Z","finish":"2024-03-01T00:05:00.000Z","executionTime":"5.00 minutes","status":"Successful"}""",
     """{"description":"fact-kanban","start":"2024-03-02T00:00:00.000Z","finish":"2024-03-02T00:04:00.000Z","executionTime":"4.00 minutes","status":"Failed: x"}""",
@@ -203,71 +127,9 @@ class ConnectorSpec extends SparkSpec {
     """{"description":"fact-packing","start":"2024-04-01T00:00:00.000Z","finish":"2024-04-01T00:09:00.000Z","executionTime":"9.00 minutes","status":"Successful"}""",
     """{"description":"fact-packing","start":"2024-04-02T00:00:00.000Z","finish":"2024-04-02T00:08:00.000Z","executionTime":"8.00 minutes","status":"Failed: y"}""")
 
-  test("socket doc store: authenticated, cursor-batched wire read runs " +
-      "MigrationLogSync; insert round-trips; bad token refused") {
-    val data = scala.collection.mutable.Map("externalLog" -> logDocs)
-    val srv = new DocServer("s3cret", data)
-    try {
-      // batchSize=2 over 5 docs → QUERY + two GETMOREs: the cursor loop
-      // is genuinely exercised, not just a single-frame read
-      val conn = graft.sources.DocumentStoreConnector(
-        graft.sources.SocketDocumentStore("127.0.0.1", srv.port,
-          authToken = "s3cret", batchSize = 2))
-      val got = conn.read(spark, "externalLog")
-      assert(got.count() === 5)
-      assert(got.schema("finish").dataType ===
-        org.apache.spark.sql.types.TimestampType)
-      // same pipeline, zero changes: latest SUCCESSFUL run per
-      // description ('success' counts, failures never win)
-      val out = graft.pipelines.MigrationLogSync.transform(
-          Map("externalLog" -> got))
-        .collect().map(r => r.getString(0) -> r.getAs[String]("status"))
-        .toMap
-      assert(out === Map("fact-kanban" -> "success",
-        "fact-packing" -> "Successful"))
-      // write half round-trips over the wire through the same seam
-      conn.write(got.limit(2), "copy", SaveMode.Overwrite)
-      assert(conn.read(spark, "copy").count() === 2)
-      // connection config is real: a wrong token is refused at handshake
-      val denied = graft.sources.SocketDocumentStore("127.0.0.1", srv.port,
-        authToken = "wrong")
-      val ex = intercept[java.io.IOException](
-        denied.documents(spark, "externalLog"))
-      assert(ex.getMessage.contains("handshake refused"))
-    } finally srv.close()
-  }
-
-  test("socket doc store: a connection dropped mid-cursor fails the run " +
-      "and leaves the watermark untouched") {
-    import graft.control.WatermarkManager
-    import graft.pipelines.PipelineRunner
-    val data = scala.collection.mutable.Map("externalLog" -> logDocs)
-    // the server hard-closes the socket after 3 of 5 docs — a partial
-    // batch must NEVER be mistaken for a complete collection
-    val srv = new DocServer("s3cret", data, failAfterDocs = 3)
-    try {
-      val conn = graft.sources.DocumentStoreConnector(
-        graft.sources.SocketDocumentStore("127.0.0.1", srv.port,
-          authToken = "s3cret", batchSize = 2, readTimeoutMs = 3000))
-      val dir = java.nio.file.Files.createTempDirectory("graft-sockfail")
-        .toString
-      val control = new WatermarkManager(spark, s"$dir/control")
-      val runner = new PipelineRunner(spark, control, s"$dir/warehouse")
-      intercept[Exception] {
-        runner.run(graft.pipelines.MigrationLogSync,
-          t => conn.read(spark, t))
-      }
-      // the transactional envelope held: failure row logged, watermark
-      // still at epoch, no partial fact rows promoted
-      assert(control.lastWatermark(
-        graft.pipelines.MigrationLogSync.name) === control.epoch)
-      assert(control.log.filter("status like 'Failed%'").count() === 1)
-    } finally srv.close()
-  }
-
   /** In-process OP_MSG binary server for
     * [[graft.sources.BsonSocketDocumentStore]], with byte-level fault
-    * injection line framing can never produce. Once `failAfterDocs`
+    * injection. Once `failAfterDocs`
     * documents have been served, the NEXT cursor reply is mangled per
     * `fault`:
     *  - "drop":   hard socket close instead of a reply (mid-cursor drop)
@@ -406,10 +268,6 @@ class ConnectorSpec extends SparkSpec {
       // write half round-trips over the binary wire through the same seam
       conn.write(got.limit(2), "copy", SaveMode.Overwrite)
       assert(conn.read(spark, "copy").count() === 2)
-      // the runner's bson:<host>:<port>:<token> URI binds this store
-      val viaUri = graft.runner.Main.connectorFor(
-        s"bson:127.0.0.1:${srv.port}:s3cret")
-      assert(viaUri.read(spark, "externalLog").count() === 5)
     } finally srv.close()
   }
 
@@ -569,29 +427,48 @@ class ConnectorSpec extends SparkSpec {
       s"ORC scan should receive the pushed filter, got:\n$plan")
   }
 
-  test("parquet connector mergeSchema reconciles evolved table schemas") {
+  test("connectorFor binds every --sources scheme to its connector; " +
+      "a malformed bson URI fails naming the URI") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString
-    val conn = ParquetConnector(dir)
-    conn.write(Seq((1L, "a")).toDF("k", "v"), "t", SaveMode.Overwrite)
-    // schema evolves: a new column appears in later files
-    conn.write(Seq((2L, "b", 9.5)).toDF("k", "v", "score"), "t",
-      SaveMode.Append)
-    val merged = ParquetConnector(dir, mergeSchema = true).read(spark, "t")
-      .select("k", "v", "score")
-    val rows = merged.orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-    assert(rows.toSeq === Seq((1L, "a", None), (2L, "b", Some(9.5))))
-  }
-
-  test("registry binds logical source names; parquet and jdbc coexist") {
-    val reg = ConnectorRegistry(Map(
-      "purchasing" -> JdbcConnector(url),
-      "lake" -> ParquetConnector("/root/testdata/sf0.001")))
-    assert(reg.read(spark, "purchasing", "items").count() === 100)
-    assert(reg.read(spark, "lake", "region").count() === 5)
-    intercept[IllegalArgumentException](reg.read(spark, "nope", "x"))
+    import graft.runner.Main.connectorFor
+    seed()
+    val root = java.nio.file.Files.createTempDirectory("graft-uris").toString
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+    ParquetConnector(s"$root/pq").write(df, "t", SaveMode.Overwrite)
+    JsonLinesConnector(s"$root/jl").write(df, "t", SaveMode.Overwrite)
+    CsvConnector(s"$root/csv").write(df, "t", SaveMode.Overwrite)
+    OrcConnector(s"$root/orc").write(df, "t", SaveMode.Overwrite)
+    val media = java.nio.file.Paths.get(root, "bin", "t")
+    java.nio.file.Files.createDirectories(media)
+    Seq("a.bin", "b.bin").foreach(f =>
+      java.nio.file.Files.write(media.resolve(f), Array[Byte](1, 2)))
+    val srv = new BsonDocServer("s3cret",
+      scala.collection.mutable.Map("t" -> logDocs.take(2)))
+    try {
+      // URI → the connector it must bind, a table, that table's rows
+      val cases = Seq(
+        (s"$root/pq", ParquetConnector(s"$root/pq"), "t", 2L),
+        (s"jsonl:$root/jl",
+          DocumentStoreConnector(JsonLinesStore(s"$root/jl")), "t", 2L),
+        (s"csv:$root/csv", CsvConnector(s"$root/csv"), "t", 2L),
+        (s"orc:$root/orc", OrcConnector(s"$root/orc"), "t", 2L),
+        (s"binary:$root/bin", BinaryFileConnector(s"$root/bin"), "t", 2L),
+        (url, JdbcConnector(url), "items", 100L),
+        (s"bson:127.0.0.1:${srv.port}:s3cret", DocumentStoreConnector(
+          BsonSocketDocumentStore("127.0.0.1", srv.port, authToken = "s3cret")),
+          "t", 2L))
+      for ((uri, want, table, rows) <- cases) {
+        val got = connectorFor(uri)
+        assert(got === want, uri)
+        assert(got.read(spark, table).count() === rows, uri)
+      }
+    } finally srv.close()
+    // missing, empty, non-numeric, Int-overflowing and out-of-range ports
+    for (bad <- Seq("bson:127.0.0.1", "bson:127.0.0.1:", "bson:127.0.0.1:80x",
+        "bson:127.0.0.1:99999999999", "bson:127.0.0.1:70000")) {
+      val e = intercept[IllegalArgumentException](connectorFor(bad))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 
   test("binaryFile connector: media directory → rows, glob + size guard, " +
