@@ -47,13 +47,4 @@ object AggMaintain {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("n_rows")).as("n_rows"), aggs: _*)
   }
-
-  /** Read the state for serving: sketches become approximate distinct
-    * counts, everything else passes through. */
-  def estimate(state: DataFrame, distinctCols: Seq[String]): DataFrame =
-    distinctCols.foldLeft(state) { (acc, c) =>
-      acc.withColumn(s"approx_distinct_$c",
-          hll_sketch_estimate(col(s"hll_$c")))
-        .drop(s"hll_$c")
-    }
 }

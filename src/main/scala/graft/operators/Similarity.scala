@@ -495,7 +495,8 @@ object Similarity {
    * 100 TB. Round-half-up via `floor(+0.5)` because engines disagree on
    * `round`'s tie rule but agree bit-exactly on `floor`. Zero/empty
    * vectors quantize against scale 1 (all-zero codes). Reconstruction
-   * error is bounded by `scale/254` per component ([[dequantizeInt8]]).
+   * error is bounded by `scale/254` per component (`code · scale / 127`
+   * reconstructs; SimilaritySpec).
    */
   def quantizeInt8(vec: Column): Column = {
     // ONE compiled two-pass kernel ([[graft.plans.QuantizeInt8]]) — the
@@ -519,10 +520,6 @@ object Similarity {
       transform(v, x => floor(x / scale * 127.0 + 0.5).cast("int"))
         .as("codes"))
   }
-
-  def dequantizeInt8(q: Column): Column =
-    transform(q.getField("codes"),
-      c => c.cast("double") * q.getField("scale") / 127.0)
 
   /** Sentinel `nPlanes` value: derive the LSH geometry from the corpus
     * size at call time ([[autoPlanes]]). r13 measured the cost of a

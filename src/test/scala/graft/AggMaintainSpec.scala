@@ -44,21 +44,22 @@ class AggMaintainSpec extends SparkSpec {
   test("HLL sketch state: estimates track exact distincts and merge losslessly") {
     val a = fact.filter(col("amount") <= 1200)
     val b = fact.filter(col("amount") > 1200)
-    val merged = AggMaintain.estimate(
+    // a sketch state read as (group, approximate distinct users)
+    def estimate(state: org.apache.spark.sql.DataFrame) =
+      state.select(col("grp"), hll_sketch_estimate(col("hll_user")).as("d"))
+    val merged = estimate(
       AggMaintain.merge(
         AggMaintain.summarize(a, Seq("grp"), Nil, Seq("user")),
         AggMaintain.summarize(b, Seq("grp"), Nil, Seq("user")),
-        Seq("grp"), Nil, Seq("user")),
-      Seq("user"))
-    val oneShot = AggMaintain.estimate(
-      AggMaintain.summarize(fact, Seq("grp"), Nil, Seq("user")),
-      Seq("user"))
+        Seq("grp"), Nil, Seq("user")))
+    val oneShot = estimate(
+      AggMaintain.summarize(fact, Seq("grp"), Nil, Seq("user")))
     val exact = fact.groupBy("grp").agg(countDistinct(col("user")).as("d"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val mergedMap = merged.collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("approx_distinct_user")).toMap
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val oneShotMap = oneShot.collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("approx_distinct_user")).toMap
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     // register-wise union of disjoint halves ≡ the one-shot sketch
     assert(mergedMap === oneShotMap)
     exact.foreach { case (g, d) =>

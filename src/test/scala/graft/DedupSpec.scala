@@ -307,7 +307,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("WindowHashes kernel ≡ the declarative ngrams+xxhash64 chain") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
       "documents")
     for (n <- Seq(1, 4, 8)) {

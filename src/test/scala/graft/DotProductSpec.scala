@@ -34,7 +34,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot resolves via SQL after extension registration") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val r = spark.sql("SELECT graft_dot(array(1d, 2d), array(3d, 4d)) AS d")
       .collect().head.getDouble(0)
     assert(r === 11.0)

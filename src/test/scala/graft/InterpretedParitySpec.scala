@@ -32,7 +32,6 @@ class InterpretedParitySpec extends SparkSpec {
 
   test("graft_dot and graft_intersect_count: codegen ≡ interpreted, bit-exact") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(300)((
       Seq.fill(rnd.nextInt(8))(rnd.nextDouble() * 2 - 1),
@@ -49,7 +48,6 @@ class InterpretedParitySpec extends SparkSpec {
   test("graft_lsh_bucket: codegen ≡ interpreted ≡ the dot-per-plane " +
       "formulation, bit-exact (incl. empty/short/negative vectors)") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val planes = Similarity.hyperplanes(6, 8, seed = 7L)
     val rnd = new scala.util.Random(13)
     val rows = Seq.fill(300)(
@@ -75,7 +73,6 @@ class InterpretedParitySpec extends SparkSpec {
   test("graft_lsh_bucket rejects a planes matrix that is not an exact " +
       "multiple of dim (silent plane truncation otherwise)") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     def bucket(nElems: Int, dim: Int) = Seq(Seq(1.0, 2.0)).toDF("v")
       .select(call_function("graft_lsh_bucket", col("v"),
         typedLit(Seq.fill(nElems)(0.5)), lit(dim)))
@@ -113,7 +110,6 @@ class InterpretedParitySpec extends SparkSpec {
       "arrays and null elements") {
     import spark.implicits._
     import graft.operators.Dedup
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(37)
     val rows: Seq[Seq[java.lang.Long]] =
       Seq.fill(200)(Seq.fill(rnd.nextInt(12))(
@@ -161,7 +157,6 @@ class InterpretedParitySpec extends SparkSpec {
       "and on whitespace edge cases") {
     import spark.implicits._
     import graft.operators.TextAnalysis
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val edges = Seq(null, "", " ", "   ", "a", " a", "a ", "  a  b  ",
       "a\tb", "a\nb", "a b", "héllo wörld ", "多 字 节",
       "x  y zzz").toDF("text")
@@ -181,7 +176,6 @@ class InterpretedParitySpec extends SparkSpec {
       "random/unicode/empty strings and null") {
     import spark.implicits._
     import graft.operators.Dedup
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(101)
     val rows: Seq[String] =
       Seq.fill(300)(rnd.alphanumeric.take(rnd.nextInt(40)).mkString) ++
@@ -200,7 +194,6 @@ class InterpretedParitySpec extends SparkSpec {
       "corpus and on null/short/n=1 edges") {
     import spark.implicits._
     import graft.operators.TextAnalysis
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val edges: Seq[Seq[String]] = Seq(
       null, Seq.empty[String], Seq("a"), Seq("a", "b"),
       Seq("a", "b", "c", "d"), Seq("a", null, "c", "d", "e"),
@@ -220,7 +213,6 @@ class InterpretedParitySpec extends SparkSpec {
   test("graft_eq_count kernel ≡ size(filter(zip_with)) reference, incl. " +
       "ragged lengths and null elements") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(73)
     val rows: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])] =
       Seq.fill(300)((
@@ -244,7 +236,6 @@ class InterpretedParitySpec extends SparkSpec {
       "corpus and on null/empty edges") {
     import spark.implicits._
     import graft.operators.TextAnalysis
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val markers = TextAnalysis.langMarkers("en")
     val edges: Seq[Seq[String]] = Seq(
       null, Seq.empty[String], Seq("the", "the", "and"), Seq("x"),
@@ -264,7 +255,6 @@ class InterpretedParitySpec extends SparkSpec {
   test("every scalar kernel COMPILES under CODEGEN_ONLY — a janino " +
       "failure would otherwise silently fall back to interpreted eval") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val df = Seq((
       Seq(0.5, -1.0, 0.25), Seq(0.25, 0.5, 1.0),
       Seq(1L, 5L, 9L), "a b c d e f"))
@@ -304,7 +294,6 @@ class InterpretedParitySpec extends SparkSpec {
 
   test("graft_window_hashes: codegen ≡ interpreted on the corpus") {
     import graft.operators.TextAnalysis
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     def run() = docs.select(col("doc_id"),
         call_function("graft_window_hashes",

@@ -6,7 +6,6 @@ class IntersectCountSpec extends SparkSpec {
 
   private def ic(a: Seq[Long], b: Seq[Long]): Int = {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Seq((a, b)).toDF("a", "b")
       .select(call_function("graft_intersect_count", col("a"), col("b")))
       .collect().head.getInt(0)
@@ -21,7 +20,6 @@ class IntersectCountSpec extends SparkSpec {
 
   test("graft_intersect_count agrees with array_intersect on random sorted sets") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((
       rnd.shuffle((0L to 60L).toList).take(20).sorted,

@@ -16,7 +16,6 @@ class KmvSpec extends SparkSpec {
 
   private def kmv(df: org.apache.spark.sql.DataFrame, k: Int)
       : Map[String, Long] = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     df.groupBy(col("g"))
       .agg(call_function("graft_kmv",
         Dedup.md5Hash60(col("v").cast("string")), lit(k)).as("est"))

@@ -120,7 +120,6 @@ class PqParitySpec extends SparkSpec {
          (2L, array(array(1.0D, 2.0D), array(3.0D, 4.0D)), array(CAST(NULL AS INT), 1)),
          (3L, array(array(CAST(NULL AS DOUBLE), 2.0D), array(3.0D, 4.0D)), array(0, 1))
          AS t(id, tables, codes)""")
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val out = rows.select(col("id"),
         call_function("graft_adc_dist", col("tables"), col("codes")).as("d"))
       .orderBy("id").collect()

@@ -212,7 +212,6 @@ class PropertySpec extends SparkSpec {
 
   test("WindowHashes ≡ declarative chain on random arrays with holes") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val tokGen = Gen.oneOf(Gen.const(null: String), Gen.const(""),
       Gen.alphaStr.map(_.take(5)), Gen.const("a b")) // even sep-bearing toks
     val arrays = sample(Gen.listOfN(120,

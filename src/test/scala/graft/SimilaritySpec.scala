@@ -370,7 +370,7 @@ class SimilaritySpec extends SparkSpec {
         col("v"))
       .select(col("id"), col("q.scale").as("scale"),
         array_max(zip_with(col("v"),
-          Similarity.dequantizeInt8(col("q")),
+          transform(col("q.codes"), c => c.cast("double") * col("q.scale") / 127.0),
           (x, y) => abs(x - y))).as("err"))
       .collect().map(r => r.getLong(0) ->
         (r.getDouble(1), r.getDouble(2))).toMap

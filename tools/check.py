@@ -56,6 +56,21 @@ def norm_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
+def default_memory_limit():
+    """Half the host's memory (MemTotal in /proc/meminfo), so an oracle
+    child that grows to its limit leaves room for Spark's dump reader
+    and the rest of the host; None (DuckDB's own default) when the
+    total cannot be read. GRAFT_ORACLE_MEM overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}MB"
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
 def _oracle_child(pipe, sf_dir, sql):
     """Run one oracle in a fresh process; ship (cols, rows) or the error
     text back through the pipe. norm_cell runs HERE so only plain
@@ -64,8 +79,9 @@ def _oracle_child(pipe, sf_dir, sql):
     try:
         import duckdb
         con = duckdb.connect()
-        mem = os.environ.get("GRAFT_ORACLE_MEM", "60GB")
-        con.execute(f"SET memory_limit='{mem}'")
+        mem = os.environ.get("GRAFT_ORACLE_MEM") or default_memory_limit()
+        if mem:
+            con.execute(f"SET memory_limit='{mem}'")
         # Bounded threads also bound peak operator state: a 100 GB-class
         # composite replay (q138 at sf1) spills past the host's free
         # disk at 16 threads but fits with fewer, so heavy sweeps can
